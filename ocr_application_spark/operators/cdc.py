@@ -14,9 +14,13 @@ edits) < winnowing (arbitrary-offset substring overlap) < shingle
 Jaccard (set similarity).
 
 Scale shape: chunking itself is ARRAY-SIDE inside one projection
-(same zero-shuffle idiom as winnowing — only real chunks become rows);
-the cross-doc sharing needs one explode + a chunk-hash groupBy + a
-join back + a doc groupBy. The chunk-hash key space is ~text_bytes/40
+(same zero-shuffle idiom as winnowing — only real chunks become rows)
+and linear in doc length: each doc is split into code points once and
+every gram and chunk is read from that array (``substring`` on a Spark
+string walks code points from the start, so one call per position
+would be quadratic per doc — PERF.md §7c). The cross-doc sharing
+needs one explode + a chunk-hash groupBy + a join back + a doc
+groupBy. The chunk-hash key space is ~text_bytes/40
 — the shuffles are O(corpus bytes / mean chunk), never O(pairs), and
 a hot boilerplate chunk costs one counter, not a posting blowup.
 
@@ -30,6 +34,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ocr_application_spark.operators.dedup import _gram_hash_sql, _with_code_points
 
 QUERIES: dict = {}
 ORACLES: dict = {}
@@ -65,21 +71,22 @@ def cdc_chunks(
     )
     # boundary char indices: END position of each masked gram
     bounds = (
-        f"case when length(t) >= {k} then "
-        f"transform(filter(sequence(1, length(t) - {k} + 1), p -> "
-        f"cast(conv(substring(md5(substring(t, p, {k})), 1, 10), 16, 10) as bigint)"
-        f" % {m} = 0), e -> e + {k} - 1) "
+        f"case when size(cs) >= {k} then "
+        f"transform(filter(sequence(1, size(cs) - {k} + 1), p -> "
+        f"{_gram_hash_sql(k)} % {m} = 0), e -> e + {k} - 1) "
         f"else array() end"
     )
-    chunks = (
-        "filter(zip_with("
+    # bs is bound as a lambda parameter too: it is read twice below
+    chunks = _with_code_points(
+        "t",
+        f"element_at(transform(array({bounds}), bs -> filter(zip_with("
         "concat(array(1), transform(bs, e -> e + 1)), "
-        "concat(bs, array(length(t))), "
-        "(s, e) -> substring(t, s, e - s + 1)), c -> length(c) > 0)"
+        "concat(bs, array(size(cs))), "
+        "(s, e) -> array_join(slice(cs, s, e - s + 1), '')), "
+        "c -> length(c) > 0)), 1)",
     )
     return (
-        d.select("doc_id", "t", F.expr(bounds).alias("bs"))
-        .select("doc_id", F.posexplode(F.expr(chunks)).alias("i", "c"))
+        d.select("doc_id", F.posexplode(F.expr(chunks)).alias("i", "c"))
         .select(
             "doc_id",
             (F.col("i") + 1).alias("chunk_no"),
@@ -312,9 +319,12 @@ def _bucketed_store_covering(
 ) -> DataFrame:
     """The mirror's (chunk_hash) DataFrame covering EXACTLY the store's
     ``current_version``: fresh -> returned as-is (bucketed scan, no
-    exchange in downstream chunk_hash joins); stale -> topped up by
-    appending the O(new-rows) snapshot diff; missing / mismatched /
-    diff-crossing-a-rewrite -> rebuilt from the full snapshot once.
+    exchange in downstream chunk_hash joins); stale with only append
+    commits since ``covers_version`` -> topped up by appending the
+    O(new-rows) snapshot diff; missing / mismatched / any non-append
+    commit in range -> rebuilt from the full snapshot once. The diff
+    lists additions only, so topping up across an overwrite would keep
+    the hashes of removed rows and report them 'known'.
     The table is EXTERNAL (explicit path) so a fresh session's empty
     in-memory catalog re-adopts the existing bucketed files via DDL
     instead of rebuilding.
@@ -332,6 +342,8 @@ def _bucketed_store_covering(
     from ocr_application_spark.sources.snapshots import (
         read_snapshot,
         read_snapshot_diff,
+        snapshot_info,
+        snapshot_versions,
     )
 
     db, tbl, ddir = _mirror_names(store_path)
@@ -366,7 +378,12 @@ def _bucketed_store_covering(
         cv = st["covers_version"]
         if mirror_ok and cv == current_version:
             return spark.table(tbl).select("chunk_hash")
-        if mirror_ok and cv < current_version:
+        appends_only = all(
+            snapshot_info(store_path, v)["mode"] == "append"
+            for v in snapshot_versions(store_path)
+            if cv < v <= current_version
+        )
+        if mirror_ok and cv < current_version and appends_only:
             try:
                 from ocr_application_spark.session import bounded_cache
 
@@ -387,7 +404,7 @@ def _bucketed_store_covering(
                 )
                 return spark.table(tbl).select("chunk_hash")
             except (ValueError, FileNotFoundError):
-                pass  # diff range crossed a rewrite/expiry: rebuild below
+                pass  # diff range crossed a branch/expiry: rebuild below
     # full rebuild: drop catalog entry AND files (saveAsTable refuses
     # to adopt a non-empty location), then write fresh — but NEVER
     # delete a directory this mirror cannot prove is its own

@@ -806,7 +806,7 @@ def page_bitext_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     doclangs = docs.select(
         "doc_id",
-        F.expr(_HL_LANG_SQL.replace("as int", "as int")).alias("lang"),
+        F.expr(_HL_LANG_SQL).alias("lang"),
         F.length(F.coalesce(F.col("text"), F.lit(""))).cast("long").alias("n_chars"),
     )
     out = bitext_candidates(clusters, doclangs)

@@ -4,9 +4,11 @@ whose constants grew in round 4.
 Corpus: the standard soak recipe (sf0.1 documents replicated ``reps``x
 with deterministic perturbation — no external data, no RNG) at
 reps=1000 -> ~4.8M docs / ~6.5 GB text, one decade above the sf1 soak.
-Ops: ``dedup_cdc_chunks`` (per-position gram hashing — scan-shaped,
-claims linear), ``split_leakage_report`` (~1B-gram hash join — claims
-uniform-key linear), and the chunk-store bootstrap + ALL-DUP replay
+Ops: ``dedup_cdc_chunks`` (per-position gram hashing — scan-shaped;
+replication multiplies the doc count, not the doc length, so this
+checks linearity in corpus size only; per-doc cost against length is
+the PERF.md §7c doc-length table), ``split_leakage_report`` (~1B-gram
+hash join — claims uniform-key linear), and the chunk-store bootstrap + ALL-DUP replay
 through the r05 bucketed probe (claims O(increment) verdict work +
 scan-local store side). Shuffle partitions scale with the decade (128
 vs the sf1 soak's 32) — the knob a real cluster would turn.

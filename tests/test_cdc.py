@@ -7,12 +7,16 @@ chunk-hash multiset intact.
 """
 
 import contextlib
+import hashlib
 import io
 import re
 
 import pyspark.sql.functions as F
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from ocr_application_spark.operators import cdc as C
+from ocr_application_spark.operators.dedup import _WINNOW_POSM, winnow_fingerprints
 
 SF = "/root/testdata/sf0.001"
 
@@ -102,6 +106,72 @@ def test_plan_no_cartesian_and_bounded_exchanges(spark):
     # chunk-hash distinct-agg (two-phase), the join side, and the doc
     # agg — all keyed O(chunks), never O(pairs)
     assert len(re.findall(r"\bExchange\b", plan)) <= 6, plan
+
+
+# --- differential property test vs a pure-Python reference -----------------
+
+
+def _h40(s):
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:10], 16)
+
+
+def _ref_cdc(text):
+    """(chunk_no, chunk_chars, chunk_hash) rows of one doc, from
+    code-point slices of the lowered text."""
+    k, m = C._CDC_K, C._CDC_MASK
+    t = (text or "").lower()
+    bs = [p + k - 1 for p in range(1, len(t) - k + 2) if _h40(t[p - 1 : p - 1 + k]) % m == 0]
+    cuts = zip([1] + [e + 1 for e in bs], bs + [len(t)])
+    chunks = [c for c in (t[s - 1 : e] for s, e in cuts) if c]
+    return [(i + 1, len(c), _h40(c)) for i, c in enumerate(chunks)]
+
+
+def _ref_winnow(text, k, w):
+    """Set of (fp_pos, fp_hash) winnowing selections of one doc."""
+    t = (text or "").lower()
+    keys = [
+        _h40(t[p - 1 : p - 1 + k]) * _WINNOW_POSM + (_WINNOW_POSM - 1 - p % _WINNOW_POSM)
+        for p in range(1, len(t) - k + 2)
+    ]
+    sel = {min(keys[i : i + w]) for i in range(max(1, len(keys) - w + 1))} if keys else set()
+    return {(_WINNOW_POSM - 1 - sk % _WINNOW_POSM, sk // _WINNOW_POSM) for sk in sel}
+
+
+# ASCII, multi-byte BMP (2- and 3-byte UTF-8), combining marks, astral
+# plane (4-byte UTF-8, one code point but two UTF-16 units), and an
+# astral letter with a case mapping (Deseret U+10400 -> U+10428)
+_ALPHABET = "aAbZ09 .\né\u00c9\u00df\u0301\u0308漢字한😀🙂𝔘\U00010400"
+_texts = st.one_of(
+    st.none(),
+    st.text(alphabet=_ALPHABET, max_size=300),
+    # lengths k-1, k and k+1 around the gram width
+    st.integers(C._CDC_K - 1, C._CDC_K + 1).flatmap(
+        lambda n: st.text(alphabet=_ALPHABET, min_size=n, max_size=n)
+    ),
+)
+
+
+@given(texts=st.lists(_texts, min_size=1, max_size=12))
+@example(texts=["😀" * 7, "😀" * 8, "😀" * 9, "", None, "abc", "漢字" * 40])
+@example(texts=["e\u0301" * 3, "A\u0308b\u0301" * 40, "𝔘\U00010400x" * 50])
+@settings(max_examples=25, deadline=None)
+def test_cdc_and_winnow_match_python_reference(spark, texts):
+    """cdc_chunks and winnow_fingerprints against md5 over code-point
+    slices in Python: every boundary, chunk length, chunk hash and
+    fingerprint must agree, whatever the UTF-8 width of the text."""
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    got = {}
+    for r in C.cdc_chunks(df).collect():
+        got.setdefault(r["doc_id"], []).append((r["chunk_no"], r["chunk_chars"], r["chunk_hash"]))
+    want = {i: _ref_cdc(t) for i, t in enumerate(texts) if _ref_cdc(t)}
+    assert {i: sorted(v) for i, v in got.items()} == want
+    for k, w in ((8, 4), (3, 2)):
+        got_w = {}
+        for r in winnow_fingerprints(df, k=k, w=w).collect():
+            got_w.setdefault(r["doc_id"], []).append((r["fp_pos"], r["fp_hash"]))
+        assert all(len(v) == len(set(v)) for v in got_w.values())
+        want_w = {i: _ref_winnow(t, k, w) for i, t in enumerate(texts)}
+        assert {i: set(v) for i, v in got_w.items()} == {i: v for i, v in want_w.items() if v}, (k, w)
 
 
 # --- chunk-store incremental ingest ------------------------------------------
@@ -407,3 +477,48 @@ def test_cdc_mirror_path_normalization(spark):
 
     a, b = _mirror_names("/x/y/store"), _mirror_names("/x/y/store/")
     assert a == b
+
+
+def test_cdc_bucketed_mirror_rebuilds_across_overwrite_commit(spark, tmp_path):
+    """A mirror top-up appends the snapshot diff, which lists additions
+    only. An overwrite_partitions commit between two bucketed covering
+    calls removes store rows, so topping up would leave their hashes in
+    the mirror and report re-ingested chunks of removed rows as known.
+    The covering call must rebuild instead; verdicts match a plain twin
+    with the same store history."""
+    from ocr_application_spark.operators.cdc import (
+        _bucketed_store_covering,
+        _read_mirror_state,
+        cdc_store_ingest,
+    )
+    from ocr_application_spark.sources.snapshots import commit, read_snapshot
+
+    bdf, idf = _ingest_fixture(spark)
+    seed = C.cdc_chunks(bdf).select("chunk_hash", "chunk_chars").distinct()
+    # the chunk lengths of base doc 0, which increment doc 200 clones
+    gone = sorted(
+        r["chunk_chars"]
+        for r in C.cdc_chunks(bdf.filter("doc_id = 0")).select("chunk_chars").distinct().collect()
+    )
+    filler = spark.createDataFrame([(1, gone[0])], "chunk_hash long, chunk_chars int")
+
+    def history(store, mirrored):
+        v1 = commit(seed, store, partition_by="chunk_chars")
+        if mirrored:
+            _bucketed_store_covering(spark, store, v1, 8)
+        # drop every partition holding a chunk length of doc 0
+        return commit(
+            filler, store, mode="overwrite_partitions",
+            partition_by="chunk_chars", replace_partitions=gone,
+        )
+
+    store, twin = str(tmp_path / "s_over"), str(tmp_path / "s_over_twin")
+    history(store, True)
+    v2 = history(twin, False)
+    assert _read_mirror_state(store)["covers_version"] == v2 - 1
+    mirror = _bucketed_store_covering(spark, store, v2, 8)
+    want = {r[0] for r in read_snapshot(spark, store, version=v2).select("chunk_hash").collect()}
+    assert {r[0] for r in mirror.distinct().collect()} == want
+    rep_b, _ = cdc_store_ingest(spark, store, idf, bucketed_probe=True, probe_buckets=8)
+    rep_p, _ = cdc_store_ingest(spark, twin, idf)
+    assert sorted(tuple(r) for r in rep_b.collect()) == sorted(tuple(r) for r in rep_p.collect())

@@ -1,0 +1,155 @@
+"""Static guard: no per-position ``substring`` inside a ``sequence`` lambda.
+
+``substring(t, p, k)`` on a Spark string walks UTF-8 code points from the
+start of ``t``, so calling it once per position of a
+``transform(sequence(1, n), p -> ...)`` costs O(n) per call and O(n^2)
+per document. Per-position readers split the text into code points once
+(``dedup._with_code_points``) and index the array. This test scans every
+module of the package, both SQL text in string literals and the Python
+column API, so the quadratic pattern cannot come back.
+"""
+
+import ast
+import pathlib
+import re
+
+PKG = pathlib.Path(__file__).resolve().parents[1] / "ocr_application_spark"
+_SUBSTR = {"substring", "substr"}
+_LAMBDA_HOFS = {"transform", "filter", "exists", "forall", "aggregate"}
+
+
+def _close(s, i):
+    """Index of the parenthesis closing the one at ``s[i]`` (or len(s)
+    when the literal ends first: SQL is often built from fragments)."""
+    depth = 0
+    for j in range(i, len(s)):
+        if s[j] == "(":
+            depth += 1
+        elif s[j] == ")":
+            depth -= 1
+            if depth == 0:
+                return j
+    return len(s)
+
+
+def _top_args(s):
+    out, depth, cur = [], 0, []
+    for ch in s:
+        if ch == "," and depth == 0:
+            out.append("".join(cur))
+            cur = []
+            continue
+        depth += ch == "("
+        depth -= ch == ")"
+        cur.append(ch)
+    return out + ["".join(cur)]
+
+
+def sql_offenders(text):
+    """``substring(<text>, <lambda var>, ...)`` calls inside the body of
+    a lambda whose array argument is ``sequence(...)``, in SQL text."""
+    hits = []
+    for m in re.finditer(r"\bsequence\s*\(", text):
+        end = _close(text, m.end() - 1)
+        lam = re.match(r"\s*,\s*\(?\s*(\w+)(?:\s*,\s*\w+)*\s*\)?\s*->", text[end + 1 :])
+        if not lam:
+            continue
+        var = re.compile(rf"\b{lam.group(1)}\b")
+        start = end + 1 + lam.end()
+        depth, stop = 0, len(text)
+        for j in range(start, len(text)):
+            depth += text[j] == "("
+            depth -= text[j] == ")"
+            if depth < 0:
+                stop = j
+                break
+        body = text[start:stop]
+        for sm in re.finditer(r"\b(?:substring|substr)\s*\(", body):
+            args = _top_args(body[sm.end() : _close(body, sm.end() - 1)])
+            if len(args) >= 2 and var.search(args[1]) and not var.search(args[0]):
+                hits.append(body[sm.start() : _close(body, sm.end() - 1) + 1])
+    return hits
+
+
+def _name(func):
+    return func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", None)
+
+
+def _literal_text(node):
+    """Text of a string literal; f-string fields read as ``X``."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return node.value
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "X" for v in node.values
+        )
+    return None
+
+
+def api_offenders(tree):
+    """``F.substring(col, <lambda var>, ...)`` inside a Python lambda
+    passed to a higher-order function over ``F.sequence(...)``."""
+    hits = []
+    for call in ast.walk(tree):
+        if not (
+            isinstance(call, ast.Call)
+            and _name(call.func) in _LAMBDA_HOFS
+            and call.args
+            and isinstance(call.args[0], ast.Call)
+            and _name(call.args[0].func) == "sequence"
+        ):
+            continue
+        for lam in (a for a in call.args[1:] if isinstance(a, ast.Lambda)):
+            params = {a.arg for a in lam.args.args}
+            for sub in ast.walk(lam.body):
+                if not (isinstance(sub, ast.Call) and _name(sub.func) in _SUBSTR):
+                    continue
+                if len(sub.args) < 2:
+                    continue
+                used = [
+                    {n.id for n in ast.walk(a) if isinstance(n, ast.Name)} & params
+                    for a in sub.args[:2]
+                ]
+                if used[1] and not used[0]:
+                    hits.append(ast.unparse(sub))
+    return hits
+
+
+def _scan(source):
+    tree = ast.parse(source)
+    hits = api_offenders(tree)
+    for node in ast.walk(tree):
+        text = _literal_text(node)
+        if text:
+            hits += sql_offenders(text)
+    return hits
+
+
+def test_detector_flags_the_quadratic_gram_reader():
+    """The guard must recognize the pattern it exists to forbid."""
+    sql = (
+        'x = (f"transform(filter(sequence(1, length(t) - {k} + 1), p -> "\n'
+        '     f"cast(conv(substring(md5(substring(t, p, {k})), 1, 10), 16, 10) '
+        'as bigint) % 32 = 0), e -> e + 7)")\n'
+    )
+    assert _scan(sql) == ["substring(t, p, X)"]
+    api = "y = F.transform(F.sequence(F.lit(1), n), lambda i: F.md5(F.substring(t, i, 8)))\n"
+    assert _scan(api) == ["F.substring(t, i, 8)"]
+    # per-window md5 slices and the code-point reader are fine
+    ok = (
+        'z = "transform(sequence(0, n - 1), k -> substring(md5(array_join('
+        "slice(tk, k * 4 + 1, 8), ' ')), 1, 16))\"\n"
+        'w = "transform(sequence(1, size(cs) - 7), p -> md5(concat(cs[p - 1], cs[p])))"\n'
+    )
+    assert _scan(ok) == []
+
+
+def test_no_per_position_substring_in_sequence_lambdas():
+    files = sorted(PKG.rglob("*.py"))
+    assert len(files) > 20
+    hits = {
+        str(f.relative_to(PKG)): h
+        for f in files
+        if (h := _scan(f.read_text(encoding="utf-8")))
+    }
+    assert hits == {}, hits
