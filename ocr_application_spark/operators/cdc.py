@@ -378,12 +378,11 @@ def _bucketed_store_covering(
         cv = st["covers_version"]
         if mirror_ok and cv == current_version:
             return spark.table(tbl).select("chunk_hash")
-        appends_only = all(
+        if mirror_ok and cv < current_version and all(
             snapshot_info(store_path, v)["mode"] == "append"
             for v in snapshot_versions(store_path)
             if cv < v <= current_version
-        )
-        if mirror_ok and cv < current_version and appends_only:
+        ):
             try:
                 from ocr_application_spark.session import bounded_cache
 

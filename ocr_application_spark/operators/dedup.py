@@ -1239,11 +1239,10 @@ def _gram_hash_sql(k: int) -> str:
     gram is k array reads, so hashing every position is linear in doc
     length; ``substring(t, p, k)`` walks the UTF-8 string from its
     start on each call, which made the same pass quadratic."""
-    reads = ", ".join(
-        "cs[p]" if i == 1 else f"cs[p {'+' if i > 1 else '-'} {abs(i - 1)}]"
-        for i in range(k)
-    )
-    return f"cast(conv(substring(md5(concat({reads})), 1, 10), 16, 10) as bigint)"
+    # cs[] is 0-based: the gram at 1-based p is cs[p - 1] .. cs[p + k - 2]
+    reads = ["cs[p - 1]", "cs[p]"] + [f"cs[p + {i}]" for i in range(1, k - 1)]
+    gram = ", ".join(reads)
+    return f"cast(conv(substring(md5(concat({gram})), 1, 10), 16, 10) as bigint)"
 
 
 def winnow_fingerprints(

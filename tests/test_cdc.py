@@ -16,7 +16,8 @@ from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from ocr_application_spark.operators import cdc as C
-from ocr_application_spark.operators.dedup import _WINNOW_POSM, winnow_fingerprints
+from ocr_application_spark.operators.dedup import winnow_fingerprints
+from tests.test_winnow import _twin as _ref_winnow
 
 SF = "/root/testdata/sf0.001"
 
@@ -126,17 +127,6 @@ def _ref_cdc(text):
     return [(i + 1, len(c), _h40(c)) for i, c in enumerate(chunks)]
 
 
-def _ref_winnow(text, k, w):
-    """Set of (fp_pos, fp_hash) winnowing selections of one doc."""
-    t = (text or "").lower()
-    keys = [
-        _h40(t[p - 1 : p - 1 + k]) * _WINNOW_POSM + (_WINNOW_POSM - 1 - p % _WINNOW_POSM)
-        for p in range(1, len(t) - k + 2)
-    ]
-    sel = {min(keys[i : i + w]) for i in range(max(1, len(keys) - w + 1))} if keys else set()
-    return {(_WINNOW_POSM - 1 - sk % _WINNOW_POSM, sk // _WINNOW_POSM) for sk in sel}
-
-
 # ASCII, multi-byte BMP (2- and 3-byte UTF-8), combining marks, astral
 # plane (4-byte UTF-8, one code point but two UTF-16 units), and an
 # astral letter with a case mapping (Deseret U+10400 -> U+10428)
@@ -154,7 +144,7 @@ _texts = st.one_of(
 @given(texts=st.lists(_texts, min_size=1, max_size=12))
 @example(texts=["😀" * 7, "😀" * 8, "😀" * 9, "", None, "abc", "漢字" * 40])
 @example(texts=["e\u0301" * 3, "A\u0308b\u0301" * 40, "𝔘\U00010400x" * 50])
-@settings(max_examples=25, deadline=None)
+@settings(max_examples=15, deadline=None)
 def test_cdc_and_winnow_match_python_reference(spark, texts):
     """cdc_chunks and winnow_fingerprints against md5 over code-point
     slices in Python: every boundary, chunk length, chunk hash and
@@ -170,7 +160,7 @@ def test_cdc_and_winnow_match_python_reference(spark, texts):
         for r in winnow_fingerprints(df, k=k, w=w).collect():
             got_w.setdefault(r["doc_id"], []).append((r["fp_pos"], r["fp_hash"]))
         assert all(len(v) == len(set(v)) for v in got_w.values())
-        want_w = {i: _ref_winnow(t, k, w) for i, t in enumerate(texts)}
+        want_w = {i: _ref_winnow(t or "", k, w) for i, t in enumerate(texts)}
         assert {i: set(v) for i, v in got_w.items()} == {i: v for i, v in want_w.items() if v}, (k, w)
 
 
