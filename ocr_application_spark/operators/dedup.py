@@ -1225,10 +1225,11 @@ _WINNOW_POSM = 1 << 16
 
 def _with_code_points(text_sql: str, body: str) -> str:
     """SQL evaluating ``body`` with ``cs`` bound to the code points of
-    ``text_sql`` (``split(t, '')``), split once per row. ``cs`` is a
-    lambda parameter, not a projected column: Catalyst inlines a
-    projected ``split`` into the lambdas that read it and re-splits the
-    text for every element (measured 11x slower)."""
+    ``text_sql`` (``split(t, '')``). ``cs`` is a lambda parameter, not a
+    projected column, so the text is split once per row whether or not
+    Catalyst collapses projections into the lambdas that read it
+    (PERF.md §1: a captured computed column can be re-evaluated per
+    element)."""
     return f"element_at(transform(array(split({text_sql}, '')), cs -> {body}), 1)"
 
 
