@@ -27,8 +27,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
+from ocr_application_spark.operators.similarity import (
+    _COSINE_TOPK_ORACLE,
+    _dot,
+    _quant,
+    quantized_topk,
+)
 
 K_CELLS = 16
 N_PROBE = 4
@@ -154,7 +159,7 @@ def ann_ivf_topk(
     return _topk(cand)
 
 
-QUERIES["ann_ivf_topk"] = ann_ivf_topk  # rows-only: approximate by design
+op("ann_ivf_topk")(ann_ivf_topk)  # rows-only: approximate by design
 
 
 def ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,8 +172,6 @@ def ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks can't flip on a cross-engine ulp; the nprobe<k production
     path shares every stage but the scorer, whose float/quantized twin
     equivalence is bounded by the recall pytest."""
-    from ocr_application_spark.operators.similarity import _dot, _quant
-
     cell_of, probe_cells = _centroid_udfs(
         spark, train_codebook(spark, sf_dir), nprobe=K_CELLS
     )
@@ -182,24 +185,13 @@ def ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("qn", _dot(F.col("qv"), F.col("qv")))
         .drop("q_emb")
     )
-    from ocr_application_spark.operators.similarity import quantized_topk
-
     cand = queries.join(indexed, "cell").withColumnRenamed("vec_id", "cand_id")
     return quantized_topk(cand, k=_K_TOP)
 
 
-QUERIES["ann_ivf_exhaustive"] = ann_ivf_exhaustive
-
-
-def _exhaustive_oracle() -> str:
-    # full probing must equal brute force, so the oracle IS the
-    # brute-force SQL (shared spec with ann_cosine_topk — same _K, _QMOD)
-    from ocr_application_spark.operators.similarity import ORACLES as SIM_ORACLES
-
-    return SIM_ORACLES["ann_cosine_topk"]
-
-
-ORACLES["ann_ivf_exhaustive"] = _exhaustive_oracle()
+# full probing must equal brute force, so the oracle IS the brute-force
+# SQL (shared spec with ann_cosine_topk — same _K, _QMOD)
+op("ann_ivf_exhaustive", _COSINE_TOPK_ORACLE)(ann_ivf_exhaustive)
 
 
 # --- the on-disk inverted file (what "IVF" means at 100 TB) -----------------

@@ -38,20 +38,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ocr_application_spark.operators.ann_ivf import _TRAIN_CAP, _TRAIN_MOD
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 M_SUB = 8  # subvectors per vector
 K_SUB = 16  # centroids per subspace (uint8 code, 16 used)
@@ -264,7 +251,7 @@ def pq_topk(
     )
 
 
-@_q("ann_pq_topk")  # rows-only BY DESIGN: no SQL oracle can refit k-means
+@op("ann_pq_topk")  # rows-only BY DESIGN: no SQL oracle can refit k-means
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate entry for the PQ-ADC + exact-rerank path (see module
     docstring for why it is rows-only and outside the driver window;

@@ -22,18 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 def asof_join(
@@ -165,7 +154,7 @@ _ASOF_ORACLE = f"""
     """
 
 
-@_q("events_asof_profile", _ASOF_ORACLE)
+@op("events_asof_profile", _ASOF_ORACLE)
 def events_asof_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join gate: every event picks up the profile version in
     effect at its timestamp, from a version history synthesized with
@@ -176,7 +165,7 @@ def events_asof_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         "event_id",
         "user_id",
-        # NTZ parquet ts -> exact integer micros, the tpch.py pattern
+        # NTZ parquet ts -> exact integer micros
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
     )
     users = ev.select("user_id").distinct()
@@ -291,7 +280,7 @@ _OVERLAP_ORACLE = f"""
 """
 
 
-@_q("events_interval_overlap", _OVERLAP_ORACLE)
+@op("events_interval_overlap", _OVERLAP_ORACLE)
 def events_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate for :func:`interval_overlap_join`: every (click-attention,
     view-dwell) interval pair per user that overlaps in time, with the

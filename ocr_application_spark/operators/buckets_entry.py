@@ -1,8 +1,7 @@
 """Bucketed co-located join demonstrator (the 100 TB join lever).
 
-``q3_shipping_priority``'s plan comment promises that bucketing orders
-and lineitem on orderkey makes their join co-located; this module
-proves it in an executed plan. Both sides are written once with
+Bucketing orders and lineitem on orderkey makes their join
+co-located; this module proves it in an executed plan. Both sides are written once with
 ``bucketBy(N, key)`` (Spark's hash-bucketed table layout — the same
 contract Iceberg bucket partition transforms give a real warehouse),
 then the fact-fact join runs as a SortMergeJoin with ZERO exchanges:
@@ -12,9 +11,8 @@ the single biggest shuffle in the plan (both sides huge, neither
 broadcastable) into a scan-local merge — pay the shuffle once at write,
 amortize it over every subsequent join.
 
-Engine demonstrator like the TPC-H set: no reference analog (the
-reference joins nothing at this scale), so it sits OUTSIDE the driver's
-50-slot window, oracle-checked by the local parity suite and
+Engine demonstrator: no reference analog (the reference joins nothing
+at this scale); oracle-checked by the local parity suite and
 plan-pinned by test_plan_audit.
 
 The bucketed tables live under ``default_scratch()`` via a
@@ -27,20 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_application_spark.operators.registry import op
 from ocr_application_spark.sources.webpages import default_scratch
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 _N_BUCKETS = 8
@@ -104,7 +90,7 @@ def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@op(
     "bucketed_colocated_join",
     """
     select o.o_orderpriority,

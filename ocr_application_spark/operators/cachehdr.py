@@ -35,18 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 def _sql_quote(pat: str) -> str:
@@ -201,7 +190,7 @@ def _fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("crawl_cache_headers", _ORACLE)
+@op("crawl_cache_headers", _ORACLE)
 def crawl_cache_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     fx = _fixture(spark, sf_dir)
     return cache_freshness(fx).select(

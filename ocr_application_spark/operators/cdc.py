@@ -36,20 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_application_spark.operators.dedup import _gram_hash_sql, _with_code_points
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _CDC_K = 8  # rolling-window gram width (chars)
 _CDC_MASK = 32  # boundary when gram-hash % 32 == 0 -> mean chunk ~ 40 chars
@@ -158,7 +145,7 @@ _CDC_ORACLE = f"""
 """
 
 
-@_q("dedup_cdc_chunks", _CDC_ORACLE)
+@op("dedup_cdc_chunks", _CDC_ORACLE)
 def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC dedup gate: per doc, chunk count, total/shared chunk chars
     (shared = the chunk's hash appears in >= 2 docs) and the shared
@@ -263,13 +250,13 @@ def _read_mirror_state(store_path: str) -> dict | None:
     try:
         with open(p) as f:
             st = json.load(f)
-        return st if {"covers_version", "n_buckets", "n_rows"} <= set(st) else None
+        return st if {"covers_version", "n_buckets"} <= set(st) else None
     except (OSError, ValueError):
         return None
 
 
 def _write_mirror_state(
-    store_path: str, covers_version: int, n_buckets: int, n_rows: int
+    store_path: str, covers_version: int, n_buckets: int, n_hashes: int
 ) -> None:
     import json
     import os
@@ -282,11 +269,15 @@ def _write_mirror_state(
             {
                 "covers_version": covers_version,
                 "n_buckets": n_buckets,
-                "n_rows": n_rows,
+                "n_hashes": n_hashes,
             },
             f,
         )
     os.replace(tmp, p)
+
+
+def _distinct_hashes(spark: SparkSession, tbl: str) -> int:
+    return spark.table(tbl).select("chunk_hash").distinct().count()
 
 
 def _claim_mirror_dir(store_path: str, ddir: str, st: dict | None) -> None:
@@ -360,19 +351,23 @@ def _bucketed_store_covering(
     if st is not None and st["n_buckets"] == n_buckets:
         if not spark.catalog.tableExists(tbl):
             spark.sql(adopt_ddl)  # new session, surviving files: adopt
-        # cross-check the files against the stamped row count EVERY
-        # covering call, not only at adoption (parquet count is
-        # footer-metadata-only — cheap at any scale): a data dir
+        # cross-check the files against the stamped DISTINCT hash
+        # count EVERY covering call, not only at adoption: a data dir
         # deleted or truncated behind a surviving state file — in this
         # session or a prior one — must rebuild, not silently probe an
         # under-filled mirror (which would re-commit store-known
-        # chunks as novel). refreshTable first so a stale cached file
-        # listing can't vouch for files that are gone; a count that
-        # THROWS (listing races a concurrent rebuild) counts as
-        # invalid and falls through to the rebuild too.
+        # chunks as novel). Distinct, not raw rows: a tolerated
+        # double-append adds duplicate rows that could make up for a
+        # lost file in a raw count; the price is one scan of the
+        # mirror's single column where a raw count read only parquet
+        # footers. refreshTable first so a stale cached file listing
+        # can't vouch for files that are gone; a count that THROWS
+        # (listing races a concurrent rebuild) counts as invalid and
+        # falls through to the rebuild too, as does a state stamped
+        # without "n_hashes".
         try:
             spark.catalog.refreshTable(tbl)
-            mirror_ok = spark.table(tbl).count() >= st["n_rows"]
+            mirror_ok = "n_hashes" in st and _distinct_hashes(spark, tbl) >= st["n_hashes"]
         except Exception:
             mirror_ok = False
         cv = st["covers_version"]
@@ -387,7 +382,8 @@ def _bucketed_store_covering(
                 from ocr_application_spark.session import bounded_cache
 
                 # persist the (O(new-rows)) diff so the append and the
-                # state-stamp count scan it once, not twice
+                # state-stamp count scan it once, not twice; the store
+                # is content-addressed, so every diff hash is new to it
                 added = bounded_cache(
                     read_snapshot_diff(
                         spark, store_path, cv, current_version
@@ -399,7 +395,7 @@ def _bucketed_store_covering(
                 ).mode("append").format("parquet").saveAsTable(tbl)
                 _write_mirror_state(
                     store_path, current_version, n_buckets,
-                    st["n_rows"] + added.count(),
+                    st["n_hashes"] + added.count(),
                 )
                 return spark.table(tbl).select("chunk_hash")
             except (ValueError, FileNotFoundError):
@@ -421,7 +417,7 @@ def _bucketed_store_covering(
         .saveAsTable(tbl)
     )
     _write_mirror_state(
-        store_path, current_version, n_buckets, spark.table(tbl).count()
+        store_path, current_version, n_buckets, _distinct_hashes(spark, tbl)
     )
     return spark.table(tbl).select("chunk_hash")
 
@@ -655,7 +651,7 @@ _CDC_INGEST_ORACLE = f"""
 """
 
 
-@_q("cdc_incremental_ingest", _CDC_INGEST_ORACLE)
+@op("cdc_incremental_ingest", _CDC_INGEST_ORACLE)
 def cdc_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: bootstrap the chunk store from the base crawl (doc_id %
     3 != 0), ingest the recrawl increment (remaining docs + shifted

@@ -35,18 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 def _ci_hex(s: str) -> str:
@@ -145,7 +134,7 @@ def sniff_charset(df: DataFrame, bytes_col: str = "html") -> DataFrame:
     return h.selectExpr("*", *exprs).drop("hexs")
 
 
-@_q("extract_charset_sniff", _ORACLE)
+@op("extract_charset_sniff", _ORACLE)
 def extract_charset_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     b = F.expr(

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ocr_application_spark.operators.registry import op
 from ocr_application_spark.operators.similarity import (
     DIM,
     _dot,
@@ -54,19 +55,6 @@ from ocr_application_spark.operators.similarity import (
     _quant,
     _QUANT_SQL,
 )
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 _KM_K = 8  # centroids
@@ -227,7 +215,7 @@ def _kmeans_oracle() -> str:
     """
 
 
-@_q("emb_kmeans_assign", _kmeans_oracle())
+@op("emb_kmeans_assign", _kmeans_oracle())
 def emb_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means cluster assignment: (vec_id, cluster_id, dist_sq) after
     _KM_ROUNDS exact Lloyd rounds. Broadcast-centroid assignment (zero
@@ -333,7 +321,7 @@ def semdedup_verdicts(
     )
 
 
-@_q("emb_semdedup", _semdedup_oracle())
+@op("emb_semdedup", _semdedup_oracle())
 def emb_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate pin of ``semdedup_verdicts`` at the default dials
     (cos >= 1/4, k=_KM_K, rounds=_KM_ROUNDS) against the unrolled SQL

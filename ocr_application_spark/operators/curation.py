@@ -28,8 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 # regex dialect intersection of Java (Spark) and RE2 (DuckDB): \b, \d,
 # bounded/unbounded repetition and char classes behave identically
@@ -134,8 +133,7 @@ def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_pii_scrub"] = text_pii_scrub
-ORACLES["text_pii_scrub"] = _PII_ORACLE
+op("text_pii_scrub", _PII_ORACLE)(text_pii_scrub)
 
 
 _N = 13  # the canonical benchmark-overlap gram size (GPT-3 appendix C)
@@ -196,8 +194,7 @@ def decontaminate_13gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["decontaminate_13gram"] = decontaminate_13gram
-ORACLES["decontaminate_13gram"] = _DECON_ORACLE
+op("decontaminate_13gram", _DECON_ORACLE)(decontaminate_13gram)
 
 
 # --- paragraph-level exact dedup (Lee et al. 2022 "Deduplicating
@@ -288,8 +285,7 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["dedup_paragraphs"] = dedup_paragraphs
-ORACLES["dedup_paragraphs"] = _PARA_ORACLE
+op("dedup_paragraphs", _PARA_ORACLE)(dedup_paragraphs)
 
 
 # --- deterministic stratified sampling: reproducible training-mixture
@@ -327,8 +323,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["sample_stratified"] = sample_stratified
-ORACLES["sample_stratified"] = _SAMPLE_ORACLE
+op("sample_stratified", _SAMPLE_ORACLE)(sample_stratified)
 
 
 # --- Gopher-style repetition quality rules (Rae et al. 2021, table A1):
@@ -455,8 +450,7 @@ def text_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_gopher_repetition"] = text_gopher_repetition
-ORACLES["text_gopher_repetition"] = _GOPHER_ORACLE
+op("text_gopher_repetition", _GOPHER_ORACLE)(text_gopher_repetition)
 
 
 # --- sequence packing (concat-and-chunk, the GPT-style pretraining
@@ -527,8 +521,7 @@ def seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["seq_pack"] = seq_pack
-ORACLES["seq_pack"] = _PACK_ORACLE
+op("seq_pack", _PACK_ORACLE)(seq_pack)
 
 
 # --- domain-mixture sampling: per-source target rates (the training
@@ -582,8 +575,7 @@ def sample_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["sample_domain_mix"] = sample_domain_mix
-ORACLES["sample_domain_mix"] = _MIX_ORACLE
+op("sample_domain_mix", _MIX_ORACLE)(sample_domain_mix)
 
 
 # --- frequency-rank quality score (the CCNet perplexity-filter analog,
@@ -737,8 +729,7 @@ def text_rank_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_rank_quality"] = text_rank_quality
-ORACLES["text_rank_quality"] = _RANKQ_ORACLE
+op("text_rank_quality", _RANKQ_ORACLE)(text_rank_quality)
 
 
 # --- exact-substring duplication ratio (the ExactSubstr signal of Lee
@@ -863,8 +854,7 @@ def dedup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["dedup_span_ratio"] = dedup_span_ratio
-ORACLES["dedup_span_ratio"] = _SPANDUP_ORACLE
+op("dedup_span_ratio", _SPANDUP_ORACLE)(dedup_span_ratio)
 
 
 # --- exact-substring span REMOVAL (the second half of Lee et al. 2021's
@@ -980,8 +970,7 @@ def dedup_span_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["dedup_span_strip"] = dedup_span_strip
-ORACLES["dedup_span_strip"] = _SPANSTRIP_ORACLE
+op("dedup_span_strip", _SPANSTRIP_ORACLE)(dedup_span_strip)
 
 
 # --- per-source boilerplate-chunk removal (the RefinedWeb / CCNet
@@ -1110,8 +1099,7 @@ def boilerplate_strip_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["boilerplate_strip_source"] = boilerplate_strip_source
-ORACLES["boilerplate_strip_source"] = _BOILER_ORACLE
+op("boilerplate_strip_source", _BOILER_ORACLE)(boilerplate_strip_source)
 
 
 # --- token-budget sampling (the training-recipe dial in token space):
@@ -1185,8 +1173,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["sample_token_budget"] = sample_token_budget
-ORACLES["sample_token_budget"] = _TOKBUDGET_ORACLE
+op("sample_token_budget", _TOKBUDGET_ORACLE)(sample_token_budget)
 
 
 # --- Gopher quality rule card (Rae et al. 2021, appendix A1.1): the
@@ -1307,8 +1294,7 @@ def text_gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_gopher_quality"] = text_gopher_quality
-ORACLES["text_gopher_quality"] = _GOPHERQ_ORACLE
+op("text_gopher_quality", _GOPHERQ_ORACLE)(text_gopher_quality)
 
 
 # --- C4 word-blocklist gate (Raffel et al. 2020 §2.2's other document
@@ -1371,8 +1357,7 @@ def text_word_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return word_blocklist_gate(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
-QUERIES["text_word_blocklist"] = text_word_blocklist
-ORACLES["text_word_blocklist"] = _BLOCKLIST_ORACLE
+op("text_word_blocklist", _BLOCKLIST_ORACLE)(text_word_blocklist)
 
 
 # --- per-host corpus report card -------------------------------------------------
@@ -1456,8 +1441,7 @@ def host_quality_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return host_quality_report(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
-QUERIES["host_quality_report"] = host_quality_report_q
-ORACLES["host_quality_report"] = _REPORT_ORACLE
+op("host_quality_report", _REPORT_ORACLE)(host_quality_report_q)
 
 
 # --- C4 line-level filter (Raffel et al. 2020, section 2.2): the
@@ -1550,8 +1534,7 @@ def text_c4_line_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["text_c4_line_filter"] = text_c4_line_filter
-ORACLES["text_c4_line_filter"] = _C4_ORACLE
+op("text_c4_line_filter", _C4_ORACLE)(text_c4_line_filter)
 
 
 # --- deterministic global shuffle into training shards: the last step
@@ -1615,8 +1598,7 @@ def shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["shard_shuffle"] = shard_shuffle
-ORACLES["shard_shuffle"] = _SHARD_ORACLE
+op("shard_shuffle", _SHARD_ORACLE)(shard_shuffle)
 
 
 # --- epoch-weighted source upsampling (the data-recipe repeat dial:
@@ -1696,8 +1678,7 @@ def sample_epochs_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["sample_epochs_weighted"] = sample_epochs_weighted
-ORACLES["sample_epochs_weighted"] = _EPOCHS_ORACLE
+op("sample_epochs_weighted", _EPOCHS_ORACLE)(sample_epochs_weighted)
 
 
 # --- consecutive-duplicate-line collapse (the Dolma / RedPajama
@@ -1754,8 +1735,7 @@ def dedup_consecutive_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["dedup_consecutive_lines"] = dedup_consecutive_lines
-ORACLES["dedup_consecutive_lines"] = _LINEDEDUP_ORACLE
+op("dedup_consecutive_lines", _LINEDEDUP_ORACLE)(dedup_consecutive_lines)
 
 
 # --- DSIR-style importance resampling ----------------------------------------
@@ -1896,8 +1876,7 @@ def sample_dsir_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).limit(_DSIR_TOPK)
 
 
-QUERIES["sample_dsir_topk"] = sample_dsir_topk
-ORACLES["sample_dsir_topk"] = _DSIR_ORACLE
+op("sample_dsir_topk", _DSIR_ORACLE)(sample_dsir_topk)
 
 
 # --- cross-split leakage audit ----------------------------------------------
@@ -2004,8 +1983,7 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["split_leakage_report"] = split_leakage_report
-ORACLES["split_leakage_report"] = _leak_oracle()
+op("split_leakage_report", _leak_oracle())(split_leakage_report)
 
 
 # --- sliding-window token chunking -------------------------------------------
@@ -2088,5 +2066,4 @@ def text_window_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return window_chunks(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
-QUERIES["text_window_chunks"] = text_window_chunks
-ORACLES["text_window_chunks"] = _WINCHUNK_ORACLE
+op("text_window_chunks", _WINCHUNK_ORACLE)(text_window_chunks)

@@ -19,20 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ocr_application_spark.operators.registry import op
 from ocr_application_spark.session import bounded_cache, release_local_checkpoint
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,7 +28,7 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- exact dedup -------------------------------------------------------------
-@_q(
+@op(
     "dedup_exact",
     """
     select md5(text) as fingerprint,
@@ -515,7 +503,7 @@ def _h60(col) -> F.Column:
 # scale. Applied identically in both engines (exact parity).
 _MAX_POSTING = 64
 
-@_q(
+@op(
     "dedup_ngram_jaccard",
     f"""
     with {_SHINGLES_CTE},
@@ -608,7 +596,7 @@ def _pair_intersections(arr: DataFrame) -> DataFrame:
 # the SAME aggregation; no extra shuffle vs the symmetric op.
 _CONTAIN_T = 0.5
 
-@_q(
+@op(
     "dedup_containment",
     f"""
     with {_SHINGLES_CTE},
@@ -777,7 +765,7 @@ def _band_dial_sql(rows_per_band: int) -> str:
     """
 
 
-@_q("dedup_minhash_band_dial", _band_dial_sql(4))
+@op("dedup_minhash_band_dial", _band_dial_sql(4))
 def dedup_minhash_band_dial(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash band dial at a NON-production point — 2 bands of 4
     rows (stricter than the production 4x2, whose candidates are already
@@ -813,7 +801,7 @@ def _band_buckets(d: DataFrame) -> DataFrame:
     )
 
 
-@_q(
+@op(
     "dedup_minhash_lsh",
     f"""
     with {_SHINGLES_CTE},
@@ -862,7 +850,7 @@ _SIMHASH_COMBINE_SQL = " + ".join(
 )
 
 
-@_q(
+@op(
     "dedup_simhash",
     f"""
     with tokens as (
@@ -1076,7 +1064,7 @@ def propagate_components(
     return labels.unionByName(singletons)
 
 
-@_q("dedup_components", _COMPONENTS_ORACLE)
+@op("dedup_components", _COMPONENTS_ORACLE)
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: (doc_id, rep) where rep is the smallest doc_id
     reachable through MinHash+LSH candidate pairs (singletons map to
@@ -1187,7 +1175,7 @@ def propagate_components_star(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     return labels.unionByName(roots).unionByName(singles)
 
 
-@_q("dedup_components_star", _COMPONENTS_ORACLE)
+@op("dedup_components_star", _COMPONENTS_ORACLE)
 def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dedup_components' scale twin: identical clusters (same oracle)
     from the O(log n)-round star contraction instead of O(diameter)
@@ -1338,7 +1326,7 @@ from fps group by doc_id
 """
 
 
-@_q("dedup_winnow", _WINNOW_ORACLE)
+@op("dedup_winnow", _WINNOW_ORACLE)
 def dedup_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing gate: per document, the selected fingerprint set
     folded to (count, hash sum, hash xor, position sum) — four integer

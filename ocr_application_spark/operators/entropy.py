@@ -40,19 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _ALPHABET = "abcdefghijklmnopqrstuvwxyz "
 
@@ -110,7 +98,7 @@ def _entropy_oracle() -> str:
     """
 
 
-@_q("text_char_entropy", _entropy_oracle())
+@op("text_char_entropy", _entropy_oracle())
 def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc char-distribution entropy, scan-fused (no exchange, no
     UDF), exact integer micro-nats in both engines."""
@@ -141,7 +129,7 @@ def compression_ratio(text: Column) -> Column:
     return _ratio(text)
 
 
-@_q("text_compression_ratio")  # rows-only: zlib has no SQL twin
+@op("text_compression_ratio")  # rows-only: zlib has no SQL twin
 def text_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DEFLATE compressibility per doc — the spam/boilerplate signal.
     Rows-only at the gate (genuinely non-SQL); value contract pinned by

@@ -52,18 +52,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 def _sql_quote(pat: str) -> str:
@@ -450,7 +439,7 @@ def _spark_expr(sql: str) -> F.Column:
     return F.expr(sql.replace("as varchar", "as string"))
 
 
-@_q("crawl_feed_discover", _DISCOVER_ORACLE)
+@op("crawl_feed_discover", _DISCOVER_ORACLE)
 def crawl_feed_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fx = docs.select(
@@ -461,7 +450,7 @@ def crawl_feed_discover(spark: SparkSession, sf_dir: str) -> DataFrame:
     return discover_feeds(fx).select("doc_id", "tag_idx", "feed_kind", "feed_url")
 
 
-@_q("crawl_feed_parse", _PARSE_ORACLE)
+@op("crawl_feed_parse", _PARSE_ORACLE)
 def crawl_feed_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fx = docs.select(

@@ -19,19 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _DEC = "decimal(18,2)"
 
@@ -57,7 +45,7 @@ def _ratio_q30_sql(p: str, q: str) -> str:
     )
 
 
-@_q(
+@op(
     "forecast_linear",
     """
     with daily as (
@@ -249,8 +237,7 @@ def forecast_ar1(spark: SparkSession, sf_dir: str) -> DataFrame:
     return series_df.groupBy("event_type").applyInPandas(fit, schema=schema)
 
 
-QUERIES["forecast_ar1"] = forecast_ar1
-ORACLES["forecast_ar1"] = _AR1_ORACLE  # closed-form estimator, SQL twin
+op("forecast_ar1", _AR1_ORACLE)(forecast_ar1)  # closed-form estimator, SQL twin
 
 
 # --- ARIMA(1,1,1) analog: differenced AR(1)+drift with an MA(1) term ---------
@@ -477,5 +464,4 @@ def forecast_arima_like(spark: SparkSession, sf_dir: str) -> DataFrame:
     return series_df.groupBy("event_type").applyInPandas(fit, schema=schema)
 
 
-QUERIES["forecast_arima_like"] = forecast_arima_like
-ORACLES["forecast_arima_like"] = _ARIMA_ORACLE
+op("forecast_arima_like", _ARIMA_ORACLE)(forecast_arima_like)

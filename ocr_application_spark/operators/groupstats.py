@@ -21,18 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 def group_percentiles(
@@ -89,7 +78,7 @@ _PCT_ORACLE = """
     """
 
 
-@_q("group_percentiles_chars", _PCT_ORACLE)
+@op("group_percentiles_chars", _PCT_ORACLE)
 def group_percentiles_chars(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document-length p50/p90/p99 per source — the corpus-quality
     distribution card. Integer column, integer rank arithmetic: the
@@ -112,7 +101,7 @@ _ROLLUP_ORACLE = """
     """
 
 
-@_q("events_rollup_daily", _ROLLUP_ORACLE)
+@op("events_rollup_daily", _ROLLUP_ORACLE)
 def events_rollup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP demonstrator: (day, type) -> (day) -> grand-total event
     counts and cent-exact value sums in one pass (Spark expands the

@@ -51,19 +51,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _MAX_CAPACITY = 2_000_000  # per-partition summary must stay executor-RAM-trivial
 
@@ -196,7 +184,7 @@ _HH_ORACLE = f"""
     """
 
 
-@_q("text_heavy_hitters", _HH_ORACLE)
+@op("text_heavy_hitters", _HH_ORACLE)
 def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitters gate: exact phi=1/500 frequent keys over a
     synthesized heavy-tailed key stream, via the bounded-shuffle

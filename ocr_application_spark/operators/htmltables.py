@@ -35,18 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 def _sql_quote(pat: str) -> str:
@@ -171,7 +160,7 @@ _ORACLE = f"""
 """
 
 
-@_q("html_table_extract", _ORACLE)
+@op("html_table_extract", _ORACLE)
 def html_table_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fx = docs.select(

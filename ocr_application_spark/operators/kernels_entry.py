@@ -26,19 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 # Python str.split()/str.strip()'s EXACT whitespace set as a DuckDB
 # regex class (incl. \x1c-\x1f, NEL, NBSP, the U+2000 block, LS/PS,
@@ -90,7 +78,7 @@ _ETEXT_CTES = """
 """.replace("@PYWS@", _PYWS)
 
 
-@_q(
+@op(
     "pipeline_extract_digest",
     _ETEXT_CTES
     + """
@@ -141,7 +129,7 @@ def classify_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@_q(
+@op(
     "extract_yield_report",
     _ETEXT_CTES
     + """
@@ -203,7 +191,7 @@ def extract_yield_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@op(
     "streaming_extract_digest",
     _ETEXT_CTES
     + """
@@ -324,7 +312,7 @@ def _classify_oracle_sql() -> str:
     )
 
 
-@_q("classify_docwrap", _classify_oracle_sql())
+@op("classify_docwrap", _classify_oracle_sql())
 def classify_docwrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K1 value check: the REAL broadcast-weights classifier kernel over
     the docwrap corpus, per-document — route + the two live features —
@@ -355,7 +343,7 @@ def classify_docwrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q(
+@op(
     "multimodal_features",
     """
     select doc_id,
@@ -404,7 +392,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(feats, schema=schema)
 
 
-@_q(
+@op(
     "multimodal_resize",
     """
     select doc_id,
@@ -449,7 +437,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return payloads.mapInPandas(resize, schema=schema)
 
 
-@_q(
+@op(
     "multimodal_enhance",
     """
     with px as (
@@ -513,7 +501,7 @@ def multimodal_enhance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", "text").mapInPandas(enhance, schema=schema)
 
 
-@_q(
+@op(
     "multimodal_frame_sample",
     """
     select doc_id,
@@ -636,7 +624,7 @@ _NORMALIZE_ORACLE = (
 )
 
 
-@_q("kernel_normalize", _NORMALIZE_ORACLE)
+@op("kernel_normalize", _NORMALIZE_ORACLE)
 def kernel_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The standalone normalize stage (kernels/normalize.py — charset
     sniff -> decode -> mojibake repair, the reference's normalize-and-
@@ -679,7 +667,7 @@ _LINKS_ORACLE = """
 """
 
 
-@_q("link_outdegree", _LINKS_ORACLE)
+@op("link_outdegree", _LINKS_ORACLE)
 def link_outdegree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Outlink extraction (kernels/links.py — the crawl-graph feature
     stage) value-checked end-to-end: documents -> docwrap pages ->
@@ -740,7 +728,7 @@ def _pagerank_oracle_sql(iters: int = 4, scale: int = 10**9, dp: int = 85) -> st
     return sql
 
 
-@_q("link_host_pagerank", _pagerank_oracle_sql())
+@op("link_host_pagerank", _pagerank_oracle_sql())
 def link_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Host-graph PageRank (kernels/links.host_pagerank — the crawl
     quality prior) value-checked end-to-end on a deterministic 97-host
@@ -829,7 +817,7 @@ def _hits_oracle_sql(iters: int = 3, scale: int = 10**6) -> str:
     return sql
 
 
-@_q("link_host_hits", _hits_oracle_sql())
+@op("link_host_hits", _hits_oracle_sql())
 def link_host_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Host-graph HITS hubs/authorities (kernels/links.host_hits — the
     aggregator-vs-content signal PageRank can't give: a link directory
@@ -863,7 +851,7 @@ _ANCHORS_ORACLE = """
 """
 
 
-@_q("link_anchor_texts", _ANCHORS_ORACLE)
+@op("link_anchor_texts", _ANCHORS_ORACLE)
 def link_anchor_texts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anchor-text extraction (kernels/links.extract_anchors — what
     OTHER pages say a url is about, the classic web-graph retrieval /
@@ -927,7 +915,7 @@ _HC_ORACLE = """
 """
 
 
-@_q("link_host_components", _HC_ORACLE)
+@op("link_host_components", _HC_ORACLE)
 def link_host_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(host, cluster_rep) over the blocked host graph — every h00..h95
     host labels with its block's smallest member, h96..h99 label

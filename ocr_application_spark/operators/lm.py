@@ -38,19 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _TRAIN_LANG = "en"
 
@@ -182,7 +170,7 @@ _LM_ORACLE = f"""
 """
 
 
-@_q("text_lm_score", _LM_ORACLE)
+@op("text_lm_score", _LM_ORACLE)
 def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style LM quality scoring: add-one bigram model trained on
     the English slice, every document scored by exact-integer micro-nat
@@ -390,7 +378,7 @@ def nb_langid(docs: DataFrame) -> DataFrame:
     )
 
 
-@_q("classify_nb_langid", _NB_ORACLE)
+@op("classify_nb_langid", _NB_ORACLE)
 def classify_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate entry for :func:`nb_langid` over the documents table. Note
     the synthetic corpus draws all five langs from ONE shared 31-token
@@ -401,7 +389,7 @@ def classify_nb_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nb_langid(spark.read.parquet(f"{sf_dir}/documents.parquet"))
 
 
-@_q("text_pmi_collocations", _PMI_ORACLE)
+@op("text_pmi_collocations", _PMI_ORACLE)
 def text_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-100 PMI collocations over the corpus bigrams (min support
     _MIN_PAIR=5). PMI is computed as ln(c12)+ln(N)-ln(c1)-ln(c2) — the SAME
@@ -484,7 +472,7 @@ _CAL_ORACLE = f"""
 """
 
 
-@_q("classify_calibration_report", _CAL_ORACLE)
+@op("classify_calibration_report", _CAL_ORACLE)
 def classify_calibration_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(margin_bucket, n_docs, n_correct, acc_bp) over the eval split —
     the reliability diagram a margin-thresholding corpus gate is tuned

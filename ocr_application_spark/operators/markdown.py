@@ -32,19 +32,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 # (pattern, java_repl, re2_repl) — applied strictly in order
 _RULES: list[tuple[str, str, str]] = [
@@ -157,7 +145,7 @@ _MD_ORACLE = f"""
 """
 
 
-@_q("page_markdown", _MD_ORACLE)
+@op("page_markdown", _MD_ORACLE)
 def page_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: per page, the markdown's length, line count, link count
     and digest — the digest pins every byte of the conversion against

@@ -42,18 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 # --- shared patterns (one constant, two engines) -----------------------------
@@ -226,7 +215,7 @@ _GATE_ORACLE = f"""
 """
 
 
-@_q("page_meta_extract", _META_ORACLE)
+@op("page_meta_extract", _META_ORACLE)
 def page_meta_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fx = _fixture(spark, sf_dir)
     return extract_page_meta(fx).select(
@@ -234,7 +223,7 @@ def page_meta_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("page_index_gate", _GATE_ORACLE)
+@op("page_index_gate", _GATE_ORACLE)
 def page_index_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     fx = _fixture(spark, sf_dir)
     meta = extract_page_meta(fx)
@@ -549,7 +538,7 @@ _OUTLINE_ORACLE = f"""
 """
 
 
-@_q("page_heading_outline", _OUTLINE_ORACLE)
+@op("page_heading_outline", _OUTLINE_ORACLE)
 def page_heading_outline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fx = docs.select(
@@ -672,7 +661,7 @@ _CHUNK_ORACLE = f"""
 """
 
 
-@_q("page_section_chunks", _CHUNK_ORACLE)
+@op("page_section_chunks", _CHUNK_ORACLE)
 def page_section_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fx = docs.select(
@@ -684,7 +673,7 @@ def page_section_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     return section_chunks(fx)
 
 
-@_q("page_hreflang_clusters", _HL_ORACLE)
+@op("page_hreflang_clusters", _HL_ORACLE)
 def page_hreflang_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fx = docs.select(
@@ -794,7 +783,7 @@ _BITEXT_ORACLE = (
 )
 
 
-@_q("page_bitext_candidates", _BITEXT_ORACLE)
+@op("page_bitext_candidates", _BITEXT_ORACLE)
 def page_bitext_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: the hreflang fixture's en/fr/de translation clusters
     crossed with the documents table's real text lengths — every

@@ -45,18 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 # --- the miner (generic over any (url, digest) frame) ------------------------
@@ -177,7 +166,7 @@ _MINE_ORACLE = f"""
 """
 
 
-@_q("url_param_mining", _MINE_ORACLE)
+@op("url_param_mining", _MINE_ORACLE)
 def url_param_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     d = F.col("doc_id")

@@ -47,19 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _PH_ROWS = 7
 _PH_COLS = 9
@@ -165,7 +153,7 @@ ph as (
 )"""
 
 
-@_q(
+@op(
     "multimodal_phash",
     f"""
     with {_PH_SQL_BASE.lstrip()}
@@ -229,7 +217,7 @@ _PH_PAIRS_ORACLE = f"""
 """
 
 
-@_q("multimodal_phash_pairs", _PH_PAIRS_ORACLE)
+@op("multimodal_phash_pairs", _PH_PAIRS_ORACLE)
 def multimodal_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded Hamming near-dup pairs over the doubled corpus (each
     payload + its derived bright/speckled twin): 4x14-bit bands, per-

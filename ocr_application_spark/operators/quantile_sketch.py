@@ -42,19 +42,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 SUB_BITS = 5
 _BASE_SPAN = 1 << (SUB_BITS + 1)  # 64: bucket = shift * span + base
@@ -140,7 +128,7 @@ _ORACLE = f"""
 """
 
 
-@_q("sketch_hdr_quantiles", _ORACLE)
+@op("sketch_hdr_quantiles", _ORACLE)
 def sketch_hdr_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language n_chars percentiles via build -> merge -> query:
     per-(lang, source) states built independently (as shards would be),

@@ -30,21 +30,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 MAX_HOPS = 8  # customary fetcher cap; 2^3 -> 3 doubling rounds
 _ROUNDS = 3
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
 
 
 def resolve_redirects(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -158,7 +147,7 @@ _ORACLE = f"""
 """
 
 
-@_q("url_redirect_resolve", _ORACLE)
+@op("url_redirect_resolve", _ORACLE)
 def url_redirect_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     url = F.expr(_URL_SQL.replace("as varchar", "as string"))
@@ -290,7 +279,7 @@ _PG_ORACLE = f"""
 """
 
 
-@_q("page_pagination_series", _PG_ORACLE)
+@op("page_pagination_series", _PG_ORACLE)
 def page_pagination_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     fx = docs.select(

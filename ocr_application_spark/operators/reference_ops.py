@@ -18,26 +18,13 @@ from ocr_application_spark.operators.fixtures import (
     regions,
     tables,
 )
-
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _DEC = "decimal(18,2)"
 
 
 # --- F1+F3+F4+F5: record-level filter chain --------------------------------
-@_q(
+@op(
     "f_record_filters",
     f"""
     with {REGIONS_CTE}
@@ -67,7 +54,7 @@ def f_record_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- F6: field-name keyword classifier filter -------------------------------
-@_q(
+@op(
     "f6_field_keywords",
     """
     select p_partkey, p_name
@@ -96,7 +83,7 @@ def f6_field_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- W1: reading-order text reassembly --------------------------------------
-@_q(
+@op(
     "w1_reading_order",
     f"""
     with {REGIONS_CTE}
@@ -125,7 +112,7 @@ def w1_reading_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- W2: gap-based line sessionization ---------------------------------------
-@_q(
+@op(
     "w2_line_sessionize",
     f"""
     with {REGIONS_CTE},
@@ -174,7 +161,7 @@ def w2_line_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- W3: top-k by area per document ------------------------------------------
-@_q(
+@op(
     "w3_topk_area",
     f"""
     with {REGIONS_CTE}
@@ -201,7 +188,7 @@ def w3_topk_area(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- W4: top-1 argmax over a score vector -------------------------------------
-@_q(
+@op(
     "w4_top1_argmax",
     """
     select vec_id,
@@ -224,7 +211,7 @@ def w4_top1_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- J1: fuzzy similarity join (broadcast + top-1 + threshold) ----------------
-@_q(
+@op(
     "j1_fuzzy_catalog_match",
     """
     with probe as (select p_partkey, p_name from part where p_partkey % 20 = 11),
@@ -293,7 +280,7 @@ def j1_fuzzy_catalog_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- J3: box-inside-table range anti-join -------------------------------------
-@_q(
+@op(
     "j3_region_table_antijoin",
     f"""
     with {REGIONS_CTE},
@@ -338,7 +325,7 @@ _IOU_ORACLE_BODY = """
 """
 
 
-@_q(
+@op(
     "j4_iou_dedup",
     f"""
     with {REGIONS_CTE}
@@ -369,7 +356,7 @@ def j4_iou_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- A1+A2: totals + ratio-of-sums --------------------------------------------
-@_q(
+@op(
     "a1_a2_tarification_totals",
     """
     select cast(sum(cast(l_extendedprice as decimal(18,2))) as double) as total_facture,
@@ -398,7 +385,7 @@ def a1_a2_tarification_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- A3: mean excluding zeros ---------------------------------------------------
-@_q(
+@op(
     "a3_mean_nonzero",
     """
     select cast(sum(case when l_discount != 0 then cast(l_discount as decimal(18,2)) end) as double)
@@ -421,7 +408,7 @@ def a3_mean_nonzero(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- F11: JSON-block regex extraction --------------------------------------------
-@_q(
+@op(
     "f11_json_block_extract",
     r"""
     with raw as (
@@ -475,7 +462,7 @@ def f11_json_block_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- A4: monthly group-by sum ----------------------------------------------------
-@_q(
+@op(
     "a4_monthly_sums",
     """
     select strftime(date_trunc('month', ts), '%Y-%m-%d') as month,
@@ -499,7 +486,7 @@ def a4_monthly_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- A5: count metrics (lineage analog) -------------------------------------------
-@_q(
+@op(
     "a5_corpus_counts",
     """
     select lang, source, count(*) as n_docs,
@@ -518,7 +505,7 @@ def a5_corpus_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- A6: per-line bounding-box aggregate --------------------------------------------
-@_q(
+@op(
     "a6_doc_bbox",
     f"""
     with {REGIONS_CTE}
@@ -540,7 +527,7 @@ def a6_doc_bbox(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- J2: label<->value spatial pairing ------------------------------------------
-@_q(
+@op(
     "j2_label_value_pairing",
     f"""
     with {REGIONS_CTE},
@@ -624,7 +611,7 @@ def j2_label_value_pairing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- F7: table-size filter --------------------------------------------------------
-@_q(
+@op(
     "f7_table_size_filter",
     f"""
     with {TABLES_CTE}

@@ -19,19 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 DIM = 64
 _K = 5
@@ -68,9 +56,7 @@ def _dot_sql(a: str, b: str) -> str:
 
 
 # --- brute-force cosine top-k -------------------------------------------------
-@_q(
-    "ann_cosine_topk",
-    f"""
+_COSINE_TOPK_ORACLE = f"""
     with q0 as (
       select vec_id as q_id, {_QUANT_SQL.format(c='embedding')} as qv
       from embeddings where vec_id % {_QMOD} = 0
@@ -93,8 +79,10 @@ def _dot_sql(a: str, b: str) -> str:
              row_number() over (partition by q_id order by cos desc, cand_id) as rank
       from scored) t
     where rank <= {_K}
-    """,
-)
+    """
+
+
+@op("ann_cosine_topk", _COSINE_TOPK_ORACLE)
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k: broadcast the (small) query set against
     all candidates — a broadcast nested-loop join, no shuffle of the big
@@ -176,7 +164,7 @@ def _bucket_col(qv):
     return bucket
 
 
-@_q(
+@op(
     "ann_lsh_buckets",
     f"""
     with q as (
@@ -274,7 +262,7 @@ def _neardup_pairs_sql(multiprobe: bool) -> str:
     """
 
 
-@_q("emb_neardup_pairs", _neardup_pairs_sql(False))
+@op("emb_neardup_pairs", _neardup_pairs_sql(False))
 def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup mining: LSH-bucket equi-join (sub-quadratic
     candidates) -> exact quantized cosine -> threshold. Same-bucket
@@ -283,7 +271,7 @@ def emb_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _scored_bucket_pairs(b, b)
 
 
-@_q("emb_neardup_multiprobe", _neardup_pairs_sql(True))
+@op("emb_neardup_multiprobe", _neardup_pairs_sql(True))
 def emb_neardup_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiprobe variant of ``emb_neardup_pairs`` — the RECALL dial of
     the sign-LSH scheme: each vector also probes the 8 buckets at
@@ -345,7 +333,7 @@ _EMB_COMPONENTS_ORACLE = f"""
 """
 
 
-@_q("emb_neardup_components", _EMB_COMPONENTS_ORACLE)
+@op("emb_neardup_components", _EMB_COMPONENTS_ORACLE)
 def emb_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semantic dedup clusters: (doc_id, rep) with rep = smallest vec_id
     reachable through embedding near-dup pairs — the emb-space twin of

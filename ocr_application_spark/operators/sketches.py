@@ -28,19 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _HEX_WIDTH = 12
 _SPACE = 16**_HEX_WIDTH  # 2^48
@@ -231,7 +219,7 @@ _KMV_ORACLE = f"""
     """
 
 
-@_q("sketch_kmv_distinct", _KMV_ORACLE)
+@op("sketch_kmv_distinct", _KMV_ORACLE)
 def sketch_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV distinct-count sketch gate: estimate the number of distinct
     values (doc_id mod 997 — coprime with the 89-host split, so per-host
@@ -406,7 +394,7 @@ from verdict v left join seen sn on sn.key = v.key
 """
 
 
-@_q("sketch_bloom_seen", _BLOOM_ORACLE)
+@op("sketch_bloom_seen", _BLOOM_ORACLE)
 def sketch_bloom_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom seen-set gate: slice the corpus's seen keys by source,
     build one sparse Bloom state per slice, bit_or-MERGE the states,
@@ -490,7 +478,7 @@ where key not in (select key from seen)
 """
 
 
-@_q("dedup_bloom_antijoin", _BLOOM_ANTIJOIN_ORACLE)
+@op("dedup_bloom_antijoin", _BLOOM_ANTIJOIN_ORACLE)
 def dedup_bloom_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-prefiltered frontier dedup gate: same seen/increment split
     as sketch_bloom_seen, same deliberately-undersized filter (so the
@@ -645,7 +633,7 @@ from est e join truth t using (token)
 """
 
 
-@_q("sketch_cms_counts", _CMS_ORACLE)
+@op("sketch_cms_counts", _CMS_ORACLE)
 def sketch_cms_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min token-frequency gate: tokenize the corpus (the
     string_split-on-space spec the text ops share), build one sparse
@@ -689,7 +677,7 @@ _KMV_MERGED_ORACLE = f"""
     """
 
 
-@_q("sketch_kmv_merged", _KMV_MERGED_ORACLE)
+@op("sketch_kmv_merged", _KMV_MERGED_ORACLE)
 def sketch_kmv_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeability gate: sketch each (host, source) SLICE separately,
     then kmv_merge the slice states per host — and the oracle is the
@@ -788,7 +776,7 @@ _KMV_OVERLAP_ORACLE = f"""
 """
 
 
-@_q("sketch_kmv_overlap", _KMV_OVERLAP_ORACLE)
+@op("sketch_kmv_overlap", _KMV_OVERLAP_ORACLE)
 def sketch_kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV overlap gate: two overlapping crawl slices (membership by
     doc_id residue), sketched independently per host at k=32, overlap

@@ -18,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 _N_SALT = 16
 
@@ -68,7 +67,7 @@ def salted_group_sum(df: DataFrame, key: str, aggs: dict[str, str], n_salt: int 
 
 
 # --- oracle-checked query ----------------------------------------------------
-ORACLES["skew_salted_host_stats"] = """
+_ORACLE = """
     with hosts as (
       select 'src' || cast(l_suppkey % 100 as varchar) as host,
              cast(l_extendedprice as decimal(18,2)) as price
@@ -92,4 +91,4 @@ def skew_salted_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("host", "n_rows", F.col("total_price").cast("double").alias("total_price"))
 
 
-QUERIES["skew_salted_host_stats"] = skew_salted_host_stats
+op("skew_salted_host_stats", _ORACLE)(skew_salted_host_stats)

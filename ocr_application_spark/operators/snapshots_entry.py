@@ -22,8 +22,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 
 def _base_inc(df: DataFrame, id_col: str):
@@ -107,8 +106,7 @@ def snapshot_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_snapshot(spark, tbl)
 
 
-QUERIES["snapshot_merge_upsert"] = snapshot_merge_upsert
-ORACLES["snapshot_merge_upsert"] = _ORACLE
+op("snapshot_merge_upsert", _ORACLE)(snapshot_merge_upsert)
 
 
 _INGEST_ORACLE = """
@@ -159,8 +157,7 @@ def dedup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["dedup_incremental_ingest"] = dedup_incremental_ingest
-ORACLES["dedup_incremental_ingest"] = _INGEST_ORACLE
+op("dedup_incremental_ingest", _INGEST_ORACLE)(dedup_incremental_ingest)
 
 
 def _minhash_ingest_oracle() -> str:
@@ -240,8 +237,7 @@ def neardup_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["neardup_incremental_ingest"] = neardup_incremental_ingest
-ORACLES["neardup_incremental_ingest"] = _minhash_ingest_oracle()
+op("neardup_incremental_ingest", _minhash_ingest_oracle())(neardup_incremental_ingest)
 
 
 def _embedding_ingest_oracle() -> str:
@@ -329,8 +325,7 @@ def semantic_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["semantic_incremental_ingest"] = semantic_incremental_ingest
-ORACLES["semantic_incremental_ingest"] = _embedding_ingest_oracle()
+op("semantic_incremental_ingest", _embedding_ingest_oracle())(semantic_incremental_ingest)
 
 
 def _winnow_ingest_oracle() -> str:
@@ -433,8 +428,7 @@ def overlap_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["overlap_incremental_ingest"] = overlap_incremental_ingest
-ORACLES["overlap_incremental_ingest"] = _winnow_ingest_oracle()
+op("overlap_incremental_ingest", _winnow_ingest_oracle())(overlap_incremental_ingest)
 
 
 _DELETE_ORACLE = """
@@ -480,8 +474,7 @@ def snapshot_delete_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_snapshot(spark, tbl)
 
 
-QUERIES["snapshot_delete_rows"] = snapshot_delete_rows
-ORACLES["snapshot_delete_rows"] = _DELETE_ORACLE
+op("snapshot_delete_rows", _DELETE_ORACLE)(snapshot_delete_rows)
 
 
 _ZORDER_ORACLE = """
@@ -529,8 +522,7 @@ def snapshot_zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scan_snapshot(spark, tbl, {"x": (10, 15), "y": (30, 60)})
 
 
-QUERIES["snapshot_zorder_scan"] = snapshot_zorder_scan
-ORACLES["snapshot_zorder_scan"] = _ZORDER_ORACLE
+op("snapshot_zorder_scan", _ZORDER_ORACLE)(snapshot_zorder_scan)
 
 
 _WAP_ORACLE = """
@@ -582,8 +574,7 @@ def snapshot_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_snapshot(spark, tbl)
 
 
-QUERIES["snapshot_wap_publish"] = snapshot_wap_publish
-ORACLES["snapshot_wap_publish"] = _WAP_ORACLE
+op("snapshot_wap_publish", _WAP_ORACLE)(snapshot_wap_publish)
 
 
 # --- corpus drift report between two snapshot versions ------------------------
@@ -718,5 +709,4 @@ def snapshot_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["snapshot_drift_report"] = snapshot_drift_report
-ORACLES["snapshot_drift_report"] = _DRIFT_ORACLE
+op("snapshot_drift_report", _DRIFT_ORACLE)(snapshot_drift_report)

@@ -45,18 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 def _sql_quote(pat: str) -> str:
@@ -247,7 +236,7 @@ _LD_ORACLE = f"""
 """
 
 
-@_q("page_og_extract", _OG_ORACLE)
+@op("page_og_extract", _OG_ORACLE)
 def page_og_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fx = _fixture(spark, sf_dir, _OG_FIX_SQL)
     return extract_opengraph(fx).select(
@@ -256,7 +245,7 @@ def page_og_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_q("page_jsonld_extract", _LD_ORACLE)
+@op("page_jsonld_extract", _LD_ORACLE)
 def page_jsonld_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     fx = _fixture(spark, sf_dir, _LD_FIX_SQL)
     return extract_jsonld(fx).select(

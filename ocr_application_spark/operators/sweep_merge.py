@@ -19,9 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ocr_application_spark.operators.fixtures import REGIONS_CTE, regions
-
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 IOU_MERGE = 0.5
 
@@ -63,9 +61,6 @@ def w5_sweep_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES["w5_sweep_merge"] = w5_sweep_merge
-
-
 # The sequential fold IS SQL-expressible after all — as a recursive CTE
 # whose state is the list of merged boxes so far (one step per rank,
 # max ~7 ranks/doc in the fixture). Verbose but exact: same sort key,
@@ -84,7 +79,7 @@ def _iou_gt_half(last: str, nb: str) -> str:
 
 _LAST = "out[len(out)]"
 
-ORACLES["w5_sweep_merge"] = f"""
+_ORACLE = f"""
 with recursive {REGIONS_CTE},
 boxes as (
   select doc_id, cast(x0 as double) x0, cast(y0 as double) y0,
@@ -114,3 +109,6 @@ exploded as (
 select doc_id, box_id, bx.x0 as x0, bx.y0 as y0, bx.x1 as x1, bx.y1 as y1
 from exploded
 """
+
+
+op("w5_sweep_merge", _ORACLE)(w5_sweep_merge)

@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
+from ocr_application_spark.operators.registry import op
 
 # handle to the previous invocation's persisted match-set, released at
 # the start of the next call (bounds cache growth in long sessions)
@@ -227,5 +226,4 @@ def tarification_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return summarize(tarified).crossJoin(reserve_estimate(tarified)).crossJoin(ms)
 
 
-QUERIES["tarification_pipeline"] = tarification_pipeline
-ORACLES["tarification_pipeline"] = _ORACLE
+op("tarification_pipeline", _ORACLE)(tarification_pipeline)

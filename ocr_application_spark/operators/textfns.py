@@ -11,18 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,7 +27,7 @@ def _tokens_col():
 
 
 # --- token counting ------------------------------------------------------------
-@_q(
+@op(
     "text_token_stats",
     f"""
     select doc_id,
@@ -76,7 +65,7 @@ def _stopword_ratio():
     return n_stop.cast("double") / F.size(w)
 
 
-@_q(
+@op(
     "text_langid_heuristic",
     f"""
     with toks as (
@@ -222,7 +211,7 @@ def lang_segments(docs: DataFrame) -> DataFrame:
     )
 
 
-@_q("text_lang_segments", _LANGSEG_ORACLE)
+@op("text_lang_segments", _LANGSEG_ORACLE)
 def text_lang_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-line language ID -> contiguous same-language segments."""
     return lang_segments(_docs(spark, sf_dir))
@@ -307,7 +296,7 @@ _SENT_ORACLE = f"""
 """
 
 
-@_q("text_sentence_split", _SENT_ORACLE)
+@op("text_sentence_split", _SENT_ORACLE)
 def text_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rule-based sentence segmentation over derived sentence-ful text
     (see _SENT_FIX_SQL note)."""
@@ -389,7 +378,7 @@ def fk_readability(docs: DataFrame) -> DataFrame:
     )
 
 
-@_q("text_fk_readability", _FK_ORACLE)
+@op("text_fk_readability", _FK_ORACLE)
 def text_fk_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch-Kincaid grade in exact integer micro-units over the
     derived sentence-ful fixture."""
@@ -402,7 +391,7 @@ def text_fk_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- quality scoring ----------------------------------------------------------------
-@_q(
+@op(
     "text_quality_score",
     f"""
     select doc_id,
@@ -431,7 +420,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- document fingerprinting -----------------------------------------------------------
-@_q(
+@op(
     "text_fingerprint",
     """
     select doc_id,
@@ -460,7 +449,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 # built-in column expressions + two keyed aggregations; at corpus scale
 # the only data-sized shuffles are groupBy(doc_id) over tokens and
 # groupBy(fingerprint), both partial-aggregated map-side.
-@_q(
+@op(
     "corpus_clean_pipeline",
     f"""
     with toks as (
@@ -537,7 +526,7 @@ def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- corpus vocabulary -------------------------------------------------------
-@_q(
+@op(
     "text_vocabulary",
     f"""
     with toks as (
@@ -618,7 +607,7 @@ def text_vocabulary(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shuffles on doc_id. Three bounded exchanges, no window, no UDF.
 _TFIDF_DIMS = 16
 
-@_q(
+@op(
     "text_hashed_tfidf",
     f"""
     with toks as (
@@ -844,7 +833,7 @@ def _bm25_oracle_sql(k: int = 5) -> str:
     """
 
 
-@_q("text_bm25_topk", _bm25_oracle_sql())
+@op("text_bm25_topk", _bm25_oracle_sql())
 def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25-shaped retrieval over the documents table for three fixed
     literal queries: integer fixed-point scoring (bit-exact cross-engine
@@ -873,7 +862,7 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ZIPF_TOP = 100
 
 
-@_q(
+@op(
     "corpus_zipf_report",
     f"""
     with toks as (

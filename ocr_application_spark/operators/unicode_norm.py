@@ -47,19 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _COMBINING_ACUTE = "́"  # chr(769)
 _COMBINING_RING = "̊"  # chr(778)
@@ -96,7 +84,7 @@ def _decomposed(text):
     return F.replace(acute, F.lit("a"), F.lit("a" + _COMBINING_RING))
 
 
-@_q(
+@op(
     "text_nfc_normalize",
     """
     with raw as (
@@ -205,7 +193,7 @@ def script_mix_cols(text):
     return counts, total, dominant, mixed
 
 
-@_q(
+@op(
     "text_script_mix",
     (
         lambda: (
@@ -335,7 +323,7 @@ def _conf_oracle() -> str:
     """
 
 
-@_q("text_confusable_fold", _conf_oracle())
+@op("text_confusable_fold", _conf_oracle())
 def text_confusable_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: derive homoglyph-spam variants (half the corpus gets
     Latin->Cyrillic/Greek swaps), count confusables, fold, digest.

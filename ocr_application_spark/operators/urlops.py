@@ -27,18 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
+from ocr_application_spark.operators.registry import op
 
 
 # --- messy-URL synthesis (twin expressions, exact string arithmetic) --------
@@ -159,7 +148,7 @@ _CANON_SQL = """
 """
 
 
-@_q(
+@op(
     "url_canonicalize",
     f"""
     with raw as (
@@ -176,7 +165,7 @@ def url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.select("doc_id", "url_raw", canonical_url(F.col("url_raw")).alias("url_canonical"))
 
 
-@_q(
+@op(
     "url_canonical_dupes",
     f"""
     with raw as (
@@ -225,7 +214,7 @@ _HOLDOUT_SQL_SPLIT = """
 """
 
 
-@_q(
+@op(
     "url_holdout_split",
     f"""
     with raw as (
@@ -337,7 +326,7 @@ from r
 """
 
 
-@_q("url_crawl_filter", _URLF_ORACLE)
+@op("url_crawl_filter", _URLF_ORACLE)
 def url_crawl_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-URL crawl-filter rule booleans + keep verdict (see module
     comment: domain blocklist, asset extension, junk path, session id)."""
@@ -471,7 +460,7 @@ from ranked
 """
 
 
-@_q("crawl_politeness_schedule", _SCHED_ORACLE)
+@op("crawl_politeness_schedule", _SCHED_ORACLE)
 def crawl_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Politeness gate: a synthetic 7-host frontier with integer
     priorities, scheduled at 3 fetches/host/tick from a fixed epoch —
@@ -687,7 +676,7 @@ from best where rn = 1
 """
 
 
-@_q("crawl_robots_filter", _ROBOTS_ORACLE)
+@op("crawl_robots_filter", _ROBOTS_ORACLE)
 def crawl_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REP gate: a synthetic 5-host frontier against the rule card above
     — per url, (allowed, matched_prefix) under longest-pattern-wins /
@@ -1097,7 +1086,7 @@ def _robots_fixture_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     return files
 
 
-@_q("crawl_robots_parse", _ROBOTS_PARSE_ORACLE)
+@op("crawl_robots_parse", _ROBOTS_PARSE_ORACLE)
 def crawl_robots_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Roundtrip fixture for robots_parse: build the per-host robots.txt
     files above deterministically from `documents` (exact string twin in
@@ -1190,7 +1179,7 @@ left join found fo on fo.host_id = f.host_id
 # "seconds" reading) the same semantics.
 
 
-@_q("crawl_delay_directives", _CRAWL_DELAY_ORACLE)
+@op("crawl_delay_directives", _CRAWL_DELAY_ORACLE)
 def crawl_delay_directives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-host crawl-delay from the winning robots group: integer
     seconds, NULL for garbage values or hosts without a matching
@@ -1371,7 +1360,7 @@ _SURT_PACK_SQL = " + ".join(
 )
 
 
-@_q(
+@op(
     "url_surt_index",
     f"""
     with raw as (
@@ -1467,7 +1456,7 @@ _SITEMAP_ORACLE = f"""
 """
 
 
-@_q("url_sitemap_extract", _SITEMAP_ORACLE)
+@op("url_sitemap_extract", _SITEMAP_ORACLE)
 def url_sitemap_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sitemap parsing: per-host sitemap.xml -> one (url, lastmod,
     priority_bp) row per <url> entry (see section comment)."""
@@ -1591,7 +1580,7 @@ _SITEMAP_INDEX_ORACLE = f"""
 """
 
 
-@_q("url_sitemap_index", _SITEMAP_INDEX_ORACLE)
+@op("url_sitemap_index", _SITEMAP_INDEX_ORACLE)
 def url_sitemap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level sitemap discovery: <sitemapindex> -> child <urlset>s
     -> one row per page url, with dead child refs surfaced as
@@ -1761,7 +1750,7 @@ def _recrawl_pred():
     )
 
 
-@_q("crawl_recrawl_candidates", _RECRAWL_ORACLE)
+@op("crawl_recrawl_candidates", _RECRAWL_ORACLE)
 def crawl_recrawl_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recrawl selection: sitemap lastmod vs the stored last-fetch day
     per crawl bucket (see section comment)."""
@@ -1880,7 +1869,7 @@ _ACQ_ORACLE = f"""
 """
 
 
-@_q("crawl_acquisition_pipeline", _ACQ_ORACLE)
+@op("crawl_acquisition_pipeline", _ACQ_ORACLE)
 def crawl_acquisition_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sitemap -> recrawl -> robots -> politeness as one plan over the
     parsed url strings (see section comment). Reuses the library ops:
@@ -2038,7 +2027,7 @@ from ranked
 """
 
 
-@_q("crawl_frontier_priority", _FP_ORACLE)
+@op("crawl_frontier_priority", _FP_ORACLE)
 def crawl_frontier_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: derive a 7-host frontier with varying depth and stale/
     fresh day grids (doc_id%5==0 urls withheld so one host's mass
@@ -2124,7 +2113,7 @@ def _priority_pipeline_oracle() -> str:
     """
 
 
-@_q("crawl_priority_pipeline", _priority_pipeline_oracle())
+@op("crawl_priority_pipeline", _priority_pipeline_oracle())
 def crawl_priority_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The real crawl-priority chain end-to-end: integer-exact
     host_pagerank over the 97-host doc_id-arithmetic link graph (the
@@ -2240,7 +2229,7 @@ _SMD_ORACLE = f"""
 """
 
 
-@_q("crawl_sitemap_discovery", _SMD_ORACLE)
+@op("crawl_sitemap_discovery", _SMD_ORACLE)
 def crawl_sitemap_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gate: 32 synthetic hosts' robots files (variants above) ->
     discovered sitemap urls; whitespace-padded and mixed-case

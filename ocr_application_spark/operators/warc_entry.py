@@ -18,19 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-QUERIES: dict = {}
-ORACLES: dict = {}
-
-
-def _q(name: str, oracle: str | None = None):
-    def deco(fn):
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
+from ocr_application_spark.operators.registry import op
 
 _ROUNDTRIP_ORACLE = """
     select 'https://docs.example/' || printf('%08d', doc_id) as url,
@@ -49,7 +37,7 @@ def _two(col):
     return F.lpad(col.cast("string"), 2, "0")
 
 
-@_q("warc_wet_roundtrip", _ROUNDTRIP_ORACLE)
+@op("warc_wet_roundtrip", _ROUNDTRIP_ORACLE)
 def warc_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> WET records -> packed segments -> parse kernel ->
     per-url digest; the oracle states what lossless framing must emit."""
@@ -119,7 +107,7 @@ _RESP_ORACLE = """
 """
 
 
-@_q("warc_response_roundtrip", _RESP_ORACLE)
+@op("warc_response_roundtrip", _RESP_ORACLE)
 def warc_response_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> binary response records -> packed segments -> parse
     kernel -> per-url facts (see section comment)."""
@@ -240,7 +228,7 @@ _REVISIT_ORACLE = """
 """
 
 
-@_q("warc_revisit_resolve", _REVISIT_ORACLE)
+@op("warc_revisit_resolve", _REVISIT_ORACLE)
 def warc_revisit_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> mixed response+revisit segments -> unified parse
     kernel -> as-of digest-join resolution (see section comment)."""

@@ -7,6 +7,12 @@ import pytest
 from ocr_application_spark.session import get_spark
 from ocr_application_spark.sources.webpages import default_scratch
 
+# get_spark's 48g default heap lets the local-mode block store keep
+# cached and checkpointed blocks until the JVM outgrows a 16 GB host
+# (the kernel OOM-kills it mid-suite); a bounded heap makes Spark
+# evict to disk instead. The test data is sf0.01 at most.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

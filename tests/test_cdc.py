@@ -86,7 +86,7 @@ def test_mean_chunk_size_tracks_the_mask(spark):
 
 
 def test_gate_ratio_bounds_and_self_consistency(spark):
-    out = C.QUERIES["dedup_cdc_chunks"](spark, SF)
+    out = C.dedup_cdc_chunks(spark, SF)
     bad = out.filter(
         (F.col("shared_chars") > F.col("total_chars"))
         | (F.col("shared_bp") < 0)
@@ -97,7 +97,7 @@ def test_gate_ratio_bounds_and_self_consistency(spark):
 
 
 def test_plan_no_cartesian_and_bounded_exchanges(spark):
-    df = C.QUERIES["dedup_cdc_chunks"](spark, SF)
+    df = C.dedup_cdc_chunks(spark, SF)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -299,7 +299,7 @@ def test_cdc_bucketed_probe_is_verdict_identical_and_replay_stable(
     assert (p0, p1) == (c0, c1)  # flags compose
     st = _read_mirror_state(str(tmp_path / "s_buck"))
     assert (st["covers_version"], st["n_buckets"]) == (v, 8)
-    assert st["n_rows"] > 0
+    assert st["n_hashes"] > 0
     # all-dup replay through the bucketed path: nothing appended
     store = str(tmp_path / "s_buck")
     n_before = read_snapshot(spark, store).count()
@@ -434,6 +434,51 @@ def test_cdc_bucketed_mirror_in_session_data_loss_rebuilds(spark, tmp_path):
     assert clone["n_known"] == clone["n_chunks"]
     hashes = read_snapshot(spark, store).select("chunk_hash")
     assert hashes.count() == hashes.distinct().count()  # no dup commits
+
+
+def test_cdc_bucketed_mirror_double_append_cannot_mask_lost_file(spark, tmp_path):
+    """A tolerated double-append leaves duplicate hash rows in the
+    mirror, so its raw row count can still reach the stamp after a data
+    file is lost. The integrity check counts DISTINCT hashes: with one
+    mirror file duplicated and another deleted, the next bucketed ingest
+    must rebuild, and its verdicts and store match the plain path."""
+    import glob
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from ocr_application_spark.operators.cdc import _mirror_names, cdc_store_ingest
+    from ocr_application_spark.sources.snapshots import read_snapshot
+
+    bdf, _ = _ingest_fixture(spark)
+    store, twin = str(tmp_path / "s_dupfile"), str(tmp_path / "s_dupfile_twin")
+    cdc_store_ingest(spark, store, bdf, bucketed_probe=True, probe_buckets=8)
+    cdc_store_ingest(spark, twin, bdf)
+    _, _, ddir = _mirror_names(store)
+    files = sorted(
+        (pq.ParquetFile(f).metadata.num_rows, f)
+        for f in glob.glob(f"{ddir}/data/*.parquet")
+    )
+    files = [(n, f) for n, f in files if n > 0]
+    assert len(files) >= 2, files
+    (_, smallest), (_, largest) = files[0], files[-1]
+    # the double-append: a second copy of the largest bucket file (same
+    # bucket id in its name, so the bucketed scan still reads it) ...
+    d, name = os.path.split(largest)
+    shutil.copy(largest, os.path.join(d, "dup-" + name))
+    # ... outweighs the rows of the lost smallest one
+    os.remove(smallest)
+    # replay the base: every chunk is in the store, so a mirror missing
+    # the lost file's hashes would report them novel and re-commit them
+    rep_b, _ = cdc_store_ingest(spark, store, bdf, bucketed_probe=True, probe_buckets=8)
+    rep_p, _ = cdc_store_ingest(spark, twin, bdf)
+    assert sorted(tuple(r) for r in rep_b.collect()) == sorted(
+        tuple(r) for r in rep_p.collect()
+    )
+    assert sorted(tuple(r) for r in read_snapshot(spark, store).collect()) == sorted(
+        tuple(r) for r in read_snapshot(spark, twin).collect()
+    )
 
 
 def test_cdc_mirror_refuses_to_delete_unclaimed_dir(spark, tmp_path):

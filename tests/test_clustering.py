@@ -43,7 +43,7 @@ def test_kmeans_improves_over_seed(spark):
 
 
 def test_every_vector_assigned_exactly_once(spark):
-    asg = C.QUERIES["emb_kmeans_assign"](spark, SF)
+    asg = C.emb_kmeans_assign(spark, SF)
     n = spark.read.parquet(f"{SF}/embeddings.parquet").count()
     assert asg.count() == n
     assert asg.select("vec_id").distinct().count() == n
@@ -89,7 +89,7 @@ def test_semdedup_drops_constructed_near_dup(spark, tmp_path):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     p = str(tmp_path / "embdir")
     df.write.parquet(p + "/embeddings.parquet")
-    out = {r["vec_id"]: r for r in C.QUERIES["emb_semdedup"](spark, p).collect()}
+    out = {r["vec_id"]: r for r in C.emb_semdedup(spark, p).collect()}
     assert out[100]["cluster_id"] == out[101]["cluster_id"]
     assert out[100]["kept"] is True
     assert out[101]["kept"] is False  # the larger-id twin drops
@@ -151,7 +151,7 @@ def test_semdedup_universe_and_keeper_rule(spark):
     """Every vector gets a verdict; within any (cluster, verdict=False)
     row there exists a smaller kept-or-not vec in the same cluster that
     triggered it — spot-check via recompute of one dropped vec."""
-    out = C.QUERIES["emb_semdedup"](spark, SF)
+    out = C.emb_semdedup(spark, SF)
     n = spark.read.parquet(f"{SF}/embeddings.parquet").count()
     assert out.count() == n
     # the smallest vec_id of every cluster can never be dropped
@@ -166,7 +166,7 @@ def test_kmeans_query_has_no_vector_shuffle(spark):
     import contextlib
     import io
 
-    df = C.QUERIES["emb_kmeans_assign"](spark, SF)
+    df = C.emb_kmeans_assign(spark, SF)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -6,6 +6,7 @@ import io
 import pyspark.sql.functions as F
 
 from ocr_application_spark.operators import markdown as M
+from tests.test_oracle_parity import SF_DIR
 
 
 def _md(spark, html):
@@ -53,7 +54,7 @@ def test_uppercase_and_unquoted_attributes(spark):
 
 
 def test_gate_counts_are_consistent(spark):
-    out = M.QUERIES["page_markdown"](spark, "/root/testdata/sf0.001")
+    out = M.page_markdown(spark, SF_DIR)
     bad = out.filter(
         (F.col("n_links") < 0)
         | (F.col("n_md_lines") < 1)
@@ -66,7 +67,7 @@ def test_gate_counts_are_consistent(spark):
 
 
 def test_markdown_plan_is_scan_fused(spark):
-    df = M.QUERIES["page_markdown"](spark, "/root/testdata/sf0.001")
+    df = M.page_markdown(spark, SF_DIR)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")

@@ -44,8 +44,7 @@ def test_driver_window_covers_flagships_and_new_ops():
     evict an anchor or one of the 30 rotate-ins that had never had a
     driver row before r05 (the 26 post-freeze r04 ops + the 4 engine
     demonstrators — VERDICT r04 "Next round" #1). Everything outside
-    must be prior-driver-green, a plan-audited demonstrator, or
-    rows-only-by-design."""
+    must be prior-driver-green or rows-only-by-design."""
     names = list(_QUERIES)
     window, outside = set(names[:50]), set(names[50:])
     # the _WINDOW tuple must BE the first 50, in its own order
@@ -93,15 +92,8 @@ def test_driver_window_covers_flagships_and_new_ops():
     # every in-window entry must be oracle-paired (a rows-only row would
     # waste a slot on the weak check)
     assert window <= set(_ORACLES), window - set(_ORACLES)
-    demonstrators = {n for n in names if n.startswith(("q1", "q3", "q4", "q5", "q6", "q7"))} | {
-        "topk_orders_per_customer",
-        "events_sessionize",
-        "pivot_lang_by_source",
-        "events_retention_cohorts",
-    }
     allowed_outside = (
-        demonstrators
-        | set(entrymod._PRIOR_DRIVER_GREEN)
+        set(entrymod._PRIOR_DRIVER_GREEN)
         | set(entrymod._ROWS_ONLY_BY_DESIGN)
         | set(entrymod._NEW_R05_OUTSIDE)
     )
@@ -121,7 +113,6 @@ def test_digest_oracle_survives_adversarial_text(spark, tmpdir_scratch):
     import duckdb
     import pandas as pd
 
-    from ocr_application_spark.operators import kernels_entry as ke
     from tests.oracle_harness import compare
 
     rows = [
@@ -146,9 +137,9 @@ def test_digest_oracle_survives_adversarial_text(spark, tmpdir_scratch):
     con = duckdb.connect()
     con.sql(f"create view documents as select * from '{tmpdir_scratch}/documents.parquet'")
     errs, _ = compare(
-        ke.QUERIES["pipeline_extract_digest"](spark, tmpdir_scratch),
+        _QUERIES["pipeline_extract_digest"](spark, tmpdir_scratch),
         con,
-        ke.ORACLES["pipeline_extract_digest"],
+        _ORACLES["pipeline_extract_digest"],
         "digest_adversarial",
     )
     assert errs == [], errs
@@ -266,7 +257,7 @@ def test_arima_oracle_survives_adversarial_series(spark, tmpdir_scratch):
     errs, max_delta = compare(
         fc.forecast_arima_like(spark, tmpdir_scratch),
         con,
-        fc.ORACLES["forecast_arima_like"],
+        _ORACLES["forecast_arima_like"],
         "forecast_arima_like_adversarial",
         float_rtol=0.0,  # the fit is engineered bit-identical
     )
@@ -284,7 +275,6 @@ def test_curation_oracles_survive_adversarial_text(spark, tmpdir_scratch):
     import duckdb
     import pandas as pd
 
-    from ocr_application_spark.operators import curation as cu
     from tests.oracle_harness import compare
 
     rows = [
@@ -364,7 +354,7 @@ def test_curation_oracles_survive_adversarial_text(spark, tmpdir_scratch):
         "dedup_consecutive_lines",
     ):
         errs, delta = compare(
-            cu.QUERIES[name](spark, tmpdir_scratch), con, cu.ORACLES[name], name
+            _QUERIES[name](spark, tmpdir_scratch), con, _ORACLES[name], name
         )
         assert not errs, f"{name}: {errs} (max float rel delta {delta:.2e})"
     con.close()
@@ -398,7 +388,6 @@ def test_normalize_oracle_survives_adversarial_text(spark, tmpdir_scratch):
     import duckdb
     import pandas as pd
 
-    from ocr_application_spark.operators import kernels_entry as ke
     from tests.oracle_harness import compare
 
     rows = [
@@ -418,9 +407,9 @@ def test_normalize_oracle_survives_adversarial_text(spark, tmpdir_scratch):
     con = duckdb.connect()
     con.sql(f"create view documents as select * from '{tmpdir_scratch}/documents.parquet'")
     errs, _ = compare(
-        ke.QUERIES["kernel_normalize"](spark, tmpdir_scratch),
+        _QUERIES["kernel_normalize"](spark, tmpdir_scratch),
         con,
-        ke.ORACLES["kernel_normalize"],
+        _ORACLES["kernel_normalize"],
         "normalize_adversarial",
     )
     assert errs == [], errs

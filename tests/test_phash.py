@@ -51,7 +51,7 @@ def _pairs_for(spark, tmp_path, texts):
     )
     p = str(tmp_path / "docs")
     df.write.parquet(p + "/documents.parquet")
-    return P.QUERIES["multimodal_phash_pairs"](spark, p)
+    return P.multimodal_phash_pairs(spark, p)
 
 
 def test_posting_cap_drops_flat_buckets(spark, tmp_path):

@@ -36,16 +36,6 @@ def plan_of(spark, name: str) -> str:
     return buf.getvalue()
 
 
-def test_q6_filter_pushdown_and_pruning(spark):
-    plan = plan_of(spark, "q6_revenue_change")
-    assert "PushedFilters: [" in plan
-    # shipdate/discount/quantity predicates reach the lineitem scan
-    assert re.search(r"PushedFilters: \[[^\]]*l_shipdate", plan), plan
-    # column pruning: the scan must not read l_comment
-    m = re.search(r"ReadSchema: ([^\n]*)", plan)
-    assert m and "l_comment" not in m.group(1), m and m.group(1)
-
-
 def test_dedup_exact_prunes_to_two_columns(spark):
     plan = plan_of(spark, "dedup_exact")
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
@@ -66,25 +56,8 @@ def test_j3_j4_are_not_cartesian(spark):
         assert ("BroadcastHashJoin" in plan) or ("SortMergeJoin" in plan), name
 
 
-def test_q4_uses_semi_join(spark):
-    plan = plan_of(spark, "q4_priority_semijoin")
-    assert "LeftSemi" in plan, plan
-    assert re.search(r"PushedFilters: \[[^\]]*l_returnflag", plan), plan
-
-
-def test_q10_take_ordered_and_broadcast_nation(spark):
-    plan = plan_of(spark, "q10_returned_customers")
-    assert "TakeOrderedAndProject" in plan  # limit fused, no global sort
-    assert "BroadcastHashJoin" in plan  # nation dim ships, never shuffles
-
-
 def test_w3_topk_uses_window_group_limit(spark):
     plan = plan_of(spark, "w3_topk_area")
-    assert "WindowGroupLimit" in plan
-
-
-def test_topk_orders_uses_window_group_limit(spark):
-    plan = plan_of(spark, "topk_orders_per_customer")
     assert "WindowGroupLimit" in plan
 
 
@@ -126,11 +99,10 @@ def test_extract_stage_is_shuffle_free(spark):
 def test_whole_stage_codegen_in_relational_queries(spark):
     # AQE finalizes the physical plan at execution; the `*(n)` prefixes in
     # the executed plan are the whole-stage-codegen stage markers
-    for name in ("q1_pricing_summary", "f_record_filters"):
-        df = _QUERIES[name](spark, SF_DIR)
-        df.collect()
-        executed = df._jdf.queryExecution().executedPlan().toString()
-        assert "*(" in executed, f"{name}: no codegen stages\n{executed}"
+    df = _QUERIES["f_record_filters"](spark, SF_DIR)
+    df.collect()
+    executed = df._jdf.queryExecution().executedPlan().toString()
+    assert "*(" in executed, f"no codegen stages\n{executed}"
 
 
 def test_url_canonicalize_is_narrow_and_udf_free(spark):
@@ -223,18 +195,6 @@ def test_corpus_clean_bounded_exchanges_no_udf(spark):
     assert "hashpartitioning(doc_id" not in plan, plan
     n_exchanges = len(re.findall(r"\(\d+\) Exchange", plan))
     assert n_exchanges <= 4, f"{n_exchanges} exchanges:\n{plan}"
-
-
-def test_q14_broadcasts_part_and_pushes_shipdate(spark):
-    plan = plan_of(spark, "q14_promo_revenue")
-    assert "BroadcastHashJoin" in plan, plan
-    assert re.search(r"PushedFilters: \[[^\]]*l_shipdate", plan), plan
-
-
-def test_q18_take_ordered_after_having(spark):
-    plan = plan_of(spark, "q18_large_orders")
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "BroadcastHashJoin" in plan, plan  # post-having side is tiny
 
 
 def test_vocabulary_top_k_is_take_ordered(spark):

@@ -1,12 +1,17 @@
-"""Static guard: no per-position ``substring`` inside a ``sequence`` lambda.
+"""Static guards over every module of the package.
 
-``substring(t, p, k)`` on a Spark string walks UTF-8 code points from the
-start of ``t``, so calling it once per position of a
+No per-position ``substring`` inside a ``sequence`` lambda:
+``substring(t, p, k)`` on a Spark string walks UTF-8 code points from
+the start of ``t``, so calling it once per position of a
 ``transform(sequence(1, n), p -> ...)`` costs O(n) per call and O(n^2)
 per document. Per-position readers split the text into code points once
-(``dedup._with_code_points``) and index the array. This test scans every
-module of the package, both SQL text in string literals and the Python
-column API, so the quadratic pattern cannot come back.
+(``dedup._with_code_points``) and index the array. The scan covers both
+SQL text in string literals and the Python column API, so the quadratic
+pattern cannot come back.
+
+One query registry: only ``operators/registry.py`` holds ``QUERIES``
+and ``ORACLES``; operator modules register through its ``op`` and
+define no ``_q`` decorator of their own.
 """
 
 import ast
@@ -151,5 +156,54 @@ def test_no_per_position_substring_in_sequence_lambdas():
         str(f.relative_to(PKG)): h
         for f in files
         if (h := _scan(f.read_text(encoding="utf-8")))
+    }
+    assert hits == {}, hits
+
+
+_REGISTRY_NAMES = {"QUERIES", "ORACLES"}
+
+
+def registry_offenders(tree):
+    """Module-level assignments to ``QUERIES``/``ORACLES`` (plain,
+    annotated, augmented or by key) and any ``_q`` definition."""
+    hits = [
+        f"def _q (line {n.lineno})"
+        for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)) and n.name == "_q"
+    ]
+    for node in tree.body:
+        if isinstance(node, ast.Assign):
+            targets = node.targets
+        elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+            targets = [node.target]
+        else:
+            continue
+        for t in targets:
+            base = t.value if isinstance(t, ast.Subscript) else t
+            if isinstance(base, ast.Name) and base.id in _REGISTRY_NAMES:
+                hits.append(f"{ast.unparse(t)} = ... (line {node.lineno})")
+    return hits
+
+
+def test_detector_flags_module_local_registries():
+    bad = (
+        "QUERIES: dict = {}\nORACLES = {}\nQUERIES['a'] = f\n"
+        "def _q(name, oracle=None):\n    pass\n"
+    )
+    assert len(registry_offenders(ast.parse(bad))) == 4
+    ok = (
+        "from ocr_application_spark.operators.registry import op\n"
+        "op('a', 'select 1')(f)\n_BM25_QUERIES = ()\n"
+        "def g():\n    QUERIES = {}\n"
+    )
+    assert registry_offenders(ast.parse(ok)) == []
+
+
+def test_only_the_registry_holds_queries_and_oracles():
+    hits = {
+        str(f.relative_to(PKG)): h
+        for f in sorted(PKG.rglob("*.py"))
+        if f != PKG / "operators" / "registry.py"
+        and (h := registry_offenders(ast.parse(f.read_text(encoding="utf-8"))))
     }
     assert hits == {}, hits
