@@ -24,6 +24,11 @@ groupBy. The chunk-hash key space is ~text_bytes/40
 — the shuffles are O(corpus bytes / mean chunk), never O(pairs), and
 a hot boilerplate chunk costs one counter, not a posting blowup.
 
+``cdc_store_ingest`` keeps the chunks across crawls: a content-
+addressed store of distinct chunk hashes, probed by one semi-join
+against the store's latest snapshot, so a recrawl appends only the
+chunks the store has never seen.
+
 Integer-exact by spec: chunk hashes are 40-bit md5 slices (conv in
 Spark == '0x'||substr cast in DuckDB — the winnowing convention);
 shared ratios are basis points via integer division of non-negative
@@ -183,243 +188,18 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every distinct chunk once; a recrawl increment only appends chunks
 # whose hash the store has never seen, and the per-doc report prices
 # the dedup — how many bytes the increment actually adds vs re-
-# references. O(increment) per ingest: the store is probed with a
-# hash join restricted to the increment's hashes; corpus chunks are
-# never re-read.
+# references. The verdict work is O(increment): the store is probed
+# with a semi-join restricted to the increment's hashes. The probe
+# still scans the store's chunk_hash column and exchanges it once per
+# ingest — O(store) bytes of bigint keys, a few seconds at sf1; a
+# hash-bucketed layout that skips the exchange measured at parity there
+# (PERF.md §7c).
 #
 # Attribution is deterministic: a hash novel to the store is charged
 # to its FIRST holder in the increment (min (doc_id, chunk_no));
 # later holders count it as 'dup_in_increment', store hits as
 # 'known'. Replay-stable like the sibling ingests: re-ingesting the
 # same batch finds every hash in the store -> zero new bytes.
-
-# --- hash-bucketed probe mirror (the all-dup-replay fix, PERF §7b) ----------
-#
-# The Bloom sidecar makes a novel-dominated recrawl cheap (provably-
-# absent hashes skip the store join) but cannot help an ALL-DUP replay:
-# every suspect is a true store hit, so the probe join must touch the
-# whole store — and with the store read as plain snapshot parquet, that
-# join SHUFFLES O(store) rows every replay. The fix is layout, not
-# filtering: maintain a hash-bucketed MIRROR of the store's chunk_hash
-# column (Spark `bucketBy(N, chunk_hash)` table — the write_bucketed
-# discipline of buckets_entry.py), so the probe's semi-join reads
-# bucket i of the store scan-locally and only the (increment-sized)
-# probe side is exchanged. Same sidecar contract as the Bloom: the
-# snapshot stays the versioned source of truth, the mirror is stamped
-# with the version it covers (`_STATE.json`), topped up from the
-# O(new-rows) snapshot diff per ingest, and rebuilt from the full
-# snapshot when missing/param-mismatched/crossing a rewrite — healing
-# is a cost event, never a correctness one. Verdicts are BIT-IDENTICAL
-# with the flag on or off (pinned in tests).
-
-_MIRROR_BUCKETS = 64  # bucket dial; a real cluster sizes this to cores
-
-
-def _mirror_names(store_path: str) -> tuple[str, str, str]:
-    """(database, qualified table, data dir) for the probe mirror of
-    ``store_path`` — SQL identifiers derived from the path hash so any
-    number of stores coexist in one catalog. The path is normalized
-    BEFORE hashing so 'store' and 'store/' name ONE mirror (two tables
-    over one shared location would race each other's rebuilds)."""
-    import hashlib
-
-    canon = store_path.rstrip("/")
-    h = hashlib.md5(canon.encode()).hexdigest()[:10]
-    db = f"cdc_mirror_{h}"
-    # '_probe_mirror' rather than a generic suffix: the sidecar must
-    # never be confusable with a sibling SNAPSHOT STORE the caller
-    # created next door (the soak scripts name stores 'chunkstore' and
-    # 'chunkstore_bucketed' — a '_bucketed' suffix collided with the
-    # latter and the rebuild path would have rmtree'd that store's
-    # committed data). _claim_mirror_dir below fails loud on any
-    # occupied, unclaimed directory as defense in depth.
-    return db, f"{db}.store_b", canon + "_probe_mirror"
-
-
-def _mirror_state_path(store_path: str) -> str:
-    return _mirror_names(store_path)[2] + "/_STATE.json"
-
-
-def _read_mirror_state(store_path: str) -> dict | None:
-    import json
-    import os
-
-    p = _mirror_state_path(store_path)
-    if not os.path.exists(p):
-        return None
-    try:
-        with open(p) as f:
-            st = json.load(f)
-        return st if {"covers_version", "n_buckets"} <= set(st) else None
-    except (OSError, ValueError):
-        return None
-
-
-def _write_mirror_state(
-    store_path: str, covers_version: int, n_buckets: int, n_hashes: int
-) -> None:
-    import json
-    import os
-
-    p = _mirror_state_path(store_path)
-    os.makedirs(os.path.dirname(p), exist_ok=True)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "covers_version": covers_version,
-                "n_buckets": n_buckets,
-                "n_hashes": n_hashes,
-            },
-            f,
-        )
-    os.replace(tmp, p)
-
-
-def _distinct_hashes(spark: SparkSession, tbl: str) -> int:
-    return spark.table(tbl).select("chunk_hash").distinct().count()
-
-
-def _claim_mirror_dir(store_path: str, ddir: str, st: dict | None) -> None:
-    """Refuse to rebuild over a directory this mirror cannot prove is
-    its own: a rebuild rmtree's ``{ddir}/data``, and if the path is
-    occupied by anything that did not come with our ``_STATE.json``
-    stamp (a sibling snapshot store, a user directory), deleting it
-    would destroy data we do not own. A valid state file — even a
-    parameter-mismatched or stale one — is the claim; absent that, a
-    non-empty dir fails LOUD instead of being cleared."""
-    import os
-
-    if st is not None or not os.path.isdir(ddir):
-        return
-    try:
-        occupied = bool(os.listdir(ddir))
-    except OSError:
-        occupied = False
-    if occupied:
-        raise ValueError(
-            f"cdc probe-mirror location {ddir!r} is occupied by files "
-            f"without a mirror _STATE.json — refusing to delete them. "
-            f"If this is a stale mirror, remove the directory manually; "
-            f"if it is unrelated data, move it or relocate the store."
-        )
-
-
-def _bucketed_store_covering(
-    spark: SparkSession, store_path: str, current_version: int, n_buckets: int
-) -> DataFrame:
-    """The mirror's (chunk_hash) DataFrame covering EXACTLY the store's
-    ``current_version``: fresh -> returned as-is (bucketed scan, no
-    exchange in downstream chunk_hash joins); stale with only append
-    commits since ``covers_version`` -> topped up by appending the
-    O(new-rows) snapshot diff; missing / mismatched / any non-append
-    commit in range -> rebuilt from the full snapshot once. The diff
-    lists additions only, so topping up across an overwrite would keep
-    the hashes of removed rows and report them 'known'.
-    The table is EXTERNAL (explicit path) so a fresh session's empty
-    in-memory catalog re-adopts the existing bucketed files via DDL
-    instead of rebuilding.
-
-    Concurrency: store commits are CAS-protected upstream; here the
-    state file write is atomic (os.replace) and a racing writer can at
-    worst lose a state update or double-append a diff — both leave
-    the mirror a SUPERSET with possible duplicate hash rows, which is
-    correctness-neutral (the probe is a membership semi-join and its
-    consumer runs distinct); the next covering call's heal converges
-    the state. Same only-cost-never-correctness contract as the Bloom
-    sidecar."""
-    import shutil
-
-    from ocr_application_spark.sources.snapshots import (
-        read_snapshot,
-        read_snapshot_diff,
-        snapshot_info,
-        snapshot_versions,
-    )
-
-    db, tbl, ddir = _mirror_names(store_path)
-    spark.sql(
-        f"CREATE DATABASE IF NOT EXISTS {db} LOCATION '{ddir}_db'"
-    )
-    adopt_ddl = (
-        f"CREATE TABLE {tbl} (chunk_hash BIGINT) USING PARQUET "
-        f"CLUSTERED BY (chunk_hash) SORTED BY (chunk_hash) "
-        f"INTO {n_buckets} BUCKETS LOCATION '{ddir}/data'"
-    )
-    st = _read_mirror_state(store_path)
-    mirror_ok = False
-    if st is not None and st["n_buckets"] == n_buckets:
-        if not spark.catalog.tableExists(tbl):
-            spark.sql(adopt_ddl)  # new session, surviving files: adopt
-        # cross-check the files against the stamped DISTINCT hash
-        # count EVERY covering call, not only at adoption: a data dir
-        # deleted or truncated behind a surviving state file — in this
-        # session or a prior one — must rebuild, not silently probe an
-        # under-filled mirror (which would re-commit store-known
-        # chunks as novel). Distinct, not raw rows: a tolerated
-        # double-append adds duplicate rows that could make up for a
-        # lost file in a raw count; the price is one scan of the
-        # mirror's single column where a raw count read only parquet
-        # footers. refreshTable first so a stale cached file listing
-        # can't vouch for files that are gone; a count that THROWS
-        # (listing races a concurrent rebuild) counts as invalid and
-        # falls through to the rebuild too, as does a state stamped
-        # without "n_hashes".
-        try:
-            spark.catalog.refreshTable(tbl)
-            mirror_ok = "n_hashes" in st and _distinct_hashes(spark, tbl) >= st["n_hashes"]
-        except Exception:
-            mirror_ok = False
-        cv = st["covers_version"]
-        if mirror_ok and cv == current_version:
-            return spark.table(tbl).select("chunk_hash")
-        if mirror_ok and cv < current_version and all(
-            snapshot_info(store_path, v)["mode"] == "append"
-            for v in snapshot_versions(store_path)
-            if cv < v <= current_version
-        ):
-            try:
-                from ocr_application_spark.session import bounded_cache
-
-                # persist the (O(new-rows)) diff so the append and the
-                # state-stamp count scan it once, not twice; the store
-                # is content-addressed, so every diff hash is new to it
-                added = bounded_cache(
-                    read_snapshot_diff(
-                        spark, store_path, cv, current_version
-                    ).select("chunk_hash"),
-                    "cdc_mirror_diff",
-                )
-                added.write.bucketBy(n_buckets, "chunk_hash").sortBy(
-                    "chunk_hash"
-                ).mode("append").format("parquet").saveAsTable(tbl)
-                _write_mirror_state(
-                    store_path, current_version, n_buckets,
-                    st["n_hashes"] + added.count(),
-                )
-                return spark.table(tbl).select("chunk_hash")
-            except (ValueError, FileNotFoundError):
-                pass  # diff range crossed a branch/expiry: rebuild below
-    # full rebuild: drop catalog entry AND files (saveAsTable refuses
-    # to adopt a non-empty location), then write fresh — but NEVER
-    # delete a directory this mirror cannot prove is its own
-    _claim_mirror_dir(store_path, ddir, st)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    shutil.rmtree(f"{ddir}/data", ignore_errors=True)
-    full = read_snapshot(spark, store_path, version=current_version)
-    (
-        full.select("chunk_hash")
-        .write.bucketBy(n_buckets, "chunk_hash")
-        .sortBy("chunk_hash")
-        .mode("overwrite")
-        .format("parquet")
-        .option("path", f"{ddir}/data")
-        .saveAsTable(tbl)
-    )
-    _write_mirror_state(
-        store_path, current_version, n_buckets, _distinct_hashes(spark, tbl)
-    )
-    return spark.table(tbl).select("chunk_hash")
 
 
 def cdc_store_ingest(
@@ -430,11 +210,6 @@ def cdc_store_ingest(
     id_col: str = "doc_id",
     text_col: str = "text",
     op_label: str = "cdc-ingest",
-    bloom_prefilter: bool = False,
-    bloom_words: int = 1 << 16,
-    bloom_hashes: int = 4,
-    bucketed_probe: bool = False,
-    probe_buckets: int = _MIRROR_BUCKETS,
 ) -> tuple[DataFrame, int]:
     """Ingest ``docs`` against the content-addressed chunk store at
     ``store_path``; append never-seen (chunk_hash, chunk_chars) rows;
@@ -442,31 +217,14 @@ def cdc_store_ingest(
     (doc_id, n_chunks, total_chars, n_known, n_dup_increment, n_novel,
     novel_chars, saved_bp).
 
-    ``bloom_prefilter=True`` routes the store probe through the SAME
-    persisted Bloom sidecar machinery the fingerprint index uses
-    (``{store_path}_bloom``, maintained incrementally in O(novel) per
-    ingest, self-healing when stale): chunk hashes the filter rules
-    out are provably absent, so the store join carries only maybe-seen
-    suspects — on a novel-dominated recrawl the (store-sized) exchange
-    shrinks to the true-dup sliver plus false positives. The report,
-    store contents and replay stability are BIT-IDENTICAL either way
-    (no false negatives); the flag is purely a cost dial.
-
-    ``bucketed_probe=True`` is the complementary dial for the case a
-    Bloom cannot help — the ALL-DUP replay, where every suspect is a
-    true store hit: the store probe reads a self-healing hash-bucketed
-    mirror (``bucketBy(probe_buckets, chunk_hash)`` table next to the
-    store, maintained by O(new-rows) appends per ingest), so the store
-    side of the probe semi-join is scan-local (ZERO store-side
-    exchange — plan-pinned) and only the increment is shuffled.
-    Verdicts, store contents and replay stability are BIT-IDENTICAL
-    with any flag combination. Note: the bucketed probe eagerly
-    localCheckpoints its O(increment) probe result (the mirror table
-    is live; pinning the result is what keeps this ingest's own
-    post-commit mirror append invisible to the lazy report); those
-    blocks live until the session ends — long-lived multi-ingest
-    sessions can free a consumed report's blocks with
-    ``session.release_local_checkpoint``."""
+    The store is probed at its pre-commit snapshot version, so a report
+    materialized after the commit still reads the store as it was
+    (this ingest's own novel chunks never flip to 'known'), and any
+    commit mode before it — append or a rewrite such as
+    ``overwrite_partitions`` — is seen exactly as the snapshot lists
+    it. The chunked increment is held in one ``bounded_cache`` slot,
+    which the next call frees: repeated ingests in one session keep one
+    cached copy, not one per call."""
     from ocr_application_spark.session import bounded_cache
     from ocr_application_spark.sources.snapshots import (
         commit,
@@ -478,52 +236,15 @@ def cdc_store_ingest(
         cdc_chunks(docs, id_col, text_col), "cdc_store_ingest"
     )  # reused by verdicts AND the novel-row commit
     versions = snapshot_versions(store_path)
-    state = None
     if versions:
-        inc_hashes = ch.select("chunk_hash").distinct()
-        if bloom_prefilter:
-            from ocr_application_spark.operators.dedup import _bloom_state_covering
-            from ocr_application_spark.operators.sketches import bloom_probe
-
-            state = bounded_cache(
-                _bloom_state_covering(
-                    spark, store_path, versions[-1], bloom_words, bloom_hashes,
-                    key_col="chunk_hash",
-                ),
-                "cdc_bloom_state",
-            )
-            probe_keys = (
-                bloom_probe(state, inc_hashes, "chunk_hash", bloom_words, bloom_hashes)
-                .filter(F.col("maybe_seen"))
-                .select("chunk_hash")
-            )
-        else:
-            probe_keys = inc_hashes
-        store_rows = (
-            _bucketed_store_covering(spark, store_path, versions[-1], probe_buckets)
-            if bucketed_probe
-            else read_snapshot(spark, store_path, version=versions[-1]).select(
-                "chunk_hash"
-            )
-        )
         store = (
-            store_rows
-            # probe restricted to the increment's (bloom-surviving)
-            # hash set: O(increment) join work per ingest; with the
-            # bucketed mirror the store side of this semi-join is
-            # scan-local (no store exchange)
-            .join(probe_keys, "chunk_hash", "left_semi")
+            read_snapshot(spark, store_path, version=versions[-1])
+            .select("chunk_hash")
+            # probe restricted to the increment's hash set
+            .join(ch.select("chunk_hash").distinct(), "chunk_hash", "left_semi")
             .distinct()
             .withColumn("in_store", F.lit(True))
         )
-        if bucketed_probe:
-            # the mirror TABLE is live (this ingest appends the novel
-            # hashes to it after the commit below), while the plain
-            # path reads a pinned snapshot version — so freeze the
-            # probe RESULT (O(increment) bigint rows) before anything
-            # mutates the mirror; this also runs the bucket-local
-            # probe exactly once instead of once per downstream action
-            store = store.localCheckpoint(eager=True)
     else:
         store = (
             ch.filter(F.lit(False)).select("chunk_hash").withColumn("in_store", F.lit(True))
@@ -567,41 +288,6 @@ def cdc_store_ingest(
     # exactly one row per novel hash (its attribution owner's row)
     novel_rows = jj.filter(F.col("verdict") == "novel").select("chunk_hash", "chunk_chars")
     version = commit(novel_rows, store_path, op_label=op_label)
-    if bucketed_probe:
-        # mirror maintenance, O(novel): top the bucketed mirror up to
-        # the just-committed version (append of the snapshot diff).
-        # A crash before this line leaves a stale mirror the next
-        # ingest's covering call heals — same contract as the Bloom.
-        _bucketed_store_covering(spark, store_path, version, probe_buckets)
-    if bloom_prefilter:
-        # sidecar maintenance, O(novel): fold the just-committed rows
-        # (read back via the manifest diff) into the state; crash
-        # before this commit leaves a stale sidecar the next ingest's
-        # healing path tops up (shared machinery with the fingerprint
-        # index — dedup._bloom_state_covering / _commit_bloom_sidecar)
-        from ocr_application_spark.operators.dedup import _commit_bloom_sidecar
-        from ocr_application_spark.operators.sketches import bloom_build, bloom_merge
-        from ocr_application_spark.sources.snapshots import read_snapshot_diff
-
-        new_state = None
-        if versions and state is not None:
-            try:
-                added = read_snapshot_diff(spark, store_path, versions[-1], version)
-                new_state = bloom_merge(
-                    state.unionByName(
-                        bloom_build(added, F.col("chunk_hash"), bloom_words, bloom_hashes)
-                    )
-                )
-            except (ValueError, FileNotFoundError):
-                pass  # diff range crossed a rewrite: rebuild below
-        if new_state is None:
-            new_state = bloom_build(
-                read_snapshot(spark, store_path, version=version),
-                F.col("chunk_hash"),
-                bloom_words,
-                bloom_hashes,
-            )
-        _commit_bloom_sidecar(new_state, store_path, version, bloom_words, bloom_hashes)
     return report, version
 
 

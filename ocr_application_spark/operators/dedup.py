@@ -59,7 +59,6 @@ def _bloom_state_covering(
     current_version: int,
     n_words: int,
     n_hashes: int,
-    key_col: str = "fingerprint",
 ) -> DataFrame:
     """Bloom (word_idx, word) state covering EXACTLY the index's
     ``current_version``, whatever the sidecar's condition: fresh
@@ -92,13 +91,13 @@ def _bloom_state_covering(
                     )
                     return bloom_merge(
                         state.unionByName(
-                            bloom_build(added, F.col(key_col), n_words, n_hashes)
+                            bloom_build(added, F.col("fingerprint"), n_words, n_hashes)
                         )
                     )
                 except (ValueError, FileNotFoundError):
                     pass  # range crosses a rewrite/expiry: rebuild below
     full = read_snapshot(spark, index_path, version=current_version)
-    return bloom_build(full, F.col(key_col), n_words, n_hashes)
+    return bloom_build(full, F.col("fingerprint"), n_words, n_hashes)
 
 
 def _commit_bloom_sidecar(

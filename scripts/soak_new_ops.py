@@ -110,34 +110,8 @@ def main() -> None:
     # must find everything known and append nothing
     t0 = time.monotonic()
     report2, _v2 = cdc_store_ingest(spark, store, docs, op_label="soak-replay")
-    plain_agg = report2.agg(
-        F.sum("n_novel"), F.sum("n_known"), F.sum("total_chars"), F.sum("saved_bp")
-    ).collect()[0]
-    emit({"stage": "cdc_store_replay", "novel_chunks": int(plain_agg[0] or 0),
-          "secs": round(time.monotonic() - t0, 2)})
-
-    # A/B: the same bootstrap + ALL-DUP replay through the hash-bucketed
-    # probe mirror (PERF §7b's fix — the store side of the probe join is
-    # scan-local, only the increment shuffles). Verdict aggregates must
-    # equal the plain replay's exactly.
-    store_b = os.path.join(base, "chunkstore_bucketed")
-    t0 = time.monotonic()
-    repb, _ = cdc_store_ingest(
-        spark, store_b, docs, op_label="soak-bootstrap-b", bucketed_probe=True
-    )
-    n = repb.count()
-    emit({"stage": "cdc_store_bootstrap_bucketed", "rows_out": n,
-          "secs": round(time.monotonic() - t0, 2)})
-    t0 = time.monotonic()
-    repb2, _ = cdc_store_ingest(
-        spark, store_b, docs, op_label="soak-replay-b", bucketed_probe=True
-    )
-    buck_agg = repb2.agg(
-        F.sum("n_novel"), F.sum("n_known"), F.sum("total_chars"), F.sum("saved_bp")
-    ).collect()[0]
-    emit({"stage": "cdc_store_replay_bucketed",
-          "novel_chunks": int(buck_agg[0] or 0),
-          "verdicts_match_plain": list(buck_agg) == list(plain_agg),
+    novel = report2.agg(F.sum("n_novel")).collect()[0][0]
+    emit({"stage": "cdc_store_replay", "novel_chunks": int(novel or 0),
           "secs": round(time.monotonic() - t0, 2)})
 
     out = os.path.join(REPO, "BENCH", "soak_new_ops.json")

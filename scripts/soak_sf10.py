@@ -9,8 +9,8 @@ replication multiplies the doc count, not the doc length, so this
 checks linearity in corpus size only; per-doc cost against length is
 the PERF.md §7c doc-length table), ``split_leakage_report`` (~1B-gram
 hash join — claims uniform-key linear), and the chunk-store bootstrap + ALL-DUP replay
-through the r05 bucketed probe (claims O(increment) verdict work +
-scan-local store side). Shuffle partitions scale with the decade (128
+(claims O(increment) verdict work; the store probe scans the store's
+chunk_hash column once per ingest). Shuffle partitions scale with the decade (128
 vs the sf1 soak's 32) — the knob a real cluster would turn.
 
 Publishes wall time + volume per stage to BENCH/soak_sf10.json; the
@@ -91,23 +91,18 @@ def main() -> None:
     run("dedup_cdc_chunks", dedup_cdc_chunks(spark, docs_dir))
     run("split_leakage_report", split_leakage_report(spark, docs_dir))
 
-    # chunk store: bucketed-probe bootstrap + ALL-DUP replay (the r05
-    # layout; the plain pair was A/B'd at sf1 — §7c)
+    # chunk store: bootstrap + ALL-DUP replay
     store = os.path.join(base, "chunkstore")
     docs = spark.read.parquet(os.path.join(docs_dir, "documents.parquet"))
     t0 = time.monotonic()
-    report, _v = cdc_store_ingest(
-        spark, store, docs, op_label="sf10-bootstrap", bucketed_probe=True
-    )
+    report, _v = cdc_store_ingest(spark, store, docs, op_label="sf10-bootstrap")
     n = report.count()
-    emit({"stage": "cdc_store_bootstrap_bucketed", "rows_out": n,
+    emit({"stage": "cdc_store_bootstrap", "rows_out": n,
           "secs": round(time.monotonic() - t0, 2)})
     t0 = time.monotonic()
-    report2, _v2 = cdc_store_ingest(
-        spark, store, docs, op_label="sf10-replay", bucketed_probe=True
-    )
+    report2, _v2 = cdc_store_ingest(spark, store, docs, op_label="sf10-replay")
     novel = report2.agg(F.sum("n_novel")).collect()[0][0]
-    emit({"stage": "cdc_store_replay_bucketed", "novel_chunks": int(novel or 0),
+    emit({"stage": "cdc_store_replay", "novel_chunks": int(novel or 0),
           "secs": round(time.monotonic() - t0, 2)})
 
     out = os.path.join(REPO, "BENCH", "soak_sf10.json")

@@ -214,47 +214,6 @@ def test_cdc_store_attribution_charges_first_holder(spark, tmp_path):
     assert stored == sum(r["novel_chars"] for r in rows.values())
 
 
-def test_cdc_bloom_prefilter_is_verdict_identical_and_maintains_sidecar(
-    spark, tmp_path
-):
-    """bloom_prefilter is a pure cost dial: bootstrap+recrawl with the
-    flag on must produce the SAME per-doc report as the plain path,
-    the sidecar must exist and cover the committed version, and a
-    replay through the bloom path still appends nothing."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ocr_application_spark.operators.cdc import cdc_store_ingest
-    from ocr_application_spark.sources.snapshots import read_snapshot, snapshot_versions
-
-    base = [(i, f"base doc {i} " + "common template tail " * 5) for i in range(12)]
-    inc = [(100 + i, f"inc doc {i} " + "common template tail " * 5) for i in range(6)]
-    inc += [(200, base[0][1])]  # full clone of a base doc -> all known
-    bdf = spark.createDataFrame(base, "doc_id long, text string")
-    idf = spark.createDataFrame(inc, "doc_id long, text string")
-
-    def run(store, flag):
-        cdc_store_ingest(spark, store, bdf, bloom_prefilter=flag)
-        rep, v = cdc_store_ingest(spark, store, idf, bloom_prefilter=flag)
-        return sorted(tuple(r) for r in rep.collect()), v
-
-    plain, _ = run(str(tmp_path / "s_plain"), False)
-    bloomed, v = run(str(tmp_path / "s_bloom"), True)
-    assert plain == bloomed  # bit-identical verdicts
-    bpath = str(tmp_path / "s_bloom") + "_bloom"
-    assert snapshot_versions(bpath), "sidecar missing"
-    meta = read_snapshot(spark, bpath).select("covers_version").first()
-    assert meta["covers_version"] == v
-    # replay through the bloom path: everything known, nothing appended
-    store_rows = read_snapshot(spark, str(tmp_path / "s_bloom")).count()
-    rep3, _ = cdc_store_ingest(
-        spark, str(tmp_path / "s_bloom"), idf, bloom_prefilter=True
-    )
-    assert rep3.agg(F.sum("n_novel")).collect()[0][0] == 0
-    assert read_snapshot(spark, str(tmp_path / "s_bloom")).count() == store_rows
-
-
 def _ingest_fixture(spark):
     base = [(i, f"base doc {i} " + "common template tail " * 5) for i in range(12)]
     inc = [(100 + i, f"inc doc {i} " + "common template tail " * 5) for i in range(6)]
@@ -265,268 +224,23 @@ def _ingest_fixture(spark):
     )
 
 
-def test_cdc_bucketed_probe_is_verdict_identical_and_replay_stable(
-    spark, tmp_path
-):
-    """bucketed_probe is a pure layout dial (PERF §7b's all-dup-replay
-    fix): bootstrap + recrawl with the flag on — and with bloom AND
-    bucketed together — must produce the SAME per-doc reports as the
-    plain path; a replay appends nothing; the mirror state covers the
-    committed version."""
-    from ocr_application_spark.operators.cdc import (
-        _read_mirror_state,
-        cdc_store_ingest,
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+def test_cdc_store_ingest_after_overwrite_commit(spark, tmp_path):
+    """A non-append commit removes store rows: after an
+    overwrite_partitions that drops every chunk length of base doc 0,
+    the ingest must probe the store as that snapshot lists it. The
+    increment's holders of the removed chunks come out 'novel' and are
+    re-committed, and the report equals that of a fresh store seeded
+    with the post-overwrite contents."""
+    from ocr_application_spark.operators.cdc import cdc_store_ingest
+    from ocr_application_spark.sources.snapshots import (
+        commit,
+        read_snapshot,
+        read_snapshot_diff,
     )
-    from ocr_application_spark.sources.snapshots import read_snapshot, snapshot_versions
-
-    bdf, idf = _ingest_fixture(spark)
-
-    def run(store, **kw):
-        rep0, _ = cdc_store_ingest(spark, store, bdf, **kw)
-        b0 = sorted(tuple(r) for r in rep0.collect())
-        rep, v = cdc_store_ingest(spark, store, idf, **kw)
-        return b0, sorted(tuple(r) for r in rep.collect()), v
-
-    p0, p1, _ = run(str(tmp_path / "s_plain"))
-    b0, b1, v = run(str(tmp_path / "s_buck"), bucketed_probe=True, probe_buckets=8)
-    assert (p0, p1) == (b0, b1)  # bit-identical verdicts
-    c0, c1, _ = run(
-        str(tmp_path / "s_both"),
-        bucketed_probe=True,
-        probe_buckets=8,
-        bloom_prefilter=True,
-    )
-    assert (p0, p1) == (c0, c1)  # flags compose
-    st = _read_mirror_state(str(tmp_path / "s_buck"))
-    assert (st["covers_version"], st["n_buckets"]) == (v, 8)
-    assert st["n_hashes"] > 0
-    # all-dup replay through the bucketed path: nothing appended
-    store = str(tmp_path / "s_buck")
-    n_before = read_snapshot(spark, store).count()
-    rep3, v3 = cdc_store_ingest(spark, store, idf, bucketed_probe=True, probe_buckets=8)
-    assert rep3.agg(F.sum("n_novel")).collect()[0][0] == 0
-    assert read_snapshot(spark, store).count() == n_before
-    assert _read_mirror_state(store)["covers_version"] == v3
-    assert v3 == snapshot_versions(store)[-1]
-
-
-def test_cdc_bucketed_mirror_heals_stale_state_and_lost_catalog(
-    spark, tmp_path
-):
-    """The mirror is a sidecar, not a second source of truth: a store
-    that advanced WITHOUT mirror maintenance (crash analog: plain-path
-    ingest between bucketed ones) gets topped up from the snapshot
-    diff on the next covering call; a catalog that forgot the external
-    table (new-session analog) re-adopts the surviving bucketed files
-    via DDL. Verdicts match the plain twin throughout."""
-    from ocr_application_spark.operators.cdc import (
-        _mirror_names,
-        _read_mirror_state,
-        cdc_store_ingest,
-    )
-
-    bdf, idf = _ingest_fixture(spark)
-    store, twin = str(tmp_path / "s_heal"), str(tmp_path / "s_twin")
-    # bootstrap bucketed (mirror at v1), then advance the store PLAIN
-    # (mirror now stale at v1 while the store is at v2)
-    cdc_store_ingest(spark, store, bdf, bucketed_probe=True, probe_buckets=8)
-    v1 = _read_mirror_state(store)["covers_version"]
-    cdc_store_ingest(spark, store, idf)  # no mirror maintenance
-    assert _read_mirror_state(store)["covers_version"] == v1  # stale
-    # twin runs the same two ingests plain
-    cdc_store_ingest(spark, twin, bdf)
-    cdc_store_ingest(spark, twin, idf)
-    # new increment: half clones (known), half fresh
-    inc2 = [(300, "wholly fresh content never chunked before " * 4)]
-    inc2 += [(301, "inc doc 0 " + "common template tail " * 5)]
-    i2 = spark.createDataFrame(inc2, "doc_id long, text string")
-    # simulate a NEW session's empty in-memory catalog: drop the
-    # external table entry (files survive) so covering must re-adopt
-    _, tbl, _ = _mirror_names(store)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    rep_b, vb = cdc_store_ingest(spark, store, i2, bucketed_probe=True, probe_buckets=8)
-    rep_p, _ = cdc_store_ingest(spark, twin, i2)
-    got = sorted(tuple(r) for r in rep_b.collect())
-    want = sorted(tuple(r) for r in rep_p.collect())
-    assert got == want
-    assert _read_mirror_state(store)["covers_version"] == vb  # healed
-
-
-def test_cdc_bucketed_mirror_rebuilds_when_data_dir_lost(spark, tmp_path):
-    """A data dir deleted behind a surviving state file must REBUILD at
-    adoption (the row-count cross-check), never probe an empty mirror —
-    which would re-commit store-known chunks as novel."""
-    import shutil
-
-    from ocr_application_spark.operators.cdc import (
-        _mirror_names,
-        cdc_store_ingest,
-    )
-    from ocr_application_spark.sources.snapshots import read_snapshot
-
-    bdf, idf = _ingest_fixture(spark)
-    store = str(tmp_path / "s_corrupt")
-    cdc_store_ingest(spark, store, bdf, bucketed_probe=True, probe_buckets=8)
-    n_store = read_snapshot(spark, store).count()
-    # lose the mirror DATA but keep the state file; also drop the
-    # catalog entry so the covering call takes the adoption path
-    _, tbl, ddir = _mirror_names(store)
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    shutil.rmtree(f"{ddir}/data", ignore_errors=True)
-    rep, _ = cdc_store_ingest(spark, store, idf, bucketed_probe=True, probe_buckets=8)
-    # the clone doc (200) must still be ALL-known — an empty mirror
-    # would have called its chunks novel
-    clone = {r["doc_id"]: r for r in rep.collect()}[200]
-    assert clone["n_known"] == clone["n_chunks"]
-    # and the store must not have been double-committed with old hashes
-    assert read_snapshot(spark, store).count() > n_store  # only the real novels
-    got = {r["chunk_hash"] for r in read_snapshot(spark, store).select("chunk_hash").collect()}
-    assert len(got) == read_snapshot(spark, store).count()  # no dup hashes
-
-
-def test_cdc_bucketed_probe_plan_store_side_scan_local(spark, tmp_path):
-    """The structural claim of the layout fix: the probe semi-join
-    reads the mirror as a BUCKETED scan (Bucketed: true) with NO
-    exchange between the store scan and the join — only the
-    increment side is shuffled."""
-    from ocr_application_spark.operators.cdc import (
-        _bucketed_store_covering,
-        _read_mirror_state,
-        cdc_store_ingest,
-    )
-
-    bdf, idf = _ingest_fixture(spark)
-    store = str(tmp_path / "s_plan")
-    cdc_store_ingest(spark, store, bdf, bucketed_probe=True, probe_buckets=8)
-    v = _read_mirror_state(store)["covers_version"]
-    mirror = _bucketed_store_covering(spark, store, v, 8)
-    keys = C.cdc_chunks(idf).select("chunk_hash").distinct()
-    # force the merge path: at real scale neither side broadcasts
-    probe = mirror.hint("merge").join(keys, "chunk_hash", "left_semi")
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "Bucketed: true" in plan, plan
-    # the store branch (FileScan ... store_b) must not sit under an
-    # Exchange: exactly one Exchange in the whole probe (the keys side)
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-    assert "store_b" in plan
-
-
-def test_cdc_bucketed_mirror_in_session_data_loss_rebuilds(spark, tmp_path):
-    """The row-count cross-check runs EVERY covering call, not only at
-    adoption: a data dir deleted in-session (catalog entry intact,
-    cached file listing stale) must rebuild, not crash or probe an
-    empty mirror."""
-    import shutil
-
-    from ocr_application_spark.operators.cdc import (
-        _mirror_names,
-        cdc_store_ingest,
-    )
-    from ocr_application_spark.sources.snapshots import read_snapshot
-
-    bdf, idf = _ingest_fixture(spark)
-    store = str(tmp_path / "s_inlive")
-    cdc_store_ingest(spark, store, bdf, bucketed_probe=True, probe_buckets=8)
-    _, _, ddir = _mirror_names(store)
-    shutil.rmtree(f"{ddir}/data", ignore_errors=True)  # NO table drop
-    rep, _ = cdc_store_ingest(spark, store, idf, bucketed_probe=True, probe_buckets=8)
-    clone = {r["doc_id"]: r for r in rep.collect()}[200]
-    assert clone["n_known"] == clone["n_chunks"]
-    hashes = read_snapshot(spark, store).select("chunk_hash")
-    assert hashes.count() == hashes.distinct().count()  # no dup commits
-
-
-def test_cdc_bucketed_mirror_double_append_cannot_mask_lost_file(spark, tmp_path):
-    """A tolerated double-append leaves duplicate hash rows in the
-    mirror, so its raw row count can still reach the stamp after a data
-    file is lost. The integrity check counts DISTINCT hashes: with one
-    mirror file duplicated and another deleted, the next bucketed ingest
-    must rebuild, and its verdicts and store match the plain path."""
-    import glob
-    import os
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    from ocr_application_spark.operators.cdc import _mirror_names, cdc_store_ingest
-    from ocr_application_spark.sources.snapshots import read_snapshot
-
-    bdf, _ = _ingest_fixture(spark)
-    store, twin = str(tmp_path / "s_dupfile"), str(tmp_path / "s_dupfile_twin")
-    cdc_store_ingest(spark, store, bdf, bucketed_probe=True, probe_buckets=8)
-    cdc_store_ingest(spark, twin, bdf)
-    _, _, ddir = _mirror_names(store)
-    files = sorted(
-        (pq.ParquetFile(f).metadata.num_rows, f)
-        for f in glob.glob(f"{ddir}/data/*.parquet")
-    )
-    files = [(n, f) for n, f in files if n > 0]
-    assert len(files) >= 2, files
-    (_, smallest), (_, largest) = files[0], files[-1]
-    # the double-append: a second copy of the largest bucket file (same
-    # bucket id in its name, so the bucketed scan still reads it) ...
-    d, name = os.path.split(largest)
-    shutil.copy(largest, os.path.join(d, "dup-" + name))
-    # ... outweighs the rows of the lost smallest one
-    os.remove(smallest)
-    # replay the base: every chunk is in the store, so a mirror missing
-    # the lost file's hashes would report them novel and re-commit them
-    rep_b, _ = cdc_store_ingest(spark, store, bdf, bucketed_probe=True, probe_buckets=8)
-    rep_p, _ = cdc_store_ingest(spark, twin, bdf)
-    assert sorted(tuple(r) for r in rep_b.collect()) == sorted(
-        tuple(r) for r in rep_p.collect()
-    )
-    assert sorted(tuple(r) for r in read_snapshot(spark, store).collect()) == sorted(
-        tuple(r) for r in read_snapshot(spark, twin).collect()
-    )
-
-
-def test_cdc_mirror_refuses_to_delete_unclaimed_dir(spark, tmp_path):
-    """A rebuild must never rmtree a directory it cannot prove is its
-    own mirror (no _STATE.json): fail loud instead of destroying a
-    sibling store's or user's files."""
-    import pytest as _pytest
-
-    from ocr_application_spark.operators.cdc import _mirror_names, cdc_store_ingest
-
-    bdf, idf = _ingest_fixture(spark)
-    store = str(tmp_path / "s_occupied")
-    _, _, ddir = _mirror_names(store)
-    # occupy the mirror location with foreign data, no state stamp
-    import os
-
-    os.makedirs(f"{ddir}/data", exist_ok=True)
-    with open(f"{ddir}/data/precious.txt", "w") as f:
-        f.write("not yours")
-    cdc_store_ingest(spark, store, bdf)  # plain bootstrap, no mirror
-    with _pytest.raises(ValueError, match="occupied"):
-        cdc_store_ingest(spark, store, idf, bucketed_probe=True, probe_buckets=8)
-    with open(f"{ddir}/data/precious.txt") as f:
-        assert f.read() == "not yours"  # nothing deleted
-
-
-def test_cdc_mirror_path_normalization(spark):
-    """'store' and 'store/' must name ONE mirror (two catalog tables
-    over one shared location would race each other's rebuilds)."""
-    from ocr_application_spark.operators.cdc import _mirror_names
-
-    a, b = _mirror_names("/x/y/store"), _mirror_names("/x/y/store/")
-    assert a == b
-
-
-def test_cdc_bucketed_mirror_rebuilds_across_overwrite_commit(spark, tmp_path):
-    """A mirror top-up appends the snapshot diff, which lists additions
-    only. An overwrite_partitions commit between two bucketed covering
-    calls removes store rows, so topping up would leave their hashes in
-    the mirror and report re-ingested chunks of removed rows as known.
-    The covering call must rebuild instead; verdicts match a plain twin
-    with the same store history."""
-    from ocr_application_spark.operators.cdc import (
-        _bucketed_store_covering,
-        _read_mirror_state,
-        cdc_store_ingest,
-    )
-    from ocr_application_spark.sources.snapshots import commit, read_snapshot
 
     bdf, idf = _ingest_fixture(spark)
     seed = C.cdc_chunks(bdf).select("chunk_hash", "chunk_chars").distinct()
@@ -536,24 +250,43 @@ def test_cdc_bucketed_mirror_rebuilds_across_overwrite_commit(spark, tmp_path):
         for r in C.cdc_chunks(bdf.filter("doc_id = 0")).select("chunk_chars").distinct().collect()
     )
     filler = spark.createDataFrame([(1, gone[0])], "chunk_hash long, chunk_chars int")
-
-    def history(store, mirrored):
-        v1 = commit(seed, store, partition_by="chunk_chars")
-        if mirrored:
-            _bucketed_store_covering(spark, store, v1, 8)
-        # drop every partition holding a chunk length of doc 0
-        return commit(
-            filler, store, mode="overwrite_partitions",
-            partition_by="chunk_chars", replace_partitions=gone,
-        )
-
     store, twin = str(tmp_path / "s_over"), str(tmp_path / "s_over_twin")
-    history(store, True)
-    v2 = history(twin, False)
-    assert _read_mirror_state(store)["covers_version"] == v2 - 1
-    mirror = _bucketed_store_covering(spark, store, v2, 8)
-    want = {r[0] for r in read_snapshot(spark, store, version=v2).select("chunk_hash").collect()}
-    assert {r[0] for r in mirror.distinct().collect()} == want
-    rep_b, _ = cdc_store_ingest(spark, store, idf, bucketed_probe=True, probe_buckets=8)
-    rep_p, _ = cdc_store_ingest(spark, twin, idf)
-    assert sorted(tuple(r) for r in rep_b.collect()) == sorted(tuple(r) for r in rep_p.collect())
+    commit(seed, store, partition_by="chunk_chars")
+    v2 = commit(
+        filler, store, mode="overwrite_partitions",
+        partition_by="chunk_chars", replace_partitions=gone,
+    )
+    post = read_snapshot(spark, store, version=v2).select("chunk_hash", "chunk_chars")
+    commit(post, twin)
+
+    def hashes(df):
+        return {r[0] for r in df.select("chunk_hash").collect()}
+
+    removed = (hashes(seed) - hashes(post)) & hashes(C.cdc_chunks(idf))
+    assert removed  # the increment holds chunks the overwrite took away
+    rep, v3 = cdc_store_ingest(spark, store, idf)
+    rep_twin, _ = cdc_store_ingest(spark, twin, idf)
+    assert _rows(rep) == _rows(rep_twin)
+    clone = {r["doc_id"]: r for r in rep.collect()}[200]
+    assert clone["n_known"] == 0  # every chunk of doc 0 was removed
+    assert removed <= hashes(read_snapshot_diff(spark, store, v2, v3))
+
+
+def test_cdc_store_ingest_holds_one_cached_copy_across_calls(spark, tmp_path):
+    """State that outlives one call: three ingests in one session
+    (bootstrap, recrawl, replay) must not pile up persisted RDDs. The
+    chunked increment sits in one bounded_cache slot that the next call
+    frees, so after the first call the persisted-RDD count stays flat."""
+    from ocr_application_spark.operators.cdc import cdc_store_ingest
+
+    bdf, idf = _ingest_fixture(spark)
+    store = str(tmp_path / "s_slot")
+    jsc = spark.sparkContext._jsc
+    reports, persisted = [], []
+    for df in (bdf, idf, idf):
+        rep, _ = cdc_store_ingest(spark, store, df)
+        reports.append(_rows(rep))
+        persisted.append(jsc.getPersistentRDDs().size())
+    assert persisted[1:] == [persisted[0]] * 2, persisted
+    assert reports[1] != reports[2]
+    assert sum(r[5] for r in reports[2]) == 0  # the replay's n_novel
