@@ -4,11 +4,13 @@ corpus-level dedup against a persisted index.
 The streaming companion to jobs/curate_job.py's batch ``--dedup-index``:
 where curate_job dedupes a finished corpus increment once, THIS job
 tails a landing directory and dedupes each micro-batch as it arrives —
-``streaming/stream.run_stream_ingest`` with one of the three index
-families:
+``streaming/stream.run_stream_ingest`` with one of the four index
+families, each at its fixed defaults (the job has no per-family
+tuning flags):
 
     --family exact      operators/dedup.fingerprint_index_ingest
     --family minhash    operators/dedup.minhash_index_ingest
+    --family winnow     operators/dedup.winnow_index_ingest
     --family semantic   operators/similarity.embedding_index_ingest
                         (input is a VECTOR stream: vec_id, embedding)
 
@@ -75,20 +77,12 @@ def main() -> None:
     )
     ap.add_argument("--max-files", type=int, default=8, help="maxFilesPerTrigger")
     ap.add_argument(
-        "--bloom-prefilter",
-        action="store_true",
-        help="exact family only: route the index probe through the "
-        "persisted Bloom sidecar (verdicts bit-identical; cost dial)",
-    )
-    ap.add_argument(
         "--timeout",
         type=int,
         default=None,
         help="awaitTermination seconds (default: wait for drain)",
     )
     args = ap.parse_args()
-    if args.bloom_prefilter and args.family != "exact":
-        ap.error("--bloom-prefilter applies to --family exact only")
 
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
@@ -113,11 +107,6 @@ def main() -> None:
         args.checkpoint,
         max_files=args.max_files,
         family=args.family,
-        ingest_kwargs=(
-            {"bloom_prefilter": True}
-            if args.bloom_prefilter and args.family == "exact"
-            else None
-        ),
     )
     if args.timeout is not None:
         drained = q.awaitTermination(args.timeout)

@@ -47,20 +47,16 @@ _CDC_K = 8  # rolling-window gram width (chars)
 _CDC_MASK = 32  # boundary when gram-hash % 32 == 0 -> mean chunk ~ 40 chars
 
 
-def cdc_chunks(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Per-document CDC chunks -> (doc_id, chunk_no, chunk_chars,
-    chunk_hash), one row per non-empty chunk, chunk_no 1-based in
-    document order. Docs shorter than the gram width (or empty) form a
+def cdc_chunks(df: DataFrame) -> DataFrame:
+    """Per-document CDC chunks of a (doc_id, text) frame -> (doc_id,
+    chunk_no, chunk_chars, chunk_hash), one row per non-empty chunk,
+    chunk_no 1-based in document order. Docs shorter than the gram width (or empty) form a
     single chunk when non-empty, none when empty. Array-side: boundary
     selection, start/end pairing and slicing all run inside one
     projection; only final chunks become rows."""
     k, m = _CDC_K, _CDC_MASK
-    t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    d = df.select(F.col(id_col).alias("doc_id"), t.alias("t")).filter(
-        F.length("t") >= 1
-    )
+    t = F.lower(F.coalesce(F.col("text"), F.lit("")))
+    d = df.select("doc_id", t.alias("t")).filter(F.length("t") >= 1)
     # boundary char indices: END position of each masked gram
     bounds = (
         f"case when size(cs) >= {k} then "
@@ -207,13 +203,12 @@ def cdc_store_ingest(
     store_path: str,
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     op_label: str = "cdc-ingest",
 ) -> tuple[DataFrame, int]:
-    """Ingest ``docs`` against the content-addressed chunk store at
-    ``store_path``; append never-seen (chunk_hash, chunk_chars) rows;
-    return (per-doc report, committed version). Report columns:
+    """Ingest ``docs`` (``doc_id``, ``text``) against the
+    content-addressed chunk store at ``store_path``; append never-seen
+    (chunk_hash, chunk_chars) rows; return (per-doc report, committed
+    version). Report columns:
     (doc_id, n_chunks, total_chars, n_known, n_dup_increment, n_novel,
     novel_chars, saved_bp).
 
@@ -232,9 +227,8 @@ def cdc_store_ingest(
         snapshot_versions,
     )
 
-    ch = bounded_cache(
-        cdc_chunks(docs, id_col, text_col), "cdc_store_ingest"
-    )  # reused by verdicts AND the novel-row commit
+    # reused by verdicts AND the novel-row commit
+    ch = bounded_cache(cdc_chunks(docs), "cdc_store_ingest")
     versions = snapshot_versions(store_path)
     if versions:
         store = (

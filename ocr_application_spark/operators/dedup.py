@@ -49,108 +49,18 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- incremental recrawl ingest against a persisted fingerprint index ---------
-def _bloom_sidecar_path(index_path: str) -> str:
-    return index_path.rstrip("/") + "_bloom"
-
-
-def _bloom_state_covering(
-    spark: SparkSession,
-    index_path: str,
-    current_version: int,
-    n_words: int,
-    n_hashes: int,
-) -> DataFrame:
-    """Bloom (word_idx, word) state covering EXACTLY the index's
-    ``current_version``, whatever the sidecar's condition: fresh
-    sidecar -> as stored; stale sidecar (crash between index and
-    sidecar commits, or a conflict-losing writer) -> topped up from the
-    O(new-rows) snapshot diff; missing / parameter-mismatched sidecar,
-    or a diff range crossing a compaction -> rebuilt from the full
-    index once. Staleness can only UNDER-fill the stored filter, so
-    healing is always additive — never a correctness event, only a
-    cost one."""
-    from ocr_application_spark.operators.sketches import bloom_build, bloom_merge
-    from ocr_application_spark.sources.snapshots import (
-        read_snapshot,
-        read_snapshot_diff,
-        snapshot_versions,
-    )
-
-    bpath = _bloom_sidecar_path(index_path)
-    if snapshot_versions(bpath):
-        st = read_snapshot(spark, bpath)
-        meta = st.select("covers_version", "n_words", "n_hashes").first()
-        if meta is not None and (meta.n_words, meta.n_hashes) == (n_words, n_hashes):
-            state = st.select("word_idx", "word")
-            if meta.covers_version == current_version:
-                return state
-            if meta.covers_version < current_version:
-                try:
-                    added = read_snapshot_diff(
-                        spark, index_path, meta.covers_version, current_version
-                    )
-                    return bloom_merge(
-                        state.unionByName(
-                            bloom_build(added, F.col("fingerprint"), n_words, n_hashes)
-                        )
-                    )
-                except (ValueError, FileNotFoundError):
-                    pass  # range crosses a rewrite/expiry: rebuild below
-    full = read_snapshot(spark, index_path, version=current_version)
-    return bloom_build(full, F.col("fingerprint"), n_words, n_hashes)
-
-
-def _commit_bloom_sidecar(
-    state: DataFrame,
-    index_path: str,
-    covers_version: int,
-    n_words: int,
-    n_hashes: int,
-) -> None:
-    """Replace the sidecar with ``state`` stamped as covering the index
-    at ``covers_version``. A concurrent writer losing the publish race
-    is harmless — the surviving sidecar is at worst STALE (under-
-    filled), which the next ingest's healing path tops up — so the
-    conflict is swallowed, unlike index commits which must fail loud."""
-    from ocr_application_spark.sources.snapshots import (
-        SnapshotConflictError,
-        commit,
-    )
-
-    rows = state.select(
-        "word_idx",
-        "word",
-        F.lit(int(covers_version)).alias("covers_version"),
-        F.lit(int(n_words)).alias("n_words"),
-        F.lit(int(n_hashes)).alias("n_hashes"),
-    )
-    try:
-        commit(
-            rows,
-            _bloom_sidecar_path(index_path),
-            mode="replace_all",
-            op_label=f"bloom-covers-v{covers_version}",
-        )
-    except SnapshotConflictError:
-        pass
-
-
 def fingerprint_index_ingest(
     spark: SparkSession,
     index_path: str,
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     op_label: str = "fingerprint-ingest",
-    bloom_prefilter: bool = False,
-    bloom_words: int = 1 << 16,
-    bloom_hashes: int = 4,
 ) -> tuple[DataFrame, int]:
-    """Dedupe a crawl increment against the PERSISTED corpus fingerprint
-    index (a snapshot table of distinct ``md5(text)`` fingerprints),
-    append only the genuinely novel fingerprints as one snapshot commit,
-    and return ``(verdicts, committed_version)`` where verdicts is
+    """Dedupe a crawl increment (``doc_id``, ``text`` columns) against
+    the PERSISTED corpus fingerprint index (a snapshot table of distinct
+    ``md5(text)`` fingerprints), append only the genuinely novel
+    fingerprints as one snapshot commit, and return
+    ``(verdicts, committed_version)`` where verdicts is
 
       (doc_id, fingerprint, verdict) with verdict one of
         'known'            — fingerprint already in the index (recrawl dup)
@@ -179,15 +89,6 @@ def fingerprint_index_ingest(
     itself appends zero rows on replay (only fingerprints absent from
     the index are committed).
 
-    ``bloom_prefilter=True`` routes the index probe through a PERSISTED
-    Bloom sidecar (``{index_path}_bloom``, maintained incrementally in
-    O(novel) per ingest): fingerprints the filter rules out are
-    provably absent and skip the index join, so the corpus-sized
-    exchange carries only maybe_seen survivors. Verdicts, index
-    contents and replay-stability are BIT-IDENTICAL either way (no
-    false negatives) — the flag is purely a cost dial, and a stale or
-    lost sidecar self-heals from the snapshot diff.
-
     Reference analog: recrawl ingest into the pages store, SURVEY.md §2
     S7 + the exact-dedup family above.
     """
@@ -209,8 +110,7 @@ def fingerprint_index_ingest(
     # (or a concurrent ingest) degrades to a recompute, never a crash.
     fps = bounded_cache(
         docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.md5(F.coalesce(F.col(text_col), F.lit(""))).alias("fingerprint"),
+            "doc_id", F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("fingerprint")
         ),
         "fingerprint_index_ingest",
     )
@@ -220,42 +120,7 @@ def fingerprint_index_ingest(
         idx = read_snapshot(spark, index_path, version=versions[-1]).select(
             "fingerprint", F.col("keeper_doc_id").alias("_idx_keeper")
         )
-        if bloom_prefilter:
-            # Bloom pre-route (output PROVABLY identical — no false
-            # negatives, see sketches.bloom_antijoin_new): fingerprints
-            # the broadcast filter rules out skip the index join
-            # entirely, so the exchange against the (corpus-sized)
-            # index carries only the maybe_seen survivors — true
-            # recrawl dups plus the FP sliver — instead of the whole
-            # increment.
-            from ocr_application_spark.operators.sketches import bloom_probe
-
-            # bounded_cache: the healed state (possibly a diff top-up or
-            # a full-index rebuild) feeds the probe join, the caller's
-            # verdict materialization AND the post-commit sidecar merge
-            # — uncached it would re-heal once per action, up to 3x the
-            # exact cost the sidecar exists to avoid
-            state = bounded_cache(
-                _bloom_state_covering(
-                    spark, index_path, versions[-1], bloom_words, bloom_hashes
-                ),
-                "fingerprint_bloom_state",
-            )
-            probe = bloom_probe(
-                state,
-                keeper.select("fingerprint"),
-                "fingerprint",
-                bloom_words,
-                bloom_hashes,
-            )
-            km = keeper.join(probe, "fingerprint")
-            suspects = km.filter(F.col("maybe_seen")).drop("maybe_seen")
-            clear = km.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            marked = suspects.join(idx, "fingerprint", "left").unionByName(
-                clear.withColumn("_idx_keeper", F.lit(None).cast("long"))
-            )
-        else:
-            marked = keeper.join(idx, "fingerprint", "left")
+        marked = keeper.join(idx, "fingerprint", "left")
     else:  # bootstrap: empty index, every keeper is novel
         marked = keeper.withColumn("_idx_keeper", F.lit(None).cast("long"))
     # marked feeds BOTH the novel commit below and the returned verdict
@@ -266,44 +131,6 @@ def fingerprint_index_ingest(
         "fingerprint", "keeper_doc_id"
     )
     version = commit(novel, index_path, op_label=op_label)
-    if bloom_prefilter:
-        # sidecar maintenance is O(novel): fold the JUST-COMMITTED rows
-        # (read back via the manifest diff — crash-consistent, never a
-        # recompute of the join) into the state and stamp it as
-        # covering the new version. A crash before this commit leaves
-        # the sidecar stale, which the next ingest's healing tops up.
-        from ocr_application_spark.operators.sketches import bloom_build, bloom_merge
-        from ocr_application_spark.sources.snapshots import read_snapshot_diff
-
-        new_state = None
-        if versions:
-            try:
-                added = read_snapshot_diff(spark, index_path, versions[-1], version)
-                new_state = bloom_merge(
-                    state.unionByName(
-                        bloom_build(
-                            added, F.col("fingerprint"), bloom_words, bloom_hashes
-                        )
-                    )
-                )
-            except (ValueError, FileNotFoundError):
-                # a concurrent replace_all/merge landed between our
-                # snapshot read and our commit, so the diff range
-                # crosses a rewrite — our index commit already
-                # SUCCEEDED, so the ingest must not raise here; rebuild
-                # the state from the committed snapshot instead (the
-                # same fallback _bloom_state_covering uses)
-                pass
-        if new_state is None:
-            new_state = bloom_build(
-                read_snapshot(spark, index_path, version=version),
-                F.col("fingerprint"),
-                bloom_words,
-                bloom_hashes,
-            )
-        _commit_bloom_sidecar(
-            new_state, index_path, version, bloom_words, bloom_hashes
-        )
     rep = F.coalesce(F.col("_idx_keeper"), F.col("keeper_doc_id"))
     verdicts = fps.join(marked, "fingerprint").select(
         "doc_id",
@@ -321,15 +148,14 @@ def minhash_index_ingest(
     index_path: str,
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     op_label: str = "minhash-ingest",
 ) -> tuple[DataFrame, int]:
     """NEAR-dup sibling of ``fingerprint_index_ingest``: dedupe a crawl
-    increment against the PERSISTED corpus LSH index — a snapshot table
-    of (doc_id, band_id, sig_a, sig_b) MinHash band buckets of every
-    retained corpus document — append the band rows of the documents
-    that survive, and return ``(verdicts, committed_version)``:
+    increment (``doc_id``, ``text``) against the PERSISTED corpus LSH
+    index — a snapshot table of (doc_id, band_id, sig_a, sig_b) MinHash
+    band buckets of every retained corpus document — append the band
+    rows of the documents that survive, and return
+    ``(verdicts, committed_version)``:
 
       (doc_id, verdict) with verdict one of
         'known_neardup'        — some band bucket collides with the index
@@ -375,7 +201,7 @@ def minhash_index_ingest(
         snapshot_versions,
     )
 
-    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    d = docs.select("doc_id", "text")
     # slot-bounded like the fingerprint ingest: one live cache per
     # session, freed by the next minhash ingest call
     buck = bounded_cache(_band_buckets(d), "minhash_index_ingest")
@@ -943,9 +769,7 @@ _COMPONENTS_ORACLE = f"""
 """
 
 
-def propagate_components(
-    pairs: DataFrame, nodes: DataFrame, fallback_to_star: bool = True
-) -> DataFrame:
+def propagate_components(pairs: DataFrame, nodes: DataFrame) -> DataFrame:
     """Min-label propagation over an undirected pair graph.
 
     ``pairs(doc_a, doc_b)`` -> ``(doc_id, rep)`` with rep = smallest
@@ -953,12 +777,9 @@ def propagate_components(
     the universe (nodes absent from any pair become singletons,
     rep = doc_id). If the component diameter exceeds ``_CC_MAX_ITERS``
     (a poisoned crawl chaining near-dups into a long path WILL happen
-    at 10^12 docs), the default is to fall back automatically to the
-    O(log n)-round star contraction — same (doc_id, rep) contract, same
-    oracle — rather than make the operator a landmine a user must know
-    the escape hatch for; pass ``fallback_to_star=False`` to get the
-    loud RuntimeError instead (silent partial labels are never an
-    option).
+    at 10^12 docs), it finishes with the O(log n)-round star
+    contraction — same (doc_id, rep) contract, same oracle — and emits
+    a ``RuntimeWarning``; silent partial labels are never returned.
     """
     # symmetrize via ONE explode, not a self-union: the union form
     # evaluates the (potentially expensive) pairs plan twice while the
@@ -1037,23 +858,18 @@ def propagate_components(
     else:
         # never converged: silently returning partial labels would hand
         # the caller (and the driver gate) wrong components
-        edges.unpersist()
-        if fallback_to_star:
-            import warnings
+        import warnings
 
-            warnings.warn(
-                f"propagate_components hit the {_CC_MAX_ITERS}-superstep "
-                "cap (component diameter too large — adversarial near-dup "
-                "chain?); falling back to O(log n) star contraction",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            return propagate_components_star(pairs, nodes)
-        raise RuntimeError(
-            f"dedup_components did not converge: component diameter exceeds "
-            f"the {_CC_MAX_ITERS}-superstep cap; raise _CC_MAX_ITERS or use "
-            "propagate_components_star (O(log n) rounds)"
+        edges.unpersist()
+        warnings.warn(
+            f"propagate_components hit the {_CC_MAX_ITERS}-superstep cap "
+            "(component diameter too large — adversarial near-dup chain?); "
+            "the components were computed by O(log n) star contraction "
+            "instead and are exact",
+            RuntimeWarning,
+            stacklevel=2,
         )
+        return propagate_components_star(pairs, nodes)
     edges.unpersist()
     singletons = (
         nodes.select("doc_id")
@@ -1234,14 +1050,11 @@ def _gram_hash_sql(k: int) -> str:
 
 
 def winnow_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = _WINNOW_K,
-    w: int = _WINNOW_W,
+    df: DataFrame, k: int = _WINNOW_K, w: int = _WINNOW_W
 ) -> DataFrame:
-    """Per-document winnowed fingerprints -> (doc_id, fp_pos, fp_hash),
-    one row per selected (position, gram-hash) pair. Docs shorter than
+    """Per-document winnowed fingerprints of a (doc_id, text) frame ->
+    (doc_id, fp_pos, fp_hash), one row per selected (position,
+    gram-hash) pair. Docs shorter than
     k chars emit nothing; docs with fewer than w grams emit the single
     minimum gram (the standard short-doc clamp). ZERO shuffles: the
     per-position keys, the w-wide sliding minimum and the per-doc
@@ -1255,10 +1068,8 @@ def winnow_fingerprints(
         raise ValueError(f"k must be in [2, 64], got {k}")
     if not 2 <= w <= 1024:
         raise ValueError(f"w must be in [2, 1024], got {w}")
-    t = F.lower(F.coalesce(F.col(text_col), F.lit("")))
-    d = df.select(F.col(id_col).alias("doc_id"), t.alias("t")).filter(
-        F.length("t") >= k
-    )
+    t = F.lower(F.coalesce(F.col("text"), F.lit("")))
+    d = df.select("doc_id", t.alias("t")).filter(F.length("t") >= k)
     # packed select keys per gram position (integer-exact spec above)
     keys = _with_code_points(
         "t",
@@ -1358,36 +1169,33 @@ def winnow_index_ingest(
     index_path: str,
     docs: DataFrame,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     op_label: str = "winnow-ingest",
-    min_shared: int = _WINNOW_MIN_SHARED,
-    max_posting: int = _WINNOW_MAX_POSTING,
 ) -> tuple[DataFrame, int]:
     """PARTIAL-overlap sibling of ``minhash_index_ingest``: dedupe a
     crawl increment against the PERSISTED corpus winnowing index — a
     snapshot table of (doc_id, fp_hash) distinct winnowed fingerprints
     of every retained document — append the fingerprint rows of the
-    documents that survive, and return ``(verdicts, version)``:
+    documents that survive, and return ``(verdicts, version)``.
+    ``docs`` carries ``doc_id`` and ``text``; verdicts are
 
       (doc_id, verdict) with verdict one of
-        'known_overlap'        — shares >= min_shared distinct
+        'known_overlap'        — shares >= ``_WINNOW_MIN_SHARED`` distinct
                                  fingerprints with ONE retained corpus
                                  doc (substring-level overlap with
                                  retained content — quotes, templates,
                                  re-hosted fragments minhash-of-the-
                                  whole-doc misses when the rest differs)
-        'overlap_in_increment' — no corpus evidence, but >= min_shared
+        'overlap_in_increment' — no corpus evidence, but as many
                                  shared with a LOWER doc_id in batch
         'novel'                — neither (incl. docs too short to gram)
 
     Evidence is PAIRWISE (per-pair distinct-fingerprint count), and
     boilerplate fingerprints are df-capped IN THE ALGORITHM like the
-    Jaccard posting plan: hashes held by more than ``max_posting``
-    docs on the relevant side are excluded from pair generation before
-    any join — the restriction of the index to the increment's hash
-    set keeps every posting of a matched hash, so the capped df is the
-    hash's TRUE index df, not a sample. Same O(increment) recrawl
+    Jaccard posting plan: hashes held by more than
+    ``_WINNOW_MAX_POSTING`` docs on the relevant side are excluded from
+    pair generation before any join — the restriction of the index to
+    the increment's hash set keeps every posting of a matched hash, so
+    the capped df is the hash's TRUE index df, not a sample. Same O(increment) recrawl
     shape and the same replay-stable precedence as the minhash ingest:
     (1) a doc the index retains stays 'novel' on replay; (2) lower-id
     in-batch overlap; (3) corpus overlap with another doc's rows."""
@@ -1397,12 +1205,7 @@ def winnow_index_ingest(
         snapshot_versions,
     )
 
-    min_shared, max_posting = int(min_shared), int(max_posting)
-    if min_shared < 1:
-        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    if max_posting < 1:
-        raise ValueError(f"max_posting must be >= 1, got {max_posting}")
-    d = docs.select(F.col(id_col).alias("doc_id"), F.col(text_col).alias("text"))
+    d = docs.select("doc_id", "text")
     fps = bounded_cache(_winnow_doc_fps(d), "winnow_index_ingest")
     batch_ids = d.select("doc_id").distinct()
     versions = snapshot_versions(index_path)
@@ -1414,7 +1217,7 @@ def winnow_index_ingest(
         eligible_idx = midx.join(
             midx.groupBy("fp_hash")
             .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= max_posting)
+            .filter(F.col("_df") <= _WINNOW_MAX_POSTING)
             .select("fp_hash"),
             "fp_hash",
             "left_semi",
@@ -1428,7 +1231,7 @@ def winnow_index_ingest(
             )
             .groupBy(F.col("x.doc_id").alias("doc_id"), F.col("i.doc_id").alias("other"))
             .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") >= min_shared)
+            .filter(F.col("_n") >= _WINNOW_MIN_SHARED)
             .select("doc_id")
             .distinct()
         )
@@ -1441,7 +1244,7 @@ def winnow_index_ingest(
     eligible_inc = fps.join(
         fps.groupBy("fp_hash")
         .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= max_posting)
+        .filter(F.col("_df") <= _WINNOW_MAX_POSTING)
         .select("fp_hash"),
         "fp_hash",
         "left_semi",
@@ -1455,7 +1258,7 @@ def winnow_index_ingest(
         )
         .groupBy(F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("other"))
         .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") >= min_shared)
+        .filter(F.col("_n") >= _WINNOW_MIN_SHARED)
         .select("doc_id")
         .distinct()
     )

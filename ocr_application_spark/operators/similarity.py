@@ -353,22 +353,20 @@ def embedding_index_ingest(
     index_path: str,
     vectors: DataFrame,
     *,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-    tau: float = _NEARDUP_TAU,
     op_label: str = "embedding-ingest",
 ) -> tuple[DataFrame, int]:
     """Semantic sibling of ``dedup.fingerprint_index_ingest`` /
     ``dedup.minhash_index_ingest``: dedupe an embedding increment
-    against the PERSISTED corpus vector index — a snapshot table of
-    (vec_id, bucket, qv, n) rows (sign-LSH bucket, quantized vector,
-    integer self-norm) of every retained vector — append the rows of
-    the vectors that survive, and return ``(verdicts, version)``:
+    (``vec_id``, ``embedding``) against the PERSISTED corpus vector
+    index — a snapshot table of (vec_id, bucket, qv, n) rows (sign-LSH
+    bucket, quantized vector, integer self-norm) of every retained
+    vector — append the rows of the vectors that survive, and return
+    ``(verdicts, version)``:
 
       (vec_id, verdict) with verdict one of
-        'known_neardup'        — cosine >= tau with an index vector of
-                                 another, out-of-batch doc sharing its
-                                 LSH bucket
+        'known_neardup'        — cosine >= ``_NEARDUP_TAU`` with an index
+                                 vector of another, out-of-batch doc
+                                 sharing its LSH bucket
         'neardup_in_increment' — no corpus match, but cosine >= tau
                                  with a LOWER vec_id in this increment
         'novel'                — no match; appended to the index
@@ -396,8 +394,7 @@ def embedding_index_ingest(
 
     from ocr_application_spark.session import bounded_cache
 
-    d = vectors.select(F.col(id_col).alias("vec_id"), F.col(emb_col).alias("embedding"))
-    q = d.select("vec_id", _quant(F.col("embedding")).alias("qv"))
+    q = vectors.select("vec_id", _quant(F.col("embedding")).alias("qv"))
     # slot-bounded like the fingerprint ingest: one live cache per
     # session, freed by the next embedding ingest call
     b = bounded_cache(
@@ -408,8 +405,10 @@ def embedding_index_ingest(
     )
     batch_ids = b.select("vec_id").distinct()
 
-    def _cos(xq, xn, yq, yn):
-        return _dot(xq, yq).cast("double") / F.sqrt(xn.cast("double") * yn.cast("double"))
+    def _near(x, y):  # cosine of aliased sides x, y reaches tau
+        xn, yn = F.col(f"{x}.n").cast("double"), F.col(f"{y}.n").cast("double")
+        cos = _dot(F.col(f"{x}.qv"), F.col(f"{y}.qv")).cast("double") / F.sqrt(xn * yn)
+        return cos >= _NEARDUP_TAU
 
     versions = snapshot_versions(index_path)
     if versions:
@@ -421,9 +420,7 @@ def embedding_index_ingest(
                 (F.col("x.bucket") == F.col("i.bucket"))
                 & (F.col("i.vec_id") != F.col("x.vec_id")),
             )
-            .filter(
-                _cos(F.col("x.qv"), F.col("x.n"), F.col("i.qv"), F.col("i.n")) >= tau
-            )
+            .filter(_near("x", "i"))
             .select(F.col("x.vec_id").alias("vec_id"))
             .distinct()
         )
@@ -440,7 +437,7 @@ def embedding_index_ingest(
             (F.col("a.bucket") == F.col("c.bucket"))
             & (F.col("c.vec_id") < F.col("a.vec_id")),
         )
-        .filter(_cos(F.col("a.qv"), F.col("a.n"), F.col("c.qv"), F.col("c.n")) >= tau)
+        .filter(_near("a", "c"))
         .select(F.col("a.vec_id").alias("vec_id"))
         .distinct()
     )

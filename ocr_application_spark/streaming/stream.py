@@ -260,11 +260,10 @@ def run_stream_ingest(
     checkpoint: str,
     max_files: int = 8,
     family: str = "exact",
-    ingest_kwargs: dict | None = None,
 ):
     """Continuous crawl ingestion with corpus-level dedup against a
-    persisted index — ONE streaming front-end for all three batch
-    ingest families (``family=``):
+    persisted index — ONE streaming front-end for all four batch
+    ingest families (``family=``), each run with its fixed defaults:
 
       'exact'    — ``dedup.fingerprint_index_ingest`` over a document
                    stream; verdicts per (doc_id, fingerprint)
@@ -274,11 +273,6 @@ def run_stream_ingest(
                    stream; PARTIAL-overlap verdicts per doc_id
       'semantic' — ``similarity.embedding_index_ingest`` over a vector
                    stream (``VECTORS_SCHEMA``); verdicts per vec_id
-
-    ``ingest_kwargs`` forwards family-specific dials verbatim (e.g.
-    ``{"bloom_prefilter": True}`` routes the exact family through its
-    persisted Bloom sidecar — verdicts bit-identical, see
-    ``fingerprint_index_ingest``).
 
     Each micro-batch runs one ingest against the persisted index (ONE
     snapshot commit per epoch, novel entries only) and lands the
@@ -346,20 +340,6 @@ def run_stream_ingest(
     else:
         raise ValueError(f"unknown ingest family {family!r}")
 
-    if ingest_kwargs:
-        # fail BEFORE start(): a family-mismatched dial (e.g.
-        # bloom_prefilter with minhash) would otherwise surface as a
-        # TypeError inside the first micro-batch, after the checkpoint
-        # dir exists and the epoch already persisted its input
-        import inspect
-
-        unknown = set(ingest_kwargs) - set(inspect.signature(ingest).parameters)
-        if unknown:
-            raise ValueError(
-                f"ingest_kwargs {sorted(unknown)} not accepted by the "
-                f"{family!r} family ({ingest.__name__})"
-            )
-
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         if epoch_id == 0:
             # fresh checkpoint => fresh output (see docstring)
@@ -382,11 +362,7 @@ def run_stream_ingest(
         batch_df.persist()
         try:
             verdicts, _v = ingest(
-                spark,
-                index_path,
-                batch_df,
-                op_label=f"epoch-{epoch_id}",
-                **(ingest_kwargs or {}),
+                spark, index_path, batch_df, op_label=f"epoch-{epoch_id}"
             )
             (
                 batch_df.join(verdicts, id_col)

@@ -851,68 +851,6 @@ def test_merge_works_under_escaping_needy_path(spark, tmpdir_scratch):
     assert out == {"u-0", "a-1", "a-2", "a-3", "u-9"}
 
 
-def test_fingerprint_ingest_bloom_prefilter_identical_and_heals(spark, tmpdir_scratch):
-    """The Bloom sidecar is a pure cost dial: with an absurdly
-    undersized filter (guaranteed FP storms), verdict sequences and
-    index contents must be BIT-identical to the plain path; a sidecar
-    left stale by interleaved bloom-off ingests (the crash-window
-    shape) must self-heal from the snapshot diff; changing filter
-    parameters must rebuild rather than misread the old state."""
-    import random
-
-    from ocr_application_spark.operators.dedup import (
-        _bloom_sidecar_path,
-        fingerprint_index_ingest,
-    )
-
-    rng = random.Random(31)
-    pool = [f"text variant {i}" for i in range(10)]
-    batches, next_id = [], 0
-    for _ in range(4):
-        rows = []
-        for _ in range(rng.randint(5, 14)):
-            rows.append((next_id, rng.choice(pool)))
-            next_id += 1
-        batches.append(rows)
-
-    plain_idx = tmpdir_scratch + "/plain_idx"
-    bloom_idx = tmpdir_scratch + "/bloom_idx"
-    for bnum, rows in enumerate(batches):
-        df = spark.createDataFrame(rows, "doc_id long, text string")
-        verd_p, vp = fingerprint_index_ingest(spark, plain_idx, df)
-        # batch 2 ingests bloom-OFF on the bloom index too -> sidecar
-        # goes stale and batch 3 must heal it from the diff
-        use_bloom = bnum != 2
-        verd_b, vb = fingerprint_index_ingest(
-            spark, bloom_idx, df, bloom_prefilter=use_bloom, bloom_words=4,
-            bloom_hashes=2,
-        )
-        got_p = {r["doc_id"]: r["verdict"] for r in verd_p.collect()}
-        got_b = {r["doc_id"]: r["verdict"] for r in verd_b.collect()}
-        assert got_b == got_p, (bnum, got_b, got_p)
-        assert vp == vb
-    rows_p = sorted(map(tuple, read_snapshot(spark, plain_idx).collect()))
-    rows_b = sorted(map(tuple, read_snapshot(spark, bloom_idx).collect()))
-    assert rows_b == rows_p
-
-    # sidecar exists, stamped as covering the latest index version
-    side = read_snapshot(spark, _bloom_sidecar_path(bloom_idx))
-    meta = side.select("covers_version", "n_words", "n_hashes").first()
-    assert (meta.covers_version, meta.n_words, meta.n_hashes) == (vb, 4, 2)
-
-    # parameter change: old state must be rebuilt, verdicts still exact
-    replay = spark.createDataFrame(batches[0], "doc_id long, text string")
-    verd_r, _ = fingerprint_index_ingest(
-        spark, bloom_idx, replay, bloom_prefilter=True, bloom_words=64,
-        bloom_hashes=3,
-    )
-    verd_pr, _ = fingerprint_index_ingest(spark, plain_idx, replay)
-    assert {r["doc_id"]: r["verdict"] for r in verd_r.collect()} == {
-        r["doc_id"]: r["verdict"] for r in verd_pr.collect()
-    }
-    assert read_snapshot(spark, bloom_idx).count() == len(rows_p)  # no growth
-
-
 def test_winnow_index_ingest_recrawl_lifecycle(spark, tmpdir_scratch):
     """Partial-overlap recrawl ingest against the persisted winnowing
     index: bootstrap commits every doc's fingerprint rows, an

@@ -12,11 +12,20 @@ pattern cannot come back.
 One query registry: only ``operators/registry.py`` holds ``QUERIES``
 and ``ORACLES``; operator modules register through its ``op`` and
 define no ``_q`` decorator of their own.
+
+Dial-free recrawl ingest: the five ingest entry points share one
+signature, ``(spark, path, frame, *, op_label)``, the streaming
+front-end forwards nothing else, and component propagation has no
+switch.
 """
 
 import ast
+import importlib
+import inspect
 import pathlib
 import re
+
+import pytest
 
 PKG = pathlib.Path(__file__).resolve().parents[1] / "ocr_application_spark"
 _SUBSTR = {"substring", "substr"}
@@ -207,3 +216,43 @@ def test_only_the_registry_holds_queries_and_oracles():
         and (h := registry_offenders(ast.parse(f.read_text(encoding="utf-8"))))
     }
     assert hits == {}, hits
+
+
+def _shape(fn):
+    """Parameter names of ``fn`` as written, with ``*`` before the
+    keyword-only ones."""
+    out, star = [], False
+    for p in inspect.signature(fn).parameters.values():
+        if p.kind == p.KEYWORD_ONLY and not star:
+            out.append("*")
+            star = True
+        out.append({p.VAR_POSITIONAL: "*", p.VAR_KEYWORD: "**"}.get(p.kind, "") + p.name)
+    return ", ".join(out)
+
+
+_INGEST = "spark, index_path, docs, *, op_label"
+
+
+@pytest.mark.parametrize(
+    "mod, name, shape",
+    [
+        ("operators.dedup", "fingerprint_index_ingest", _INGEST),
+        ("operators.dedup", "minhash_index_ingest", _INGEST),
+        ("operators.dedup", "winnow_index_ingest", _INGEST),
+        (
+            "operators.similarity",
+            "embedding_index_ingest",
+            _INGEST.replace("docs", "vectors"),
+        ),
+        ("operators.cdc", "cdc_store_ingest", _INGEST.replace("index", "store")),
+        (
+            "streaming.stream",
+            "run_stream_ingest",
+            "spark, input_path, index_path, out_path, checkpoint, max_files, family",
+        ),
+        ("operators.dedup", "propagate_components", "pairs, nodes"),
+    ],
+)
+def test_recrawl_entry_points_take_no_dials(mod, name, shape):
+    fn = getattr(importlib.import_module(f"ocr_application_spark.{mod}"), name)
+    assert _shape(fn) == shape
