@@ -25,7 +25,7 @@ groupBy. The chunk-hash key space is ~text_bytes/40
 a hot boilerplate chunk costs one counter, not a posting blowup.
 
 ``cdc_store_ingest`` keeps the chunks across crawls: a content-
-addressed store of distinct chunk hashes, probed by one semi-join
+addressed store of distinct chunk hashes, probed by one left join
 against the store's latest snapshot, so a recrawl appends only the
 chunks the store has never seen.
 
@@ -39,6 +39,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ocr_application_spark.operators.dedup import _gram_hash_sql, _with_code_points
 from ocr_application_spark.operators.registry import op
@@ -184,18 +185,27 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every distinct chunk once; a recrawl increment only appends chunks
 # whose hash the store has never seen, and the per-doc report prices
 # the dedup — how many bytes the increment actually adds vs re-
-# references. The verdict work is O(increment): the store is probed
-# with a semi-join restricted to the increment's hashes. The probe
-# still scans the store's chunk_hash column and exchanges it once per
-# ingest — O(store) bytes of bigint keys, a few seconds at sf1; a
-# hash-bucketed layout that skips the exchange measured at parity there
-# (PERF.md §7c).
+# references. The store is probed by a left join of the increment's
+# chunks against the distinct chunk_hash column of its pre-commit
+# snapshot: O(store) bytes of bigint keys exchanged once per ingest, a
+# few seconds at sf1; a hash-bucketed layout that skips the exchange
+# measured at parity there (PERF.md §7c).
 #
 # Attribution is deterministic: a hash novel to the store is charged
 # to its FIRST holder in the increment (min (doc_id, chunk_no));
 # later holders count it as 'dup_in_increment', store hits as
 # 'known'. Replay-stable like the sibling ingests: re-ingesting the
 # same batch finds every hash in the store -> zero new bytes.
+#
+# Verdicts are computed once per call: one plan chunks the increment,
+# probes the store and takes the first holder with a window over the
+# probe's chunk_hash partitioning, and its per-chunk rows are cached.
+# The novel-row commit and the per-doc report both read that cache, so
+# the report's collect() is one aggregate over cached rows, not a
+# second pass through chunk ⋈ store ⋈ owner (jobs per call: PERF.md
+# §7d). The window sends every holder of one hash to one task, with no
+# map-side combine: a hot boilerplate hash is one task's sort (sf1
+# all-dup replay in PERF.md §7c).
 
 
 def cdc_store_ingest(
@@ -217,9 +227,12 @@ def cdc_store_ingest(
     (this ingest's own novel chunks never flip to 'known'), and any
     commit mode before it — append or a rewrite such as
     ``overwrite_partitions`` — is seen exactly as the snapshot lists
-    it. The chunked increment is held in one ``bounded_cache`` slot,
-    which the next call frees: repeated ingests in one session keep one
-    cached copy, not one per call."""
+    it. The per-chunk verdicts (doc_id, chunk_hash, chunk_chars,
+    verdict) are held in one ``bounded_cache`` slot that both the
+    commit and the report read, and which the next call frees:
+    repeated ingests in one session keep one cached copy, not one per
+    call. A report collected after its slot is freed recomputes the
+    same rows from the docs and the pinned snapshot."""
     from ocr_application_spark.session import bounded_cache
     from ocr_application_spark.sources.snapshots import (
         commit,
@@ -227,39 +240,49 @@ def cdc_store_ingest(
         snapshot_versions,
     )
 
-    # reused by verdicts AND the novel-row commit
-    ch = bounded_cache(cdc_chunks(docs), "cdc_store_ingest")
+    ch = cdc_chunks(docs)
+    known = F.lit(False)
     versions = snapshot_versions(store_path)
     if versions:
         store = (
             read_snapshot(spark, store_path, version=versions[-1])
-            .select("chunk_hash")
-            # probe restricted to the increment's hash set
-            .join(ch.select("chunk_hash").distinct(), "chunk_hash", "left_semi")
+            .select("chunk_hash", F.lit(True).alias("in_store"))
             .distinct()
-            .withColumn("in_store", F.lit(True))
         )
-    else:
-        store = (
-            ch.filter(F.lit(False)).select("chunk_hash").withColumn("in_store", F.lit(True))
-        )
-    first = (
-        ch.groupBy("chunk_hash")
-        .agg(F.min(F.struct("doc_id", "chunk_no")).alias("o"))
-        .select("chunk_hash", F.col("o.doc_id").alias("own_doc"), F.col("o.chunk_no").alias("own_no"))
-    )
-    j = ch.join(store, "chunk_hash", "left").join(first, "chunk_hash")
+        ch = ch.join(store, "chunk_hash", "left")
+        known = F.col("in_store").isNotNull()
+    owner = F.col("o")
     verdict = (
-        F.when(F.col("in_store").isNotNull(), F.lit("known"))
+        F.when(known, F.lit("known"))
         .when(
-            (F.col("doc_id") == F.col("own_doc")) & (F.col("chunk_no") == F.col("own_no")),
+            (F.col("doc_id") == owner["doc_id"]) & (F.col("chunk_no") == owner["chunk_no"]),
             F.lit("novel"),
         )
         .otherwise(F.lit("dup_in_increment"))
     )
-    jj = j.withColumn("verdict", verdict)
+    verdicts = ch.withColumn(
+        "o", F.min(F.struct("doc_id", "chunk_no")).over(Window.partitionBy("chunk_hash"))
+    ).select("doc_id", "chunk_hash", "chunk_chars", verdict.alias("verdict"))
+    # A cached plan is planned when persist() runs, by default with AQE
+    # barred from changing its partitioning: the window's shuffle would
+    # keep spark.sql.shuffle.partitions partitions and every commit would
+    # write that many files. Allowing it for this one persist lets AQE
+    # coalesce them to its advisory size, as for an uncached write. The
+    # flag only decides how a cache is partitioned, never its rows.
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        v = bounded_cache(verdicts, "cdc_store_ingest")
+    finally:
+        spark.conf.set(key, prev)
+    is_novel = F.col("verdict") == "novel"
+    # one row per novel hash: its owner's row (two only if doc_ids repeat)
+    version = commit(
+        v.filter(is_novel).select("chunk_hash", "chunk_chars"), store_path, op_label=op_label
+    )
     report = (
-        jj.groupBy("doc_id")
+        v.groupBy("doc_id")
         .agg(
             F.count("*").cast("long").alias("n_chunks"),
             F.sum("chunk_chars").cast("long").alias("total_chars"),
@@ -267,10 +290,8 @@ def cdc_store_ingest(
             F.sum((F.col("verdict") == "dup_in_increment").cast("int"))
             .cast("long")
             .alias("n_dup_increment"),
-            F.sum((F.col("verdict") == "novel").cast("int")).cast("long").alias("n_novel"),
-            F.sum(
-                F.when(F.col("verdict") == "novel", F.col("chunk_chars")).otherwise(0)
-            )
+            F.sum(is_novel.cast("int")).cast("long").alias("n_novel"),
+            F.sum(F.when(is_novel, F.col("chunk_chars")).otherwise(0))
             .cast("long")
             .alias("novel_chars"),
         )
@@ -279,9 +300,6 @@ def cdc_store_ingest(
             F.expr("cast(10000 * (total_chars - novel_chars) div total_chars as bigint)"),
         )
     )
-    # exactly one row per novel hash (its attribution owner's row)
-    novel_rows = jj.filter(F.col("verdict") == "novel").select("chunk_hash", "chunk_chars")
-    version = commit(novel_rows, store_path, op_label=op_label)
     return report, version
 
 

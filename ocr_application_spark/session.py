@@ -19,6 +19,11 @@ import threading
 
 from pyspark.sql import SparkSession
 
+# Spark's default log4j2 config plus per-message filters for WARNs the
+# JVM logs while it starts (the file says which); absent when the
+# package runs from a --py-files zip, whose JVM spark-submit started.
+_LOG4J2_CONF = os.path.join(os.path.dirname(os.path.abspath(__file__)), "log4j2.properties")
+
 
 def get_spark(
     app_name: str = "ocr_application_spark",
@@ -72,7 +77,15 @@ def get_spark(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    if os.path.isfile(_LOG4J2_CONF):
+        # read only by a driver JVM this call launches; a caller's own
+        # options come after it, so their -D settings win
+        opts = f"-Dlog4j2.configurationFile={_LOG4J2_CONF} "
+        conf["spark.driver.extraJavaOptions"] = (
+            opts + conf.get("spark.driver.extraJavaOptions", "")
+        ).strip()
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -86,9 +99,14 @@ def get_spark(
     return spark
 
 
-# (logger, message regex) pairs get_spark filters out. Each message is
-# benign by construction and repeats often enough to bury real signals
-# in the bench tail (the driver keeps ~2 KB of output):
+# (logger, message regex) pairs get_spark filters out at runtime. Each
+# message is benign by construction and repeats often enough to bury
+# real signals in the bench tail (the driver keeps ~2 KB of output).
+# These stay runtime filters, not entries in log4j2.properties: a job
+# run by spark-submit gets a JVM that spark-submit started and
+# configured before the job's Python ran, so get_spark's
+# extraJavaOptions never reach it, while a filter attached here works
+# in both kinds of JVM for every message logged after start.
 # - release_local_checkpoint frees checkpoint blocks per iteration and
 #   every release logs an unpersist-of-truncated-lineage WARN; the
 #   release sites guarantee the freed frames are never recomputed.

@@ -7,6 +7,7 @@ chunk-hash multiset intact.
 """
 
 import contextlib
+import glob
 import hashlib
 import io
 import re
@@ -275,7 +276,7 @@ def test_cdc_store_ingest_after_overwrite_commit(spark, tmp_path):
 def test_cdc_store_ingest_holds_one_cached_copy_across_calls(spark, tmp_path):
     """State that outlives one call: three ingests in one session
     (bootstrap, recrawl, replay) must not pile up persisted RDDs. The
-    chunked increment sits in one bounded_cache slot that the next call
+    per-chunk verdicts sit in one bounded_cache slot that the next call
     frees, so after the first call the persisted-RDD count stays flat."""
     from ocr_application_spark.operators.cdc import cdc_store_ingest
 
@@ -290,3 +291,134 @@ def test_cdc_store_ingest_holds_one_cached_copy_across_calls(spark, tmp_path):
     assert persisted[1:] == [persisted[0]] * 2, persisted
     assert reports[1] != reports[2]
     assert sum(r[5] for r in reports[2]) == 0  # the replay's n_novel
+
+
+def _ingest_model(store, docs):
+    """Pure-Python ``cdc_store_ingest`` on ``_ref_cdc`` chunks: the
+    owner of a hash is its min (doc_id, chunk_no) holder, store hits
+    are 'known'. Returns (sorted report rows, store hash set after the
+    commit)."""
+    rows = [(d, *c) for d, t in docs for c in _ref_cdc(t)]
+    owner = {}
+    for d, no, _chars, h in rows:
+        owner[h] = min(owner.get(h, (d, no)), (d, no))
+    per_doc, novel = {}, set()
+    for d, no, chars, h in rows:
+        v = "known" if h in store else "novel" if (d, no) == owner[h] else "dup"
+        a = per_doc.setdefault(d, [0, 0, 0, 0, 0, 0])
+        a[0] += 1
+        a[1] += chars
+        a[2] += v == "known"
+        a[3] += v == "dup"
+        a[4] += v == "novel"
+        a[5] += chars if v == "novel" else 0
+        if v == "novel":
+            novel.add(h)
+    report = sorted(
+        (d, *a, 10000 * (a[1] - a[5]) // a[1]) for d, a in per_doc.items()
+    )
+    return report, store | novel
+
+
+_WORDS = ["alpha ", "beta ", "gamma ", "délta ", "漢字 ", "😀 ", "template tail ", "x"]
+_doc_text = st.lists(st.sampled_from(_WORDS), min_size=0, max_size=60).map("".join)
+
+
+@given(
+    base=st.lists(_doc_text, min_size=1, max_size=5),
+    new=st.lists(st.one_of(st.none(), _doc_text), max_size=3),
+    pick=st.integers(0, 4),
+    at=st.integers(0, 10_000),
+    tie=st.booleans(),
+)
+@example(
+    base=["alpha beta gamma délta " * 8, "template tail " * 12],
+    new=[None, ""], pick=0, at=37, tie=True,
+)
+@settings(max_examples=6, deadline=None)
+def test_cdc_store_ingest_matches_python_model(spark, tmp_path_factory, base, new, pick, at, tie):
+    """A bootstrap and an increment into a fresh store against
+    ``_ingest_model``. The increment repeats a doc's text twice in one
+    doc, clones a doc under two new ids, changes one char of a stored
+    doc, carries NULL and empty text, and (``tie``) sends the edited
+    doc twice under one doc_id below every other holder, so the owner
+    rows tie on (doc_id, chunk_no) and both count as 'novel'."""
+    from ocr_application_spark.operators.cdc import cdc_store_ingest
+    from ocr_application_spark.sources.snapshots import read_snapshot
+
+    src = base[pick % len(base)]
+    edited = src[:at % (len(src) + 1)] + "Q" + src[at % (len(src) + 1) + 1 :]
+    inc = [(100, src + src), (101, src), (102, src), (103, edited), (104, None), (105, "")]
+    inc += [(110 + i, t) for i, t in enumerate(new)]
+    if tie:  # doc 99 owns the edit's chunks, in two tied rows each
+        inc += [(99, edited), (99, edited)]
+    docs = list(enumerate(base))
+    store_path = str(tmp_path_factory.mktemp("cdc_model") / "store")
+    store = set()
+    for batch in (docs, inc):
+        df = spark.createDataFrame(batch, "doc_id long, text string")
+        rep, _ = cdc_store_ingest(spark, store_path, df)
+        want, store = _ingest_model(store, batch)
+        assert _rows(rep) == want
+        got = {r[0] for r in read_snapshot(spark, store_path).select("chunk_hash").collect()}
+        assert got == store
+
+
+def test_cdc_store_report_survives_cache_loss(spark, tmp_path):
+    """State that outlives one call: the report of a recrawl ingest
+    reads the cached verdicts, and once that cache is gone (its slot
+    released, or freed by the next ingest into another store) it
+    recomputes from the docs and the pinned pre-commit snapshot. The
+    rows stay the same and the ingest's own novel chunks never flip to
+    'known', although the commit has put them in the store."""
+    from ocr_application_spark.operators.cdc import cdc_store_ingest
+    from ocr_application_spark.session import release_slot
+
+    bdf, idf = _ingest_fixture(spark)
+    store = str(tmp_path / "s_loss")
+    cdc_store_ingest(spark, store, bdf)[0].collect()
+    rep, _ = cdc_store_ingest(spark, store, idf)
+    want = _rows(rep)
+    assert sum(r[5] for r in want) > 0  # the increment has novel chunks
+    release_slot("cdc_store_ingest")
+    assert _rows(rep) == want
+    assert _rows(rep.select("*")) == want  # a fresh plan: no cache to find
+    cdc_store_ingest(spark, str(tmp_path / "s_other"), bdf)
+    assert _rows(rep) == want
+    assert _rows(rep.select("*")) == want
+
+
+def _exec_nodes(plan):
+    """Class names of an executed plan's nodes, through AQE wrappers and
+    query stages; a cached relation's own plan is not descended into."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStageExec"):
+        kids = [plan.plan()]
+    else:
+        ch = plan.children()
+        kids = [ch.apply(i) for i in range(ch.size())]
+    return [name] + [n for k in kids for n in _exec_nodes(k)]
+
+
+def test_cdc_store_report_reads_only_cached_verdicts(spark, tmp_path):
+    """Verdicts once per call: after the ingest returns, its report is
+    an aggregate over the cached verdicts. Its executed plan scans the
+    cache and no parquet file: not the docs, not the store. The commit
+    reads the same cache, whose partitions AQE may still coalesce: a
+    small commit writes one file, not one per shuffle partition."""
+    from ocr_application_spark.operators.cdc import cdc_store_ingest
+
+    bdf, idf = _ingest_fixture(spark)
+    store = str(tmp_path / "s_once")
+    cdc_store_ingest(spark, store, bdf)
+    for docs in (idf, idf):  # a recrawl, then a replay
+        rep, _ = cdc_store_ingest(spark, store, docs)
+        rep.collect()
+        nodes = _exec_nodes(rep._jdf.queryExecution().executedPlan())
+        assert "InMemoryTableScanExec" in nodes, nodes
+        assert "FileSourceScanExec" not in nodes, nodes
+    commits = glob.glob(f"{store}/data/c*")
+    assert len(commits) == 3
+    assert all(len(glob.glob(f"{c}/*.parquet")) == 1 for c in commits), commits

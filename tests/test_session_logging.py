@@ -2,9 +2,16 @@
 ``session._DROPPED_WARNINGS`` is filtered out by message, while every
 other WARN from the same logger still shows. The streaming and
 task-binary events are raised for real with the filter off first, so a
-filter on the wrong logger name fails here."""
+filter on the wrong logger name fails here. The one WARN logged while
+the JVM starts is dropped by the log4j2.properties file get_spark hands
+to a JVM it launches, checked in a fresh subprocess."""
 
 import contextlib
+import os
+import pathlib
+import re
+import subprocess
+import sys
 
 import pytest
 from pyspark.sql import functions as F
@@ -120,3 +127,36 @@ def test_real_event_dropped_other_warnings_kept(
     text = out.toString()
     assert marker not in text, text
     assert "another warning from this logger" in text, text
+
+
+_FRESH = """
+from ocr_application_spark.session import get_spark
+s = get_spark("fresh-log", cores=1)
+s.sparkContext._jvm.org.apache.logging.log4j.LogManager.getLogger(
+    "org.apache.hadoop.util.NativeCodeLoader").warn("another loader warning")
+s.range(3).count()
+s.stop()
+"""
+
+
+def test_fresh_session_drops_native_code_loader_warning_only():
+    """The NativeCodeLoader WARN is logged while the JVM starts, before
+    any runtime filter exists: get_spark hands the JVM the package's
+    log4j2.properties, whose per-message filter drops it. Another WARN
+    from that logger still shows, in Spark's default console layout,
+    and the root level is Spark's own (the shell WARN default)."""
+    root = pathlib.Path(__file__).resolve().parents[1]
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    env["PYTHONPATH"] = os.pathsep.join(filter(None, [str(root), env.get("PYTHONPATH")]))
+    proc = subprocess.run(
+        [sys.executable, "-c", _FRESH], cwd=root, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr
+    err = proc.stderr
+    assert "NativeCodeLoader: Unable to load native-hadoop" not in err, err
+    assert re.search(
+        r"^\d\d/\d\d/\d\d \d\d:\d\d:\d\d WARN NativeCodeLoader: another loader warning$",
+        err, re.M,
+    ), err
+    assert 'Setting default log level to "WARN"' in err, err

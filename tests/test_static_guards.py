@@ -17,6 +17,9 @@ Dial-free recrawl ingest: the five ingest entry points share one
 signature, ``(spark, path, frame, *, op_label)``, the streaming
 front-end forwards nothing else, and component propagation has no
 switch.
+
+One verdict pass per chunk-store ingest: ``cdc_store_ingest`` chunks
+its docs once and caches the verdicts once.
 """
 
 import ast
@@ -256,3 +259,20 @@ _INGEST = "spark, index_path, docs, *, op_label"
 def test_recrawl_entry_points_take_no_dials(mod, name, shape):
     fn = getattr(importlib.import_module(f"ocr_application_spark.{mod}"), name)
     assert _shape(fn) == shape
+
+
+def test_cdc_store_ingest_chunks_and_caches_once():
+    """One verdict pass per ingest: the body chunks the docs in one
+    ``cdc_chunks`` call and caches the verdicts in one ``bounded_cache``
+    slot, which both the store commit and the report read. A second
+    call of either would add a second pass over the increment."""
+    from ocr_application_spark.operators.cdc import cdc_store_ingest
+
+    tree = ast.parse(inspect.getsource(cdc_store_ingest))
+    calls = [
+        n.func.id
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Name)
+    ]
+    assert calls.count("cdc_chunks") == 1, calls
+    assert calls.count("bounded_cache") == 1, calls
