@@ -18,7 +18,8 @@ Each micro-batch commits its novel entries to the index snapshot table
 (ONE commit per epoch) and lands verdict-tagged rows in an
 epoch-partitioned output; crash-replay appends zero index rows and
 reproduces the verdicts (the replay-stable representative rule — see
-the operator docstrings). The job drains the input (availableNow
+``dedup.fingerprint_index_ingest`` and, for the other three families,
+``dedup._retained_index_ingest``). The job drains the input (availableNow
 trigger) and exits, printing one JSON metrics line: rows, verdict
 counts, index growth. Re-running with the checkpoint intact processes
 only files that landed since — so a cron re-run IS the tail loop, and

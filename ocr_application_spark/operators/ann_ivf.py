@@ -30,6 +30,8 @@ from pyspark.sql.window import Window
 from ocr_application_spark.operators.registry import op
 from ocr_application_spark.operators.similarity import (
     _COSINE_TOPK_ORACLE,
+    _K,
+    _QMOD,
     _dot,
     _quant,
     quantized_topk,
@@ -39,11 +41,9 @@ K_CELLS = 16
 N_PROBE = 4
 _TRAIN_MOD = 7  # vec_id % 7 == 0 -> training sample
 _TRAIN_CAP = 50_000  # absolute bound on driver-collected training rows
-_K_TOP = 5
-_QMOD = 100
 
 
-def train_codebook(spark: SparkSession, sf_dir: str, k: int = K_CELLS) -> np.ndarray:
+def train_codebook(spark: SparkSession, sf_dir: str) -> np.ndarray:
     """Deterministic Lloyd's k-means on a fixed, ABSOLUTELY BOUNDED
     sample: vec_id % 7 == 0, then the _TRAIN_CAP smallest vec_ids.
 
@@ -52,8 +52,9 @@ def train_codebook(spark: SparkSession, sf_dir: str, k: int = K_CELLS) -> np.nda
     distributed TakeOrdered, so the driver materializes at most
     _TRAIN_CAP rows (~26 MB at dim 64) no matter how large the corpus
     is. Deterministic: same ids selected at any parallelism. numpy fit
-    on the driver, init = first k sample rows by vec_id — a codebook is
-    a few KB of broadcast state, exactly like the classifier weights.
+    on the driver, init = first K_CELLS sample rows by vec_id — a
+    codebook is a few KB of broadcast state, exactly like the
+    classifier weights.
     """
     rows = (
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -65,11 +66,11 @@ def train_codebook(spark: SparkSession, sf_dir: str, k: int = K_CELLS) -> np.nda
     )
     x = np.array([r.embedding for r in rows], dtype=np.float64)
     x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-    cent = x[:k].copy()
+    cent = x[:K_CELLS].copy()
     for _ in range(8):
         sims = x @ cent.T
         assign = sims.argmax(axis=1)
-        for c in range(k):
+        for c in range(K_CELLS):
             members = x[assign == c]
             if len(members):
                 m = members.mean(axis=0)
@@ -137,7 +138,7 @@ def _topk(cand: DataFrame) -> DataFrame:
         cand.withColumn("cos", cosine("q_emb", "embedding"))
         .select("q_id", F.col("vec_id").alias("cand_id"), "cos")
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _K_TOP)
+        .filter(F.col("rank") <= _K)
         .select("q_id", "cand_id", "rank", F.col("cos").alias("cos_sim"))
     )
 
@@ -186,11 +187,11 @@ def ann_ivf_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("q_emb")
     )
     cand = queries.join(indexed, "cell").withColumnRenamed("vec_id", "cand_id")
-    return quantized_topk(cand, k=_K_TOP)
+    return quantized_topk(cand)
 
 
 # full probing must equal brute force, so the oracle IS the brute-force
-# SQL (shared spec with ann_cosine_topk — same _K, _QMOD)
+# SQL (shared spec with ann_cosine_topk — _K and _QMOD are imported)
 op("ann_ivf_exhaustive", _COSINE_TOPK_ORACLE)(ann_ivf_exhaustive)
 
 

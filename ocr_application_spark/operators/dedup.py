@@ -143,6 +143,98 @@ def fingerprint_index_ingest(
     return verdicts, version
 
 
+def _retained_index_ingest(
+    spark: SparkSession,
+    index_path: str,
+    ids: DataFrame,
+    rows: DataFrame,
+    match,
+    labels: tuple[str, str],
+    slots: tuple[str, str],
+    op_label: str,
+) -> tuple[DataFrame, int]:
+    """THE replay-stable verdict rule of the near-dup recrawl ingests
+    (minhash, winnow, embedding): dedupe an increment against a
+    PERSISTED snapshot index holding the rows of every retained corpus
+    document, append the rows of the documents that survive, and return
+    ``(verdicts, committed_version)`` with verdicts ``(<id>, verdict)``
+    over the increment ``ids`` (one id column).
+
+    ``rows`` are the increment's index rows (its id column plus the
+    family's evidence columns, in index column order); ``match(x, y,
+    rel)`` returns the distinct ids of x rows with near-dup evidence
+    against a y row whose id satisfies ``rel(x_id, y_id)``. ``labels``
+    names the in-increment and corpus verdicts; ``slots`` are the
+    ``bounded_cache`` slots of the rows and of the verdicts (one live
+    cache each per session, freed by the next call: the rows feed the
+    index join, the in-increment self-join and the append; the verdicts
+    feed the commit and the caller).
+
+    Each ingest is O(increment) new work; the corpus is never re-scored.
+    The verdict plan is pinned to the PRE-commit index version, so
+    re-materializing it after the commit cannot flip a row. Precedence:
+    (1) an id the index already retains stays 'novel'; (2) evidence
+    against a LOWER id in the increment is ``labels[0]``; (3) evidence
+    against ANOTHER id's index rows is ``labels[1]``; otherwise 'novel'
+    (incl. documents without rows). Rule 1 keeps a crash-replayed
+    epoch's retained docs retained; rule 2 before rule 3 keeps a
+    replayed in-increment dup's label stable (its keeper's rows are in
+    the index on replay); and rule 3 NOT excluding in-batch partners
+    means a redelivered retained doc still counts as corpus evidence —
+    a new lower-id near-dup of it is ``labels[1]``, never a second
+    'novel'. Only novel ids absent from the index are appended, so a
+    replay appends zero rows (what makes ``run_stream_ingest``
+    exactly-once)."""
+    from ocr_application_spark.sources.snapshots import (
+        commit,
+        read_snapshot,
+        snapshot_versions,
+    )
+
+    key = ids.columns[0]
+    rows = bounded_cache(rows, slots[0])
+    versions = snapshot_versions(index_path)
+    if versions:
+        idx = read_snapshot(spark, index_path, version=versions[-1])
+        idx_present = idx.select(key).distinct()
+        self_retained = ids.join(idx_present, key, "left_semi")
+        known = match(rows, idx, lambda x, y: y != x)
+    else:  # bootstrap: empty index
+        known = idx_present = self_retained = ids.filter(F.lit(False))
+    incdup = match(rows, rows, lambda x, y: y < x)
+    verdicts = (
+        ids.join(self_retained.withColumn("_s", F.lit(True)), key, "left")
+        .join(incdup.withColumn("_d", F.lit(True)), key, "left")
+        .join(known.withColumn("_k", F.lit(True)), key, "left")
+        .select(
+            key,
+            F.when(F.col("_s"), F.lit("novel"))
+            .when(F.col("_d"), F.lit(labels[0]))
+            .when(F.col("_k"), F.lit(labels[1]))
+            .otherwise(F.lit("novel"))
+            .alias("verdict"),
+        )
+    )
+    verdicts = bounded_cache(verdicts, slots[1])
+    novel_rows = rows.join(
+        verdicts.filter(F.col("verdict") == "novel"), key, "left_semi"
+    ).join(idx_present, key, "left_anti")  # replay: already indexed
+    version = commit(novel_rows, index_path, op_label=op_label)
+    return verdicts, version
+
+
+def _band_match(x: DataFrame, y: DataFrame, rel) -> DataFrame:
+    """``match`` for the minhash ingest: x docs sharing one band bucket
+    (band_id, sig_a, sig_b) with a y doc."""
+    on = [F.col(f"x.{c}") == F.col(f"y.{c}") for c in ("band_id", "sig_a", "sig_b")]
+    return (
+        x.alias("x")
+        .join(y.alias("y"), [*on, rel(F.col("x.doc_id"), F.col("y.doc_id"))])
+        .select(F.col("x.doc_id").alias("doc_id"))
+        .distinct()
+    )
+
+
 def minhash_index_ingest(
     spark: SparkSession,
     index_path: str,
@@ -150,119 +242,25 @@ def minhash_index_ingest(
     *,
     op_label: str = "minhash-ingest",
 ) -> tuple[DataFrame, int]:
-    """NEAR-dup sibling of ``fingerprint_index_ingest``: dedupe a crawl
-    increment (``doc_id``, ``text``) against the PERSISTED corpus LSH
-    index — a snapshot table of (doc_id, band_id, sig_a, sig_b) MinHash
-    band buckets of every retained corpus document — append the band
-    rows of the documents that survive, and return
-    ``(verdicts, committed_version)``:
-
-      (doc_id, verdict) with verdict one of
-        'known_neardup'        — some band bucket collides with the index
-                                 (a near-dup of retained corpus content)
-        'neardup_in_increment' — no corpus collision, but a band bucket
-                                 collides with a LOWER doc_id in this
-                                 increment (that content's keeper)
-        'novel'                — no collision (incl. docs too short to
-                                 shingle); these docs' band rows are the
-                                 ones appended to the index
-
-    Same recrawl-scale shape as the exact variant: each ingest is
-    O(increment) new work — one signature hash-agg over the increment
-    (map-side min-combined), a selective equi-join on (band_id, sig_a,
-    sig_b) against the index, and an append of O(novel)·n_bands rows;
-    the corpus is never re-signed. The index side costs one hash
-    exchange per ingest in path-based parquet (production would
-    bucket-store the index on the band key). Band buckets are
-    ``bounded_cache``-pinned: they feed the index join, the
-    in-increment self-join AND the novel append, and recomputing the
-    signature agg three times would triple the dominant cost.
-
-    Like LSH dedup itself the verdict is approximate BY DESIGN (banding
-    trades recall/precision); what the oracle pins is that the banding,
-    the collision sets and the precedence rule are exactly the
-    documented function of the bytes on any engine.
-
-    Replay-stable like the exact variant, via the verdict precedence
-    (1) a doc the index already retains (same id) stays 'novel';
-    (2) a lower-id in-batch collision is 'neardup_in_increment';
-    (3) a collision with ANOTHER doc's index rows is 'known_neardup'.
-    Rule 1 keeps a crash-replayed epoch's retained docs retained; rule
-    2 before rule 3 keeps a replayed in-increment dup's label stable
-    (its keeper's rows are in the index on replay); and rule 3 NOT
-    excluding in-batch partners means a redelivered retained doc still
-    counts as corpus evidence — a new lower-id near-dup of it is
-    'known_neardup', never a second 'novel'. No band row is appended
-    twice (novel docs already present in the index are skipped).
-    """
-    from ocr_application_spark.sources.snapshots import (
-        commit,
-        read_snapshot,
-        snapshot_versions,
-    )
-
+    """NEAR-dup recrawl ingest of ``docs`` (``doc_id``, ``text``)
+    against a persisted LSH index of (doc_id, band_id, sig_a, sig_b)
+    MinHash band buckets, under the shared rule of
+    ``_retained_index_ingest``. Evidence is one colliding band bucket;
+    verdicts are 'known_neardup', 'neardup_in_increment' or 'novel'
+    (incl. docs too short to shingle). Approximate BY DESIGN, like LSH
+    itself: the oracle pins the banding, the collision sets and the
+    precedence as a function of the bytes."""
     d = docs.select("doc_id", "text")
-    # slot-bounded like the fingerprint ingest: one live cache per
-    # session, freed by the next minhash ingest call
-    buck = bounded_cache(_band_buckets(d), "minhash_index_ingest")
-    batch_ids = d.select("doc_id").distinct()
-    versions = snapshot_versions(index_path)
-    if versions:
-        idx = read_snapshot(spark, index_path, version=versions[-1])
-        x, i = buck.alias("x"), idx.alias("i")
-        # corpus evidence: index rows of any OTHER doc (self-rows of a
-        # replayed doc are not evidence against itself)
-        known = (
-            x.join(
-                i,
-                (F.col("x.band_id") == F.col("i.band_id"))
-                & (F.col("x.sig_a") == F.col("i.sig_a"))
-                & (F.col("x.sig_b") == F.col("i.sig_b"))
-                & (F.col("i.doc_id") != F.col("x.doc_id")),
-            )
-            .select(F.col("x.doc_id").alias("doc_id"))
-            .distinct()
-        )
-        idx_present = idx.select("doc_id").distinct()
-        self_retained = batch_ids.join(idx_present, "doc_id", "left_semi")
-    else:  # bootstrap: empty index
-        known = buck.filter(F.lit(False)).select("doc_id")
-        idx_present = known
-        self_retained = known
-    a, b = buck.alias("a"), buck.alias("b")
-    incdup = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.sig_a") == F.col("b.sig_a"))
-            & (F.col("a.sig_b") == F.col("b.sig_b"))
-            & (F.col("b.doc_id") < F.col("a.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_id"))
-        .distinct()
+    return _retained_index_ingest(
+        spark,
+        index_path,
+        d.select("doc_id").distinct(),
+        _band_buckets(d),
+        _band_match,
+        ("neardup_in_increment", "known_neardup"),
+        ("minhash_index_ingest", "minhash_index_verdicts"),
+        op_label,
     )
-    verdicts = (
-        d.select("doc_id")
-        .distinct()
-        .join(self_retained.withColumn("_s", F.lit(True)), "doc_id", "left")
-        .join(incdup.withColumn("_d", F.lit(True)), "doc_id", "left")
-        .join(known.withColumn("_k", F.lit(True)), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("_s"), F.lit("novel"))
-            .when(F.col("_d"), F.lit("neardup_in_increment"))
-            .when(F.col("_k"), F.lit("known_neardup"))
-            .otherwise(F.lit("novel"))
-            .alias("verdict"),
-        )
-    )
-    # verdicts feed the novel commit below AND the caller's materialization
-    verdicts = bounded_cache(verdicts, "minhash_index_verdicts")
-    novel_rows = buck.join(
-        verdicts.filter(F.col("verdict") == "novel"), "doc_id", "left_semi"
-    ).join(idx_present, "doc_id", "left_anti")  # replay: already indexed
-    version = commit(novel_rows, index_path, op_label=op_label)
-    return verdicts, version
 
 
 # --- shared shingling (word 3-grams) ------------------------------------------
@@ -1164,6 +1162,38 @@ def _winnow_doc_fps(d: DataFrame) -> DataFrame:
     return winnow_fingerprints(d).select("doc_id", "fp_hash").distinct()
 
 
+def _winnow_match(x: DataFrame, y: DataFrame, rel) -> DataFrame:
+    """``match`` for the winnowing ingest: x docs sharing at least
+    ``_WINNOW_MIN_SHARED`` distinct fingerprints with ONE y doc, over
+    the y postings of x's hashes whose df in y is at most
+    ``_WINNOW_MAX_POSTING`` (boilerplate is excluded before any pair is
+    generated). Restricting y to x's hashes keeps every y posting of a
+    matched hash, so the df is the hash's true df on that side; capping
+    y alone yields the same pairs as capping both sides, since a
+    hash's eligibility is decided per hash within one frame."""
+    y = y.join(x.select("fp_hash").distinct(), "fp_hash", "left_semi")
+    eligible = (
+        y.groupBy("fp_hash")
+        .agg(F.count("*").alias("_df"))
+        .filter(F.col("_df") <= _WINNOW_MAX_POSTING)
+        .select("fp_hash")
+    )
+    y = y.join(eligible, "fp_hash", "left_semi")
+    return (
+        x.alias("x")
+        .join(
+            y.alias("y"),
+            (F.col("x.fp_hash") == F.col("y.fp_hash"))
+            & rel(F.col("x.doc_id"), F.col("y.doc_id")),
+        )
+        .groupBy(F.col("x.doc_id").alias("doc_id"), F.col("y.doc_id").alias("other"))
+        .agg(F.count("*").alias("_n"))
+        .filter(F.col("_n") >= _WINNOW_MIN_SHARED)
+        .select("doc_id")
+        .distinct()
+    )
+
+
 def winnow_index_ingest(
     spark: SparkSession,
     index_path: str,
@@ -1171,116 +1201,22 @@ def winnow_index_ingest(
     *,
     op_label: str = "winnow-ingest",
 ) -> tuple[DataFrame, int]:
-    """PARTIAL-overlap sibling of ``minhash_index_ingest``: dedupe a
-    crawl increment against the PERSISTED corpus winnowing index — a
-    snapshot table of (doc_id, fp_hash) distinct winnowed fingerprints
-    of every retained document — append the fingerprint rows of the
-    documents that survive, and return ``(verdicts, version)``.
-    ``docs`` carries ``doc_id`` and ``text``; verdicts are
-
-      (doc_id, verdict) with verdict one of
-        'known_overlap'        — shares >= ``_WINNOW_MIN_SHARED`` distinct
-                                 fingerprints with ONE retained corpus
-                                 doc (substring-level overlap with
-                                 retained content — quotes, templates,
-                                 re-hosted fragments minhash-of-the-
-                                 whole-doc misses when the rest differs)
-        'overlap_in_increment' — no corpus evidence, but as many
-                                 shared with a LOWER doc_id in batch
-        'novel'                — neither (incl. docs too short to gram)
-
-    Evidence is PAIRWISE (per-pair distinct-fingerprint count), and
-    boilerplate fingerprints are df-capped IN THE ALGORITHM like the
-    Jaccard posting plan: hashes held by more than
-    ``_WINNOW_MAX_POSTING`` docs on the relevant side are excluded from
-    pair generation before any join — the restriction of the index to
-    the increment's hash set keeps every posting of a matched hash, so
-    the capped df is the hash's TRUE index df, not a sample. Same O(increment) recrawl
-    shape and the same replay-stable precedence as the minhash ingest:
-    (1) a doc the index retains stays 'novel' on replay; (2) lower-id
-    in-batch overlap; (3) corpus overlap with another doc's rows."""
-    from ocr_application_spark.sources.snapshots import (
-        commit,
-        read_snapshot,
-        snapshot_versions,
-    )
-
+    """PARTIAL-overlap recrawl ingest of ``docs`` (``doc_id``,
+    ``text``) against a persisted index of (doc_id, fp_hash) distinct
+    winnowed fingerprints, under the shared rule of
+    ``_retained_index_ingest``. Evidence is PAIRWISE (``_winnow_match``):
+    substring-level overlap — quotes, templates, re-hosted fragments
+    that minhash-of-the-whole-doc misses when the rest differs.
+    Verdicts are 'known_overlap', 'overlap_in_increment' or 'novel'
+    (incl. docs too short to gram)."""
     d = docs.select("doc_id", "text")
-    fps = bounded_cache(_winnow_doc_fps(d), "winnow_index_ingest")
-    batch_ids = d.select("doc_id").distinct()
-    versions = snapshot_versions(index_path)
-    if versions:
-        idx = read_snapshot(spark, index_path, version=versions[-1])
-        # every index posting of any hash the increment holds — so the
-        # df below is that hash's true corpus df
-        midx = idx.join(fps.select("fp_hash").distinct(), "fp_hash", "left_semi")
-        eligible_idx = midx.join(
-            midx.groupBy("fp_hash")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= _WINNOW_MAX_POSTING)
-            .select("fp_hash"),
-            "fp_hash",
-            "left_semi",
-        )
-        x, i = fps.alias("x"), eligible_idx.alias("i")
-        known = (
-            x.join(
-                i,
-                (F.col("x.fp_hash") == F.col("i.fp_hash"))
-                & (F.col("i.doc_id") != F.col("x.doc_id")),
-            )
-            .groupBy(F.col("x.doc_id").alias("doc_id"), F.col("i.doc_id").alias("other"))
-            .agg(F.count("*").alias("_n"))
-            .filter(F.col("_n") >= _WINNOW_MIN_SHARED)
-            .select("doc_id")
-            .distinct()
-        )
-        idx_present = idx.select("doc_id").distinct()
-        self_retained = batch_ids.join(idx_present, "doc_id", "left_semi")
-    else:  # bootstrap: empty index
-        known = fps.filter(F.lit(False)).select("doc_id")
-        idx_present = known
-        self_retained = known
-    eligible_inc = fps.join(
-        fps.groupBy("fp_hash")
-        .agg(F.count("*").alias("_df"))
-        .filter(F.col("_df") <= _WINNOW_MAX_POSTING)
-        .select("fp_hash"),
-        "fp_hash",
-        "left_semi",
+    return _retained_index_ingest(
+        spark,
+        index_path,
+        d.select("doc_id").distinct(),
+        _winnow_doc_fps(d),
+        _winnow_match,
+        ("overlap_in_increment", "known_overlap"),
+        ("winnow_index_ingest", "winnow_index_verdicts"),
+        op_label,
     )
-    a, b = eligible_inc.alias("a"), eligible_inc.alias("b")
-    incdup = (
-        a.join(
-            b,
-            (F.col("a.fp_hash") == F.col("b.fp_hash"))
-            & (F.col("b.doc_id") < F.col("a.doc_id")),
-        )
-        .groupBy(F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("other"))
-        .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") >= _WINNOW_MIN_SHARED)
-        .select("doc_id")
-        .distinct()
-    )
-    verdicts = (
-        batch_ids.join(
-            self_retained.withColumn("_s", F.lit(True)), "doc_id", "left"
-        )
-        .join(incdup.withColumn("_d", F.lit(True)), "doc_id", "left")
-        .join(known.withColumn("_k", F.lit(True)), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.when(F.col("_s"), F.lit("novel"))
-            .when(F.col("_d"), F.lit("overlap_in_increment"))
-            .when(F.col("_k"), F.lit("known_overlap"))
-            .otherwise(F.lit("novel"))
-            .alias("verdict"),
-        )
-    )
-    # verdicts feed the novel commit below AND the caller's materialization
-    verdicts = bounded_cache(verdicts, "winnow_index_verdicts")
-    novel_rows = fps.join(
-        verdicts.filter(F.col("verdict") == "novel"), "doc_id", "left_semi"
-    ).join(idx_present, "doc_id", "left_anti")  # replay: already indexed
-    version = commit(novel_rows, index_path, op_label=op_label)
-    return verdicts, version

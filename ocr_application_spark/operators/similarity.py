@@ -105,10 +105,10 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantized_topk(c.crossJoin(F.broadcast(q)))
 
 
-def quantized_topk(cand: DataFrame, k: int = _K) -> DataFrame:
+def quantized_topk(cand: DataFrame) -> DataFrame:
     """THE quantized-exact scored-top-k op sequence over a candidate
     frame (q_id, qv, qn, cand_id, cv, cn): integer dot product, ONE
-    double div+sqrt, desc-cos/cand_id tie-break, row_number <= k —
+    double div+sqrt, desc-cos/cand_id tie-break, row_number <= _K —
     shared by ``ann_cosine_topk`` and ``ann_ivf.ann_ivf_exhaustive`` so
     the oracle-pinned scoring sequence cannot diverge between the
     brute-force and IVF machinery (only the candidate SOURCE differs)."""
@@ -120,7 +120,7 @@ def quantized_topk(cand: DataFrame, k: int = _K) -> DataFrame:
         cand.filter(F.col("q_id") != F.col("cand_id"))
         .withColumn("cos", cos)
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= _K)
         .select("q_id", "cand_id", "rank", F.col("cos").alias("cos_sim"))
     )
 
@@ -198,25 +198,30 @@ def _bucketed(e: DataFrame) -> DataFrame:
     )
 
 
+def _cosine(a: str, b: str) -> F.Column:
+    """Quantized-exact cosine of the aliased (qv, n) sides ``a`` and
+    ``b``: exact integer dot, ONE double div+sqrt."""
+    return _dot(F.col(f"{a}.qv"), F.col(f"{b}.qv")).cast("double") / F.sqrt(
+        F.col(f"{a}.n").cast("double") * F.col(f"{b}.n").cast("double")
+    )
+
+
 def _scored_bucket_pairs(left: DataFrame, right: DataFrame, left_bucket: str = "bucket") -> DataFrame:
     """THE bucketed-pair scoring sequence — equi-join on the (probe)
-    bucket with vec_id<, exact quantized-integer dot, ONE double
-    div+sqrt, tau filter, canonical (vec_a, vec_b, cos_sim) output —
-    shared by ``emb_neardup_pairs`` and ``emb_neardup_multiprobe`` so
-    the oracle-pinned scoring can never silently diverge between the
-    single-probe and multiprobe variants (only the candidate SOURCE
-    differs; same discipline as ``quantized_topk`` / ``_bucket_col``)."""
+    bucket with vec_id<, ``_cosine``, tau filter, canonical (vec_a,
+    vec_b, cos_sim) output — shared by ``emb_neardup_pairs`` and
+    ``emb_neardup_multiprobe`` so the oracle-pinned scoring can never
+    silently diverge between the single-probe and multiprobe variants
+    (only the candidate SOURCE differs; same discipline as
+    ``quantized_topk`` / ``_bucket_col``)."""
     a, b2 = left.alias("a"), right.alias("b2")
-    cos = _dot(F.col("a.qv"), F.col("b2.qv")).cast("double") / F.sqrt(
-        F.col("a.n").cast("double") * F.col("b2.n").cast("double")
-    )
     return (
         a.join(
             b2,
             (F.col(f"a.{left_bucket}") == F.col("b2.bucket"))
             & (F.col("a.vec_id") < F.col("b2.vec_id")),
         )
-        .withColumn("cos", cos)
+        .withColumn("cos", _cosine("a", "b2"))
         .filter(F.col("cos") >= _NEARDUP_TAU)
         .select(
             F.col("a.vec_id").alias("vec_a"),
@@ -348,6 +353,21 @@ def emb_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- incremental semantic ingest against a persisted vector index -------------
+def _near_match(x: DataFrame, y: DataFrame, rel) -> DataFrame:
+    """``match`` for the embedding ingest: x vectors sharing the LSH
+    bucket of a y vector with ``_cosine`` >= ``_NEARDUP_TAU``."""
+    return (
+        x.alias("x")
+        .join(
+            y.alias("y"),
+            [F.col("x.bucket") == F.col("y.bucket"), rel(F.col("x.vec_id"), F.col("y.vec_id"))],
+        )
+        .filter(_cosine("x", "y") >= _NEARDUP_TAU)
+        .select(F.col("x.vec_id").alias("vec_id"))
+        .distinct()
+    )
+
+
 def embedding_index_ingest(
     spark: SparkSession,
     index_path: str,
@@ -355,111 +375,23 @@ def embedding_index_ingest(
     *,
     op_label: str = "embedding-ingest",
 ) -> tuple[DataFrame, int]:
-    """Semantic sibling of ``dedup.fingerprint_index_ingest`` /
-    ``dedup.minhash_index_ingest``: dedupe an embedding increment
-    (``vec_id``, ``embedding``) against the PERSISTED corpus vector
-    index — a snapshot table of (vec_id, bucket, qv, n) rows (sign-LSH
-    bucket, quantized vector, integer self-norm) of every retained
-    vector — append the rows of the vectors that survive, and return
-    ``(verdicts, version)``:
+    """Semantic recrawl ingest of ``vectors`` (``vec_id``,
+    ``embedding``) against a persisted index of (vec_id, bucket, qv, n)
+    rows (sign-LSH bucket, quantized vector, integer self-norm), under
+    the shared rule of ``dedup._retained_index_ingest``. Evidence is a
+    quantized-exact ``_cosine`` >= ``_NEARDUP_TAU`` with a vector
+    sharing the LSH bucket (the recall/cost trade of
+    ``emb_neardup_pairs``). Verdicts are 'known_neardup',
+    'neardup_in_increment' or 'novel'."""
+    from ocr_application_spark.operators.dedup import _retained_index_ingest
 
-      (vec_id, verdict) with verdict one of
-        'known_neardup'        — cosine >= ``_NEARDUP_TAU`` with an index
-                                 vector of another, out-of-batch doc
-                                 sharing its LSH bucket
-        'neardup_in_increment' — no corpus match, but cosine >= tau
-                                 with a LOWER vec_id in this increment
-        'novel'                — no match; appended to the index
-
-    Scale shape: the increment is quantized/bucketed once
-    (bounded_cache-pinned — it feeds the index join, the in-increment
-    self-join and the append), candidates come from the bucket
-    equi-join (sub-quadratic, the same recall/cost trade as
-    emb_neardup_pairs), the verification cosine is the quantized-exact
-    integer form, and the index grows by novel vectors only — the
-    corpus is never re-scored. Replay-stable exactly like the minhash
-    variant, via the same verdict precedence: (1) a vector the index
-    already retains (same id) stays 'novel'; (2) a lower-id in-batch
-    partner is 'neardup_in_increment'; (3) an above-tau partner among
-    ANOTHER doc's index rows is 'known_neardup' — so crash-replay
-    appends zero rows and reproduces the verdicts, while a redelivered
-    retained vector still counts as corpus evidence against new
-    near-dups of it.
-    """
-    from ocr_application_spark.sources.snapshots import (
-        commit,
-        read_snapshot,
-        snapshot_versions,
+    return _retained_index_ingest(
+        spark,
+        index_path,
+        vectors.select("vec_id").distinct(),
+        _bucketed(vectors).select("vec_id", "bucket", "qv", "n"),
+        _near_match,
+        ("neardup_in_increment", "known_neardup"),
+        ("embedding_index_ingest", "embedding_index_verdicts"),
+        op_label,
     )
-
-    from ocr_application_spark.session import bounded_cache
-
-    q = vectors.select("vec_id", _quant(F.col("embedding")).alias("qv"))
-    # slot-bounded like the fingerprint ingest: one live cache per
-    # session, freed by the next embedding ingest call
-    b = bounded_cache(
-        q.withColumn("n", _dot(F.col("qv"), F.col("qv"))).withColumn(
-            "bucket", _bucket_col(F.col("qv"))
-        ),
-        "embedding_index_ingest",
-    )
-    batch_ids = b.select("vec_id").distinct()
-
-    def _near(x, y):  # cosine of aliased sides x, y reaches tau
-        xn, yn = F.col(f"{x}.n").cast("double"), F.col(f"{y}.n").cast("double")
-        cos = _dot(F.col(f"{x}.qv"), F.col(f"{y}.qv")).cast("double") / F.sqrt(xn * yn)
-        return cos >= _NEARDUP_TAU
-
-    versions = snapshot_versions(index_path)
-    if versions:
-        idx = read_snapshot(spark, index_path, version=versions[-1])
-        known = (
-            b.alias("x")
-            .join(
-                idx.alias("i"),
-                (F.col("x.bucket") == F.col("i.bucket"))
-                & (F.col("i.vec_id") != F.col("x.vec_id")),
-            )
-            .filter(_near("x", "i"))
-            .select(F.col("x.vec_id").alias("vec_id"))
-            .distinct()
-        )
-        idx_present = idx.select("vec_id").distinct()
-        self_retained = batch_ids.join(idx_present, "vec_id", "left_semi")
-    else:  # bootstrap
-        known = b.filter(F.lit(False)).select("vec_id")
-        idx_present = known
-        self_retained = known
-    incdup = (
-        b.alias("a")
-        .join(
-            b.alias("c"),
-            (F.col("a.bucket") == F.col("c.bucket"))
-            & (F.col("c.vec_id") < F.col("a.vec_id")),
-        )
-        .filter(_near("a", "c"))
-        .select(F.col("a.vec_id").alias("vec_id"))
-        .distinct()
-    )
-    verdicts = (
-        batch_ids.join(self_retained.withColumn("_s", F.lit(True)), "vec_id", "left")
-        .join(incdup.withColumn("_d", F.lit(True)), "vec_id", "left")
-        .join(known.withColumn("_k", F.lit(True)), "vec_id", "left")
-        .select(
-            "vec_id",
-            F.when(F.col("_s"), F.lit("novel"))
-            .when(F.col("_d"), F.lit("neardup_in_increment"))
-            .when(F.col("_k"), F.lit("known_neardup"))
-            .otherwise(F.lit("novel"))
-            .alias("verdict"),
-        )
-    )
-    # verdicts feed the novel commit below AND the caller's materialization
-    verdicts = bounded_cache(verdicts, "embedding_index_verdicts")
-    novel_rows = (
-        b.join(verdicts.filter(F.col("verdict") == "novel"), "vec_id", "left_semi")
-        .join(idx_present, "vec_id", "left_anti")
-        .select("vec_id", "bucket", "qv", "n")
-    )
-    version = commit(novel_rows, index_path, op_label=op_label)
-    return verdicts, version

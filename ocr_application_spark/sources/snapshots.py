@@ -721,18 +721,22 @@ def read_snapshot(
 
 
 def _read_files(
-    spark: SparkSession, path: str, files: list[str], schema_json: str | None = None
+    spark: SparkSession, path: str, files: list[str], schema_json: str
 ) -> DataFrame:
     """Scan manifest files, each commit subtree with its own basePath,
-    aligned to the manifest's recorded schema: files written before an
-    additive evolution project typed nulls for the later columns (the
-    Iceberg read-time projection), and a type mismatch fails loudly
-    rather than producing a silent cast."""
+    planned from the manifest's recorded schema — no schema-inference
+    job, however many commits the table has. Files written before an
+    additive evolution read typed nulls for the later columns (the
+    Iceberg read-time projection), and partition-dir columns take their
+    recorded type. ``commit`` rejects drops and retypes, so a file can
+    disagree with its manifest only when it was replaced behind the
+    table's back: beyond Spark's parquet widenings (int32 reads as
+    bigint) that fails when the scan runs, with Spark's
+    ``FAILED_READ_FILE.PARQUET_COLUMN_DATA_TYPE_MISMATCH``, rather than
+    casting silently."""
     from pyspark.sql import types as T
 
-    target = (
-        T.StructType.fromJson(json.loads(schema_json)).fields if schema_json else None
-    )
+    schema = T.StructType.fromJson(json.loads(schema_json))
     data_root = _data_dir(path)
     by_commit: dict[str, list[str]] = {}
     for f in files:
@@ -740,45 +744,13 @@ def _read_files(
         commit_root = os.path.join(data_root, rel.split(os.sep, 1)[0])
         by_commit.setdefault(commit_root, []).append(f)
     out = None
-    # value-preserving widenings a read may cast silently (Iceberg's
-    # type-promotion set); anything else is a real mismatch and fails.
-    # int->long also covers partition-dir columns, which Spark infers
-    # as int32 even when the written column was long.
-    safe = {
-        ("int", "bigint"),
-        ("smallint", "int"),
-        ("smallint", "bigint"),
-        ("tinyint", "int"),
-        ("tinyint", "bigint"),
-        ("float", "double"),
-        ("int", "double"),
-    }
     for commit_root, group in sorted(by_commit.items()):
-        part = spark.read.option("basePath", commit_root).parquet(*group)
-        if target is not None:
-            have = {f.name: f.dataType for f in part.schema.fields}
-            mism = [
-                f"{f.name}: file {have[f.name].simpleString()} vs table "
-                f"{f.dataType.simpleString()}"
-                for f in target
-                if f.name in have
-                and have[f.name] != f.dataType
-                and (have[f.name].simpleString(), f.dataType.simpleString())
-                not in safe
-            ]
-            if mism:
-                raise SchemaEvolutionError(
-                    f"data files under {commit_root} disagree with the "
-                    f"snapshot schema: {mism}"
-                )
-            part = part.select(
-                *[
-                    F.col(f.name).cast(f.dataType)
-                    if f.name in have
-                    else F.lit(None).cast(f.dataType).alias(f.name)
-                    for f in target
-                ]
-            )
+        part = (
+            spark.read.schema(schema)
+            .option("basePath", commit_root)
+            .parquet(*group)
+            .select(*schema.names)
+        )
         out = part if out is None else out.unionByName(part)
     return out
 

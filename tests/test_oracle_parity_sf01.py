@@ -25,6 +25,8 @@ STALE_OUTSIDE = [
     # r05: the bounded-window WARN silencing (VERDICT #6) touched the
     # rank plumbing of this out-of-window op
     "text_rank_quality",
+    # the winnowing ingest moved onto the shared near-dup ingest body
+    "overlap_incremental_ingest",
 ]
 
 _QUERIES = entrymod.queries()

@@ -488,6 +488,72 @@ def test_partitioned_long_column_survives_read_alignment(spark, tmpdir_scratch):
     assert read_snapshot(spark, tbl).count() == 3
 
 
+def test_read_snapshot_plans_without_a_job(spark, tmpdir_scratch):
+    """Reads are planned from the manifest's recorded schema: planning
+    ``read_snapshot`` over six commits of alternating partition layout
+    runs no Spark job (no per-commit schema inference), and the plan
+    still reads every row with the recorded types and column order."""
+    tbl = tmpdir_scratch + "/tbl_nojob"
+    for n in range(6):
+        commit(
+            _pages(spark, range(3 * n, 3 * n + 3), f"c{n}"),
+            tbl,
+            partition_by="bucket" if n % 2 else None,
+        )
+    sc = spark.sparkContext
+    sc.setJobGroup("read_snapshot_plan", "read_snapshot_plan")
+    try:
+        df = read_snapshot(spark, tbl)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("read_snapshot_plan") == []
+    assert df.dtypes == [("doc_id", "bigint"), ("payload", "string"), ("bucket", "int")]
+    assert sorted(r.doc_id for r in df.collect()) == list(range(18))
+
+
+@pytest.mark.parametrize(
+    "arrow_type, values",
+    [
+        ("int32", [1, 2]),
+        ("string", ["1", "2"]),
+        ("float64", [1.0, 2.0]),
+        ("bool_", [True, False]),
+    ],
+)
+def test_data_file_retyped_behind_the_manifest_fails_the_read(
+    spark, tmpdir_scratch, arrow_type, values
+):
+    """A data file replaced behind the table with a ``doc_id`` type the
+    manifest does not record (bigint) fails the scan loudly, with
+    Spark's type-mismatch error, instead of being cast; an int32 file
+    is a parquet widening and still reads as bigint."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = tmpdir_scratch + "/tbl_retyped"
+    commit(
+        spark.createDataFrame([(1, "a"), (2, "b")], "doc_id long, payload string")
+        .coalesce(1),
+        tbl,
+    )
+    (f,) = glob.glob(tbl + "/data/*/*.parquet")
+    crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    doc_ids = pa.array(values, getattr(pa, arrow_type)())
+    pq.write_table(pa.table({"doc_id": doc_ids, "payload": ["a", "b"]}), f)
+
+    out = read_snapshot(spark, tbl)
+    assert dict(out.dtypes)["doc_id"] == "bigint"
+    if arrow_type == "int32":
+        assert sorted(r.doc_id for r in out.collect()) == [1, 2]
+    else:
+        with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+            out.collect()
+
+
 def test_fingerprint_index_ingest_recrawl_lifecycle(spark, tmpdir_scratch):
     """Incremental recrawl dedup against the persisted fingerprint
     index: bootstrap commits every distinct fp, a recrawl increment
@@ -926,6 +992,110 @@ def test_winnow_index_ingest_recrawl_lifecycle(spark, tmpdir_scratch):
         11: "novel",
     }
     assert read_snapshot(spark, idx).count() == n_after
+
+
+def _class_payloads(family, n_classes):
+    """One payload per document class, built so near-dup evidence is
+    exact: identical payloads match, payloads of different classes
+    share nothing. Embeddings are axis vectors (cosine 1 or 0); texts
+    are long word strings over disjoint alphabets (no shared shingle,
+    band signature or winnowed gram)."""
+    import random
+
+    from ocr_application_spark.operators.similarity import DIM
+
+    if family == "embedding":
+        return [[float(a == c) for a in range(DIM)] for c in range(n_classes)]
+    rng = random.Random(5)
+    out = []
+    for c in range(n_classes):
+        letters = "abcdefghijklmnopqrstuvwx"[6 * c : 6 * c + 6]
+        out.append(
+            " ".join("".join(rng.choice(letters) for _ in range(5)) for _ in range(40))
+        )
+    return out
+
+
+@pytest.mark.parametrize("family", ["minhash", "winnow", "embedding"])
+def test_near_dup_ingests_match_precedence_model(spark, tmpdir_scratch, family):
+    """Differential test of the replay-stable verdict rule the three
+    near-dup ingests share. Random batches re-deliver earlier ids (rule
+    1: an id the index retains stays 'novel') and repeat document
+    classes (rule 2: a lower id of the same class in the batch; rule 3:
+    another id's index rows of the same class); a pure-Python model of
+    that precedence and of the novel-only append predicts every verdict
+    and the set of indexed ids. Replaying an earlier batch afterwards
+    reproduces its verdicts and adds no index row."""
+    import random
+
+    from ocr_application_spark.operators.dedup import (
+        _WINNOW_MIN_SHARED,
+        minhash_index_ingest,
+        winnow_fingerprints,
+        winnow_index_ingest,
+    )
+    from ocr_application_spark.operators.similarity import embedding_index_ingest
+
+    ingest, key, schema, inc_label, known_label = {
+        "minhash": (minhash_index_ingest, "doc_id", "doc_id long, text string",
+                    "neardup_in_increment", "known_neardup"),
+        "winnow": (winnow_index_ingest, "doc_id", "doc_id long, text string",
+                   "overlap_in_increment", "known_overlap"),
+        "embedding": (embedding_index_ingest, "vec_id",
+                      "vec_id long, embedding array<float>",
+                      "neardup_in_increment", "known_neardup"),
+    }[family]
+    payload = _class_payloads(family, 4)
+    if family == "winnow":
+        fps = winnow_fingerprints(
+            spark.createDataFrame([(0, payload[0])], "doc_id long, text string")
+        )
+        assert fps.select("fp_hash").distinct().count() >= _WINNOW_MIN_SHARED
+
+    # seed 3 draws every rule: 6 re-delivered retained ids, 8
+    # in-increment and 4 corpus near-dups over four batches
+    rng = random.Random(3)
+    klass: dict[int, int] = {}  # id -> class, fixed once the id exists
+    batches = []
+    for _ in range(4):
+        seen = list(klass)
+        fresh = rng.sample(range(100), rng.randint(3, 6))
+        ids = sorted(set(rng.sample(seen, min(len(seen), rng.randint(0, 3))) + fresh))
+        for i in ids:
+            klass.setdefault(i, rng.randrange(len(payload)))
+        batches.append(ids)
+
+    retained: dict[int, int] = {}  # the model index: id -> class
+    idx = tmpdir_scratch + f"/near_{family}"
+    originals = []
+    for ids in batches:
+        expect = {}
+        for i in ids:
+            c = klass[i]
+            if i in retained:
+                expect[i] = "novel"
+            elif any(j < i and klass[j] == c for j in ids):
+                expect[i] = inc_label
+            elif any(j != i and rc == c for j, rc in retained.items()):
+                expect[i] = known_label
+            else:
+                expect[i] = "novel"
+        for i, v in expect.items():
+            if v == "novel":
+                retained.setdefault(i, klass[i])
+        df = spark.createDataFrame([(i, payload[klass[i]]) for i in ids], schema)
+        verd, _ = ingest(spark, idx, df)
+        got = {r[key]: r["verdict"] for r in verd.collect()}
+        assert got == expect, (family, ids, got, expect)
+        indexed = {r[key] for r in read_snapshot(spark, idx).select(key).distinct().collect()}
+        assert indexed == set(retained), (family, ids)
+        originals.append((df, got))
+
+    n_rows = read_snapshot(spark, idx).count()
+    df, first = originals[rng.randrange(len(originals) - 1)]
+    verd, _ = ingest(spark, idx, df)
+    assert {r[key]: r["verdict"] for r in verd.collect()} == first
+    assert read_snapshot(spark, idx).count() == n_rows
 
 
 def test_delete_rows_copy_on_write_and_time_travels(spark, tmpdir_scratch):

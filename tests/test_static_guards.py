@@ -20,6 +20,11 @@ switch.
 
 One verdict pass per chunk-store ingest: ``cdc_store_ingest`` chunks
 its docs once and caches the verdicts once.
+
+One verdict rule for the near-dup ingests: the minhash, winnow and
+embedding ingests delegate index pinning, caching and the commit to
+``dedup._retained_index_ingest``; and every snapshot read is planned
+from the manifest schema (``spark.read.schema(...)``), never inferred.
 """
 
 import ast
@@ -254,6 +259,8 @@ _INGEST = "spark, index_path, docs, *, op_label"
             "spark, input_path, index_path, out_path, checkpoint, max_files, family",
         ),
         ("operators.dedup", "propagate_components", "pairs, nodes"),
+        ("operators.similarity", "quantized_topk", "cand"),
+        ("operators.ann_ivf", "train_codebook", "spark, sf_dir"),
     ],
 )
 def test_recrawl_entry_points_take_no_dials(mod, name, shape):
@@ -276,3 +283,48 @@ def test_cdc_store_ingest_chunks_and_caches_once():
     ]
     assert calls.count("cdc_chunks") == 1, calls
     assert calls.count("bounded_cache") == 1, calls
+
+
+@pytest.mark.parametrize(
+    "mod, name",
+    [
+        ("operators.dedup", "minhash_index_ingest"),
+        ("operators.dedup", "winnow_index_ingest"),
+        ("operators.similarity", "embedding_index_ingest"),
+    ],
+)
+def test_near_dup_ingests_share_one_ingest_body(mod, name):
+    """The pre-commit pin, the caches and the commit of the near-dup
+    ingests live once, in ``dedup._retained_index_ingest``; a family
+    body calling any of them would be a second copy of the rule."""
+    fn = getattr(importlib.import_module(f"ocr_application_spark.{mod}"), name)
+    called = {
+        n.func.id if isinstance(n.func, ast.Name) else getattr(n.func, "attr", None)
+        for n in ast.walk(ast.parse(inspect.getsource(fn)))
+        if isinstance(n, ast.Call)
+    }
+    shared = {"snapshot_versions", "read_snapshot", "commit", "bounded_cache"}
+    assert called & shared == set(), called & shared
+    assert "_retained_index_ingest" in called
+
+
+def test_snapshot_reads_are_planned_from_the_manifest_schema():
+    """Every ``spark.read`` in ``sources/snapshots.py`` is followed by
+    ``.schema(...)``: an inferred schema costs one Spark job per commit
+    directory on every read."""
+    tree = ast.parse((PKG / "sources" / "snapshots.py").read_text(encoding="utf-8"))
+    reads = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+        and n.attr == "read"
+        and isinstance(n.value, ast.Name)
+        and n.value.id == "spark"
+    ]
+    followed = {
+        id(n.value): n.attr
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute)
+    }
+    assert reads
+    assert [followed.get(id(r)) for r in reads] == ["schema"] * len(reads)
