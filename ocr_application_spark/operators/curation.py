@@ -1333,14 +1333,14 @@ from f
 """
 
 
-def word_blocklist_gate(docs: DataFrame, terms=_BLOCK_TERMS) -> DataFrame:
+def word_blocklist_gate(docs: DataFrame) -> DataFrame:
     """documents(doc_id, text) -> (doc_id, n_flagged, flagged_terms,
     keep): token-exact blocklist screening (see section comment)."""
     toks = F.filter(
         F.split(F.lower(F.col("text")), _WORDSPLIT_PAT), lambda x: x != ""
     )
     t = docs.where(F.col("text").isNotNull()).select("doc_id", toks.alias("toks"))
-    hits = F.filter(F.col("toks"), lambda x: x.isin(*terms))
+    hits = F.filter(F.col("toks"), lambda x: x.isin(*_BLOCK_TERMS))
     f = t.select("doc_id", hits.alias("hits"))
     return f.select(
         "doc_id",
@@ -1807,29 +1807,18 @@ limit {_DSIR_TOPK}
 """
 
 
-def dsir_weights(
-    docs: DataFrame,
-    target_pred,
-    n_dims: int = _DSIR_DIMS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document DSIR importance: (id_col, n_toks, dsir_weight_micro)
+def dsir_weights(docs: DataFrame, target_pred) -> DataFrame:
+    """Per-document DSIR importance: (doc_id, n_toks, dsir_weight_micro)
     for every document with >= 1 whitespace token. ``target_pred`` is a
     boolean Column marking the target-distribution rows (evaluated per
     source row, e.g. ``F.col("lang") == "en"``)."""
     tok2 = docs.select(
-        F.col(id_col),
+        "doc_id",
         target_pred.alias("_is_target"),
-        F.explode(F.split(F.col(text_col), " ")).alias("token"),
+        F.explode(F.split(F.col("text"), " ")).alias("token"),
     ).filter(F.col("token") != "")
-    tok2 = tok2.select(
-        id_col,
-        "_is_target",
-        (F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint") % n_dims).alias(
-            "dim"
-        ),
-    )
+    dim = F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("bigint") % _DSIR_DIMS
+    tok2 = tok2.select("doc_id", "_is_target", dim.alias("dim"))
     raw = tok2.groupBy("dim").agg(F.count("*").alias("c_r"))
     tgt = tok2.filter("_is_target").groupBy("dim").agg(F.count("*").alias("c_t"))
     totals = tok2.agg(
@@ -1844,10 +1833,11 @@ def dsir_weights(
             F.round(
                 F.lit(1e6)
                 * F.log(
-                    ((F.coalesce(F.col("c_t"), F.lit(0)) + 1) * (F.col("n_r") + n_dims)).cast(
-                        "double"
-                    )
-                    / ((F.col("c_r") + 1) * (F.col("n_t") + n_dims)).cast("double")
+                    (
+                        (F.coalesce(F.col("c_t"), F.lit(0)) + 1)
+                        * (F.col("n_r") + _DSIR_DIMS)
+                    ).cast("double")
+                    / ((F.col("c_r") + 1) * (F.col("n_t") + _DSIR_DIMS)).cast("double")
                 ),
                 0,
             )
@@ -1857,7 +1847,7 @@ def dsir_weights(
     )
     return (
         tok2.join(F.broadcast(lr), "dim")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_toks"),
             F.sum("l_micro").alias("dsir_weight_micro"),
@@ -2006,20 +1996,16 @@ _WIN_W = 64
 _WIN_S = 48
 
 
-def window_chunks(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def window_chunks(df: DataFrame) -> DataFrame:
     """(doc_id, win_no, start_tok, n_win_tokens, win_digest): 1-based
     window index in doc order; digest = md5 of the space-rejoined
     token slice (16 hex chars). Docs with zero tokens emit nothing.
     Tokens = single-space split, empties dropped (the lm.py
     convention)."""
     w, s = _WIN_W, _WIN_S
-    toks = F.filter(F.split(F.coalesce(F.col(text_col), F.lit("")), " "),
+    toks = F.filter(F.split(F.coalesce(F.col("text"), F.lit("")), " "),
                     lambda x: x != "")
-    d = df.select(F.col(id_col).alias("doc_id"), toks.alias("tk")).filter(
-        F.size("tk") >= 1
-    )
+    d = df.select("doc_id", toks.alias("tk")).filter(F.size("tk") >= 1)
     nw = F.expr(f"1 + cast((greatest(size(tk) - {w}, 0) + {s} - 1) div {s} as int)")
     wins = (
         f"transform(sequence(0, n_win - 1), k -> struct("

@@ -17,38 +17,89 @@ at all (SURVEY §2.7: no watermarks exist there).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ocr_application_spark.kernels.extract import extract
 from ocr_application_spark.sources.webpages import PAGES_SCHEMA
 
 
-def stream_pages(spark: SparkSession, input_path: str, max_files: int = 8) -> DataFrame:
-    """File-source stream of input_hint pages (S1-analog). With a Kafka
-    cluster this is ``spark.readStream.format('kafka')...`` + from_json;
-    everything downstream is identical."""
+def _file_stream(spark: SparkSession, schema, path: str, max_files: int) -> DataFrame:
+    """File-source stream of the parquet table at ``path``, at most
+    ``max_files`` new files per micro-batch."""
     return (
-        spark.readStream.schema(PAGES_SCHEMA)
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", max_files)
-        .parquet(input_path)
+        .parquet(path)
     )
 
 
-def stream_extract(pages: DataFrame) -> DataFrame:
-    """The batch extraction kernel applied to a stream — unchanged code
-    path (mapInPandas is streaming-compatible), which is the point:
+def _start_exactly_once(
+    stream: DataFrame,
+    checkpoint: str,
+    roots: tuple[str, ...],
+    write: Callable[[DataFrame, int], None],
+) -> StreamingQuery:
+    """Start ``stream`` as an availableNow ``foreachBatch`` query whose
+    sink is exactly-once — the commit-on-success analog. ``write(batch,
+    epoch_id)`` lands one micro-batch under ``<root>/epoch=<epoch_id>``
+    directories of the given ``roots``.
+
+    Exactly-once is EARNED, not assumed: foreachBatch alone is
+    at-least-once (a crash between the sink write and the checkpoint
+    commit replays the epoch), so ``write`` puts each epoch in its own
+    ``epoch=<id>`` directory with mode("overwrite") — a replayed epoch
+    replaces its directory instead of appending duplicates. Epoch
+    numbering restarts at 0 when the CHECKPOINT is wiped, so the sink
+    clears every root on epoch 0: without that, a re-run with different
+    micro-batch boundaries would overwrite epoch=0 but leave the old
+    run's higher epoch directories behind, duplicating their rows in any
+    read of the root. The batch is persisted around ``write``, which
+    runs several actions over it (ok + quarantine, or an ingest's
+    commit + verdict join): without it the source scan and any kernel
+    upstream (mapInPandas extraction) would run once per action
+    (mirrors pipeline.run_to_table's persist)."""
+    import shutil
+
+    def sink(batch_df: DataFrame, epoch_id: int) -> None:
+        if epoch_id == 0:
+            # fresh checkpoint => fresh output: drop stale epoch dirs
+            # from a previous run whose numbering no longer applies
+            for root in roots:
+                shutil.rmtree(root, ignore_errors=True)
+        batch_df.persist()
+        try:
+            write(batch_df, epoch_id)
+        finally:
+            batch_df.unpersist()
+
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def stream_pages(spark: SparkSession, input_path: str, max_files: int = 8) -> DataFrame:
+    """File-source stream of input_hint pages (S1-analog). With a Kafka
+    cluster this is ``spark.readStream.format('kafka')...`` + from_json;
+    everything downstream is identical — ``kernels.extract.extract``
+    runs unchanged on the stream (mapInPandas is streaming-compatible):
     one engine, two execution modes."""
-    return extract(pages)
+    return _file_stream(spark, PAGES_SCHEMA, input_path, max_files)
 
 
-def stream_metrics(extracted: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Watermarked windowed counters per (window, method): rows, chars.
+def stream_metrics(extracted: DataFrame) -> DataFrame:
+    """Watermarked hourly counters per (window, method): rows, chars.
     Append-mode compatible; late rows beyond 2h are dropped by the
     watermark instead of corrupting closed windows."""
     return (
         extracted.withWatermark("warc_ts", "2 hours")
-        .groupBy(F.window("warc_ts", window).alias("w"), "method")
+        .groupBy(F.window("warc_ts", "1 hour").alias("w"), "method")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_chars").alias("total_chars"),
@@ -101,7 +152,7 @@ def stateful_host_progress(extracted: DataFrame) -> DataFrame:
     )
 
 
-def stream_dedup_urls(pages: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def stream_dedup_urls(pages: DataFrame) -> DataFrame:
     """Streaming recrawl dedup: first page per canonical URL wins.
 
     A crawl stream re-delivers documents (recrawls, mirror hosts, utm
@@ -118,70 +169,35 @@ def stream_dedup_urls(pages: DataFrame, watermark: str = "2 hours") -> DataFrame
 
     return (
         pages.withColumn("url_canonical", canonical_url(F.col("url")))
-        .withWatermark("warc_ts", watermark)
+        .withWatermark("warc_ts", "2 hours")
         .dropDuplicatesWithinWatermark(["url_canonical"])
     )
 
 
 def run_stream_to_table(
-    spark: SparkSession,
-    input_path: str,
-    out_path: str,
-    checkpoint: str,
-    once: bool = True,
-):
-    """End-to-end streaming job with exactly-once sink semantics via
-    foreachBatch — the commit-on-success analog.
-
-    Exactly-once is EARNED, not assumed: foreachBatch alone is
-    at-least-once (a crash between the sink write and the checkpoint
-    commit replays the epoch), so the sink writes each epoch to its own
-    ``epoch=<id>`` partition directory with mode("overwrite") — a
-    replayed epoch replaces its directory instead of appending
-    duplicates. Epoch numbering restarts at 0 when the CHECKPOINT is
-    wiped, so the sink clears the output (and quarantine) tables on
-    epoch 0: without that, a re-run with different micro-batch
-    boundaries would overwrite epoch=0 but leave the old run's higher
-    epoch directories behind, duplicating their rows in any read of
-    ``out_path``. Error rows are NOT dropped: they land in the same
-    quarantine table the batch path uses (no data loss, mirroring
-    kernels/extract.quarantine_split's contract)."""
-    import shutil
-
+    spark: SparkSession, input_path: str, out_path: str, checkpoint: str
+) -> StreamingQuery:
+    """End-to-end streaming extraction with the exactly-once sink of
+    ``_start_exactly_once``. Error rows are NOT dropped: they land in
+    the same quarantine table the batch path uses (no data loss,
+    mirroring kernels/extract.quarantine_split's contract)."""
     from ocr_application_spark.kernels.extract import quarantine_split
 
-    extracted = stream_extract(stream_pages(spark, input_path))
+    def write(batch: DataFrame, epoch_id: int) -> None:
+        ok, bad = quarantine_split(batch)
+        (
+            ok.drop("batch_wall_ms")
+            .write.mode("overwrite")
+            .parquet(f"{out_path}/epoch={epoch_id}")
+        )
+        bad.write.mode("overwrite").parquet(f"{out_path}_quarantine/epoch={epoch_id}")
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id == 0:
-            # fresh checkpoint => fresh output: drop stale epoch dirs
-            # from a previous run whose numbering no longer applies
-            shutil.rmtree(out_path, ignore_errors=True)
-            shutil.rmtree(f"{out_path}_quarantine", ignore_errors=True)
-        # Two actions (ok + quarantine) read the same micro-batch;
-        # without a persist the mapInPandas extraction kernel would run
-        # twice per epoch (mirrors pipeline.run_to_table's persist).
-        batch_df.persist()
-        try:
-            ok, bad = quarantine_split(batch_df)
-            (
-                ok.drop("batch_wall_ms")
-                .write.mode("overwrite")
-                .parquet(f"{out_path}/epoch={epoch_id}")
-            )
-            bad.write.mode("overwrite").parquet(
-                f"{out_path}_quarantine/epoch={epoch_id}"
-            )
-        finally:
-            batch_df.unpersist()
-
-    q = (
-        extracted.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start_exactly_once(
+        extract(stream_pages(spark, input_path)),
+        checkpoint,
+        (out_path, f"{out_path}_quarantine"),
+        write,
     )
-    return q
 
 
 # --- streaming curation ------------------------------------------------------
@@ -196,11 +212,7 @@ def stream_documents(
 ) -> DataFrame:
     """File-source stream of the input_hint documents table (the crawl
     feed for the curation chain)."""
-    return (
-        spark.readStream.schema(DOCS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(input_path)
-    )
+    return _file_stream(spark, DOCS_SCHEMA, input_path, max_files)
 
 
 def stream_curate(docs: DataFrame) -> DataFrame:
@@ -245,11 +257,7 @@ def stream_vectors(
 ) -> DataFrame:
     """File-source stream of an embeddings table (the vector feed for
     the semantic ingest family)."""
-    return (
-        spark.readStream.schema(VECTORS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(input_path)
-    )
+    return _file_stream(spark, VECTORS_SCHEMA, input_path, max_files)
 
 
 def run_stream_ingest(
@@ -260,7 +268,7 @@ def run_stream_ingest(
     checkpoint: str,
     max_files: int = 8,
     family: str = "exact",
-):
+) -> StreamingQuery:
     """Continuous crawl ingestion with corpus-level dedup against a
     persisted index — ONE streaming front-end for all four batch
     ingest families (``family=``), each run with its fixed defaults:
@@ -278,15 +286,15 @@ def run_stream_ingest(
     snapshot commit per epoch, novel entries only) and lands the
     batch's verdict-tagged rows in an epoch-partitioned output table.
 
-    Exactly-once is EARNED the same way ``run_stream_to_table`` earns
-    it, plus one property the index contributes by construction: a
-    crash anywhere between the index commit and the checkpoint commit
-    replays the epoch, and the replayed ingest (a) appends ZERO rows to
-    the index (its fingerprints are already there) and (b) reproduces
-    the SAME verdicts (the replay-stable representative rule — a doc
-    the index records as its own keeper stays 'novel' instead of
-    flipping to 'known' and being dropped downstream), while the epoch
-    output directory overwrites itself. Sequential epochs mean no
+    Exactly-once is EARNED by ``_start_exactly_once``, plus one
+    property the index contributes by construction: a crash anywhere
+    between the index commit and the checkpoint commit replays the
+    epoch, and the replayed ingest (a) appends ZERO rows to the index
+    (its fingerprints are already there) and (b) reproduces the SAME
+    verdicts (the replay-stable representative rule — a doc the index
+    records as its own keeper stays 'novel' instead of flipping to
+    'known' and being dropped downstream), while the epoch output
+    directory overwrites itself. Sequential epochs mean no
     snapshot-commit race.
 
     A checkpoint WIPE is coarser than a crash-replay: dedup decisions
@@ -304,25 +312,21 @@ def run_stream_ingest(
     the batch to one row per id — deterministically, keeping the row
     with the smallest payload hash — otherwise the verdict join would
     fan out (and, for the exact family whose verdicts are per
-    (doc_id, fingerprint), cross-tag the duplicates' rows)."""
-    import shutil
-
+    (doc_id, fingerprint), cross-tag the duplicates' rows). That
+    collapse runs inside the sink, on the persisted micro-batch:
+    streaming frames reject non-time windows."""
     from pyspark.sql.window import Window
 
     from ocr_application_spark.operators.dedup import (
         fingerprint_index_ingest,
         minhash_index_ingest,
+        winnow_index_ingest,
     )
     from ocr_application_spark.operators.similarity import embedding_index_ingest
 
     if family in ("exact", "minhash", "winnow"):
-        from ocr_application_spark.operators.dedup import winnow_index_ingest
-
-        stream, id_col, payload_col = (
-            stream_documents(spark, input_path, max_files),
-            "doc_id",
-            "text",
-        )
+        stream = stream_documents(spark, input_path, max_files)
+        id_col, payload_col = "doc_id", "text"
         ingest = {
             "exact": fingerprint_index_ingest,
             "minhash": minhash_index_ingest,
@@ -330,54 +334,34 @@ def run_stream_ingest(
         }[family]
         payload_hash = F.md5(F.coalesce(F.col("text"), F.lit("")))
     elif family == "semantic":
-        stream, id_col, payload_col = (
-            stream_vectors(spark, input_path, max_files),
-            "vec_id",
-            "embedding",
-        )
+        stream = stream_vectors(spark, input_path, max_files)
+        id_col, payload_col = "vec_id", "embedding"
         ingest = embedding_index_ingest
         payload_hash = F.xxhash64("embedding")
     else:
         raise ValueError(f"unknown ingest family {family!r}")
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id == 0:
-            # fresh checkpoint => fresh output (see docstring)
-            shutil.rmtree(out_path, ignore_errors=True)
+    def write(batch: DataFrame, epoch_id: int) -> None:
         # one row per id, smallest-payload-hash row wins (ties are
         # byte-identical payloads; remaining columns tie-break for full
         # determinism)
         one = Window.partitionBy(id_col).orderBy(
             payload_hash,
-            *[c for c in batch_df.columns if c not in (id_col, payload_col)],
+            *[c for c in batch.columns if c not in (id_col, payload_col)],
         )
-        batch_df = (
-            batch_df.withColumn("_rn", F.row_number().over(one))
+        batch = (
+            batch.withColumn("_rn", F.row_number().over(one))
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        # the ingest runs two actions over the batch (the novel commit
-        # and the verdict join output) — persist so the scan runs once
-        # per epoch
-        batch_df.persist()
-        try:
-            verdicts, _v = ingest(
-                spark, index_path, batch_df, op_label=f"epoch-{epoch_id}"
-            )
-            (
-                batch_df.join(verdicts, id_col)
-                .write.mode("overwrite")
-                .parquet(f"{out_path}/epoch={epoch_id}")
-            )
-        finally:
-            batch_df.unpersist()
+        verdicts, _v = ingest(spark, index_path, batch, op_label=f"epoch-{epoch_id}")
+        (
+            batch.join(verdicts, id_col)
+            .write.mode("overwrite")
+            .parquet(f"{out_path}/epoch={epoch_id}")
+        )
 
-    return (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_exactly_once(stream, checkpoint, (out_path,), write)
 
 
 # --- streaming WET ingest ------------------------------------------------------
@@ -391,11 +375,7 @@ def stream_wet_segments(
     """File-source stream of packed WET segment blobs (sources/warc.py)
     — the Common-Crawl drop-folder shape: shards land as files, each a
     self-contained batch of framed records."""
-    return (
-        spark.readStream.schema(WET_SEGMENTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files)
-        .parquet(input_path)
-    )
+    return _file_stream(spark, WET_SEGMENTS_SCHEMA, input_path, max_files)
 
 
 def run_wet_stream_to_table(
@@ -403,36 +383,23 @@ def run_wet_stream_to_table(
     input_path: str,
     out_path: str,
     checkpoint: str,
-):
+) -> StreamingQuery:
     """Stream-parse WET segments with the batch kernel (mapInPandas is
     streaming-compatible — same parse_wet_bytes spec, two execution
-    modes) and the same earned exactly-once sink contract as
-    run_stream_to_table: per-epoch overwrite dirs, epoch-0 reset on a
-    wiped checkpoint, malformed records quarantined, never dropped."""
-    import shutil
-
+    modes) and the exactly-once sink of ``_start_exactly_once``:
+    per-epoch overwrite dirs, epoch-0 reset on a wiped checkpoint,
+    malformed records quarantined, never dropped."""
     from ocr_application_spark.sources.warc import parse_wet_segments
 
-    parsed = parse_wet_segments(stream_wet_segments(spark, input_path))
+    def write(batch: DataFrame, epoch_id: int) -> None:
+        ok = batch.where(F.col("status") == "ok")
+        bad = batch.where(F.col("status") != "ok")
+        ok.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
+        bad.write.mode("overwrite").parquet(f"{out_path}_quarantine/epoch={epoch_id}")
 
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id == 0:
-            shutil.rmtree(out_path, ignore_errors=True)
-            shutil.rmtree(f"{out_path}_quarantine", ignore_errors=True)
-        batch_df.persist()
-        try:
-            ok = batch_df.where(F.col("status") == "ok")
-            bad = batch_df.where(F.col("status") != "ok")
-            ok.write.mode("overwrite").parquet(f"{out_path}/epoch={epoch_id}")
-            bad.write.mode("overwrite").parquet(
-                f"{out_path}_quarantine/epoch={epoch_id}"
-            )
-        finally:
-            batch_df.unpersist()
-
-    return (
-        parsed.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _start_exactly_once(
+        parse_wet_segments(stream_wet_segments(spark, input_path)),
+        checkpoint,
+        (out_path, f"{out_path}_quarantine"),
+        write,
     )

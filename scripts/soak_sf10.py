@@ -1,17 +1,21 @@
-"""sf10 soak (VERDICT r04 #8): one more decade up for the three ops
-whose constants grew in round 4.
+"""Scale soak of the corpus-shaped operators (VERDICT r04 #8).
 
 Corpus: the standard soak recipe (sf0.1 documents replicated ``reps``x
-with deterministic perturbation — no external data, no RNG) at
-reps=1000 -> ~4.8M docs / ~6.5 GB text, one decade above the sf1 soak.
-Ops: ``dedup_cdc_chunks`` (per-position gram hashing — scan-shaped;
+with deterministic perturbation — no external data, no RNG). reps=1000
+-> ~4.8M docs / ~6.5 GB text (sf10, one decade above the sf1 soak);
+reps=100 is the sf1 run of PERF.md §7b. Embedding ops are excluded: the
+embeddings table is fixed at 500 vectors regardless of SF.
+Ops: ``page_markdown`` (20-rule regexp chain — scan-bound),
+``text_window_chunks`` (array-side windows — only real windows become
+rows), ``dedup_cdc_chunks`` (per-position gram hashing — scan-shaped;
 replication multiplies the doc count, not the doc length, so this
 checks linearity in corpus size only; per-doc cost against length is
 the PERF.md §7c doc-length table), ``split_leakage_report`` (~1B-gram
 hash join — claims uniform-key linear), and the chunk-store bootstrap + ALL-DUP replay
 (claims O(increment) verdict work; the store probe scans the store's
-chunk_hash column once per ingest). Shuffle partitions scale with the decade (128
-vs the sf1 soak's 32) — the knob a real cluster would turn.
+chunk_hash column once per ingest). Shuffle partitions grow 4x per
+decade of ``reps`` above 100 (32 at reps=100, 128 at reps=1000) — the
+knob a real cluster would turn.
 
 Publishes wall time + volume per stage to BENCH/soak_sf10.json; the
 pass criterion is zero OOM/retry and time ratios vs the sf1 soak near
@@ -23,6 +27,7 @@ Run on an idle box: python scripts/soak_sf10.py [reps]
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import sys
@@ -35,6 +40,8 @@ sys.path.insert(0, REPO)
 def main() -> None:
     reps = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    decades = max(0, round(math.log10(reps / 100)))
+    partitions = max(32 * 4**decades, cpus)
 
     from pyspark.sql import functions as F
 
@@ -44,7 +51,7 @@ def main() -> None:
     spark = get_spark(
         "soak-sf10",
         cores=cpus,
-        shuffle_partitions=max(128, cpus),
+        shuffle_partitions=partitions,
         extra_conf={"spark.sql.files.maxPartitionBytes": str(32 * 1024 * 1024)},
     )
     base = os.path.join(default_scratch(), "soak_sf10")
@@ -69,7 +76,7 @@ def main() -> None:
             "source",
             F.length(text2).alias("n_chars"),
         )
-        .repartition(max(128, cpus))
+        .repartition(partitions)
         .write.parquet(os.path.join(docs_dir, "documents.parquet"))
     )
     n_rows = spark.read.parquet(os.path.join(docs_dir, "documents.parquet")).count()
@@ -86,8 +93,14 @@ def main() -> None:
               "rows_per_sec": round(n / max(secs, 1e-9), 1)})
 
     from ocr_application_spark.operators.cdc import cdc_store_ingest, dedup_cdc_chunks
-    from ocr_application_spark.operators.curation import split_leakage_report
+    from ocr_application_spark.operators.curation import (
+        split_leakage_report,
+        text_window_chunks,
+    )
+    from ocr_application_spark.operators.markdown import page_markdown
 
+    run("page_markdown", page_markdown(spark, docs_dir))
+    run("text_window_chunks", text_window_chunks(spark, docs_dir))
     run("dedup_cdc_chunks", dedup_cdc_chunks(spark, docs_dir))
     run("split_leakage_report", split_leakage_report(spark, docs_dir))
 

@@ -15,6 +15,7 @@ the impossible SQL oracle (no SQL can refit k-means):
 import numpy as np
 import pytest
 
+from ocr_application_spark.operators.ann_ivf import train_codebook
 from ocr_application_spark.operators.ann_pq import (
     M_SUB,
     _K_TOP,
@@ -45,6 +46,17 @@ def _norm(v):
 def test_codebook_shape_and_determinism(spark, books):
     assert books.shape == (M_SUB, 16, 64 // M_SUB)
     assert np.array_equal(books, train_pq_codebooks(spark, SF))
+
+
+@pytest.mark.parametrize("train", [train_codebook, train_pq_codebooks], ids=["ivf", "pq"])
+def test_trainers_reject_an_empty_training_sample(spark, tmpdir_scratch, train):
+    """A table without a vec_id % 7 == 0 row leaves nothing to fit: both
+    ANN trainers say so instead of failing inside numpy."""
+    spark.createDataFrame(
+        [(i, [float(i)] * 64) for i in (1, 2, 3)], "vec_id bigint, embedding array<float>"
+    ).write.parquet(f"{tmpdir_scratch}/embeddings.parquet")
+    with pytest.raises(ValueError, match="empty training sample"):
+        train(spark, tmpdir_scratch)
 
 
 def test_codes_deterministic_in_range_and_32x_smaller(spark, books):

@@ -1,6 +1,9 @@
 """Every oracle-paired query must match DuckDB at sf0.001 (the driver
 runs the same comparison at sf0.01 -> CORRECTNESS_r{N}.json)."""
 
+import json
+import pathlib
+
 import pytest
 
 import __spark_entry__ as entrymod
@@ -92,17 +95,20 @@ def test_driver_window_covers_flagships_and_new_ops():
     # every in-window entry must be oracle-paired (a rows-only row would
     # waste a slot on the weak check)
     assert window <= set(_ORACLES), window - set(_ORACLES)
-    allowed_outside = (
-        set(entrymod._PRIOR_DRIVER_GREEN)
-        | set(entrymod._ROWS_ONLY_BY_DESIGN)
-        | set(entrymod._NEW_R05_OUTSIDE)
-    )
+    rows_only = set(_QUERIES) - set(_ORACLES)
+    allowed_outside = _prior_driver_green() | rows_only
     assert outside <= allowed_outside, outside - allowed_outside
-    # a post-window-freeze op must carry the sf0.01 gate the window
-    # would have given it (STALE_OUTSIDE in test_oracle_parity_sf01)
-    from tests.test_oracle_parity_sf01 import STALE_OUTSIDE
 
-    assert set(entrymod._NEW_R05_OUTSIDE) <= set(STALE_OUTSIDE)
+
+def _prior_driver_green() -> set[str]:
+    """Names with a green driver row (all three checks true) in some
+    round's CORRECTNESS_r*.json."""
+    green = set()
+    for f in pathlib.Path(__file__).resolve().parents[1].glob("CORRECTNESS_r*.json"):
+        for name, row in json.loads(f.read_text()).items():
+            if row["rows_match"] and row["schema_match"] and row["hash_match"]:
+                green.add(name)
+    return green
 
 
 def test_digest_oracle_survives_adversarial_text(spark, tmpdir_scratch):

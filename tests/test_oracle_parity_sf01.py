@@ -18,15 +18,18 @@ from tests.oracle_harness import compare, duck_con
 SF_DIR = "/root/testdata/sf0.01"
 
 # out-of-window ops whose implementation/oracle changed after their last
-# driver-green row, plus ops NEW this round that land after the window
-# freezes (entrymod._NEW_R05_OUTSIDE — they get here what a slot would
-# have given them: the driver-identical compare at the driver's SF)
+# driver-green row (they get here what a slot would have given them: the
+# driver-identical compare at the driver's SF)
 STALE_OUTSIDE = [
     # r05: the bounded-window WARN silencing (VERDICT #6) touched the
     # rank plumbing of this out-of-window op
     "text_rank_quality",
     # the winnowing ingest moved onto the shared near-dup ingest body
     "overlap_incremental_ingest",
+    # run_stream_to_table moved onto the shared exactly-once sink
+    "streaming_extract_digest",
+    # dsir_weights lost its column and dimension options
+    "sample_dsir_topk",
 ]
 
 _QUERIES = entrymod.queries()

@@ -26,9 +26,6 @@ def test_name_tuples_are_registered_queries():
     registered = set(entrymod.queries())
     tuples = {
         "_WINDOW": entrymod._WINDOW,
-        "_PRIOR_DRIVER_GREEN": entrymod._PRIOR_DRIVER_GREEN,
-        "_ROWS_ONLY_BY_DESIGN": entrymod._ROWS_ONLY_BY_DESIGN,
-        "_NEW_R05_OUTSIDE": entrymod._NEW_R05_OUTSIDE,
         "STALE_OUTSIDE": STALE_OUTSIDE,
         "bench._UNTIMED": bench._UNTIMED,
     }

@@ -25,6 +25,11 @@ One verdict rule for the near-dup ingests: the minhash, winnow and
 embedding ingests delegate index pinning, caching and the commit to
 ``dedup._retained_index_ingest``; and every snapshot read is planned
 from the manifest schema (``spark.read.schema(...)``), never inferred.
+
+The ANN-PQ, streaming and curation entry points take no dials either,
+and each repeated step of those families exists once: the ANN training
+sample, the ADC lookup table, the exact re-rank and the exactly-once
+streaming sink.
 """
 
 import ast
@@ -261,6 +266,25 @@ _INGEST = "spark, index_path, docs, *, op_label"
         ("operators.dedup", "propagate_components", "pairs, nodes"),
         ("operators.similarity", "quantized_topk", "cand"),
         ("operators.ann_ivf", "train_codebook", "spark, sf_dir"),
+        ("operators.ann_pq", "train_pq_codebooks", "spark, sf_dir"),
+        ("operators.ann_pq", "pq_shortlist", "spark, sf_dir, shortlist"),
+        ("operators.ann_pq", "pq_topk", "spark, sf_dir, shortlist"),
+        ("operators.ann_pq", "build_ivfpq_index", "spark, sf_dir, path"),
+        (
+            "operators.ann_pq",
+            "ivfpq_topk",
+            "spark, sf_dir, path, cent, books, nprobe, shortlist",
+        ),
+        (
+            "streaming.stream",
+            "run_stream_to_table",
+            "spark, input_path, out_path, checkpoint",
+        ),
+        ("streaming.stream", "stream_metrics", "extracted"),
+        ("streaming.stream", "stream_dedup_urls", "pages"),
+        ("operators.curation", "word_blocklist_gate", "docs"),
+        ("operators.curation", "dsir_weights", "docs, target_pred"),
+        ("operators.curation", "window_chunks", "df"),
     ],
 )
 def test_recrawl_entry_points_take_no_dials(mod, name, shape):
@@ -328,3 +352,56 @@ def test_snapshot_reads_are_planned_from_the_manifest_schema():
     }
     assert reads
     assert [followed.get(id(r)) for r in reads] == ["schema"] * len(reads)
+
+
+def _calls(tree: ast.AST, name: str) -> int:
+    """Calls of ``name`` in ``tree``, bare (``f()``) or as an attribute
+    (``x.f()``)."""
+    return sum(
+        isinstance(n, ast.Call)
+        and name in (getattr(n.func, "id", None), getattr(n.func, "attr", None))
+        for n in ast.walk(tree)
+    )
+
+
+def _module(rel: str) -> ast.Module:
+    return ast.parse((PKG / rel).read_text(encoding="utf-8"))
+
+
+def _defs(tree: ast.AST, *names: str) -> list[ast.FunctionDef]:
+    return [n for n in ast.walk(tree) if isinstance(n, ast.FunctionDef) and n.name in names]
+
+
+def test_ann_pq_builds_one_lut_and_one_exact_rerank():
+    """The ADC lookup table and the exact-cosine re-rank of the PQ
+    family exist once each (``_adc_udfs`` and ``_rerank``), shared by
+    the standalone and the IVF-PQ top-k."""
+    tree = _module("operators/ann_pq.py")
+    assert _calls(tree, "einsum") == 1
+    assert len(_defs(tree, "exact_cos")) == 1
+
+
+def test_ann_trainers_share_one_training_sample():
+    """Both ANN codebooks collect their sample through
+    ``ann_ivf._training_sample``: one ``collect`` between the trainers."""
+    ivf, pq = _module("operators/ann_ivf.py"), _module("operators/ann_pq.py")
+    (sample,) = _defs(ivf, "_training_sample")
+    assert _calls(sample, "collect") == 1
+    trainers = _defs(ivf, "train_codebook") + _defs(pq, "train_pq_codebooks")
+    assert len(trainers) == 2
+    assert [(_calls(t, "_training_sample"), _calls(t, "collect")) for t in trainers] == [
+        (1, 0),
+        (1, 0),
+    ]
+
+
+def test_streaming_has_one_exactly_once_sink():
+    """Every streaming job starts its query through
+    ``stream._start_exactly_once``: one ``writeStream`` and one epoch-0
+    ``rmtree`` in the module."""
+    tree = _module("streaming/stream.py")
+    write_streams = sum(
+        isinstance(n, ast.Attribute) and n.attr == "writeStream" for n in ast.walk(tree)
+    )
+    assert write_streams == 1
+    assert _calls(tree, "rmtree") == 1

@@ -1,11 +1,11 @@
 """Streaming: same extraction kernel over readStream, exactly-once sink,
 watermarked metrics (SURVEY §2.7 mapping)."""
 
+from ocr_application_spark.kernels.extract import extract
 from ocr_application_spark.pipeline import extract_pages
 from ocr_application_spark.sources.webpages import synth_pages
 from ocr_application_spark.streaming.stream import (
     run_stream_to_table,
-    stream_extract,
     stream_metrics,
     stream_pages,
 )
@@ -35,7 +35,7 @@ def test_stream_matches_batch(spark, tmpdir_scratch):
 def test_stream_metrics_windowing(spark, tmpdir_scratch):
     inp = tmpdir_scratch + "/in"
     synth_pages(spark, N).write.parquet(inp)
-    metrics = stream_metrics(stream_extract(stream_pages(spark, inp)))
+    metrics = stream_metrics(extract(stream_pages(spark, inp)))
     q = (
         metrics.writeStream.outputMode("append")
         .format("memory")
@@ -65,7 +65,7 @@ def test_stateful_host_progress(spark, tmpdir_scratch):
     # carry across batches, not just within one
     synth_pages(spark, N).repartition(8).write.parquet(inp)
 
-    prog = stateful_host_progress(stream_extract(stream_pages(spark, inp, max_files=2)))
+    prog = stateful_host_progress(extract(stream_pages(spark, inp, max_files=2)))
     q = (
         prog.writeStream.outputMode("update")
         .format("memory")
