@@ -77,7 +77,11 @@ def train_codebook(spark: SparkSession, sf_dir: str) -> np.ndarray:
     K_CELLS sample rows by vec_id — a codebook is a few KB of broadcast
     state, exactly like the classifier weights.
     """
-    x = _training_sample(spark, sf_dir)
+    return _fit_coarse(_training_sample(spark, sf_dir))
+
+
+def _fit_coarse(x: np.ndarray) -> np.ndarray:
+    """The coarse k-means fit of ``train_codebook`` on a loaded sample."""
     cent = x[:K_CELLS].copy()
     for _ in range(8):
         sims = x @ cent.T

@@ -40,9 +40,9 @@ from pyspark.sql.window import Window
 from ocr_application_spark.operators.ann_ivf import (
     N_PROBE,
     _centroid_udfs,
+    _fit_coarse,
     _training_sample,
     _unit_rows,
-    train_codebook,
 )
 from ocr_application_spark.operators.registry import op
 
@@ -69,7 +69,12 @@ def train_pq_codebooks(spark: SparkSession, sf_dir: str) -> np.ndarray:
 
     Returns float64 codebooks of shape (M_SUB, K_SUB, d // M_SUB).
     """
-    x = _training_sample(spark, sf_dir)
+    return _fit_pq(_training_sample(spark, sf_dir))
+
+
+def _fit_pq(x: np.ndarray) -> np.ndarray:
+    """The per-subspace k-means fit of ``train_pq_codebooks`` on a
+    loaded sample."""
     d = x.shape[1]
     if d % M_SUB:
         raise ValueError(f"dim {d} not divisible by m={M_SUB}")
@@ -237,9 +242,22 @@ def pq_shortlist(
     WindowGroupLimit over a bounded per-row score array (<= _Q_CAP
     entries), never a cartesian.
     """
-    books = train_pq_codebooks(spark, sf_dir)
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qmap, queries = _load_queries(spark, vecs)
+    return _pq_shortlist(spark, sf_dir, vecs, *_load_queries(spark, vecs), shortlist)
+
+
+def _pq_shortlist(
+    spark: SparkSession,
+    sf_dir: str,
+    vecs: DataFrame,
+    qmap: DataFrame,
+    queries: np.ndarray,
+    shortlist: int,
+) -> DataFrame:
+    """The body of ``pq_shortlist`` on an already loaded query set, so
+    ``pq_topk`` collects its queries once for the shortlist and the
+    re-rank."""
+    books = train_pq_codebooks(spark, sf_dir)
     adc, _ = _adc_udfs(spark, books, queries)
     scored = encode_pq(spark, vecs, books).select(
         F.col("vec_id").alias("cand_id"),
@@ -256,8 +274,9 @@ def pq_topk(spark: SparkSession, sf_dir: str, shortlist: int = _SHORTLIST) -> Da
     (recall curve in PERF.md).
     """
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    _, queries = _load_queries(spark, vecs)
-    return _rerank(spark, pq_shortlist(spark, sf_dir, shortlist), vecs, queries)
+    qmap, queries = _load_queries(spark, vecs)
+    sl = _pq_shortlist(spark, sf_dir, vecs, qmap, queries, shortlist)
+    return _rerank(spark, sl, vecs, queries)
 
 
 @op("ann_pq_topk")  # rows-only BY DESIGN: no SQL oracle can refit k-means
@@ -281,11 +300,11 @@ def build_ivfpq_index(
     never enter the index; they stay in the base table and are read
     solely for the Q x shortlist re-rank join.
 
-    Returns (coarse codebook, PQ codebooks), both trained on the same
-    bounded deterministic sample as their standalone ops.
+    Returns (coarse codebook, PQ codebooks), both fitted on one collect
+    of the bounded deterministic sample their standalone ops train on.
     """
-    cent = train_codebook(spark, sf_dir)
-    books = train_pq_codebooks(spark, sf_dir)
+    x = _training_sample(spark, sf_dir)
+    cent, books = _fit_coarse(x), _fit_pq(x)
     cell_of, _ = _centroid_udfs(spark, cent)
     enc = _encode_udf(spark, books)
     vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")

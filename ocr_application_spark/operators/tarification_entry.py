@@ -21,10 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_application_spark.operators.registry import op
-
-# handle to the previous invocation's persisted match-set, released at
-# the start of the next call (bounds cache growth in long sessions)
-_last_tarified = None
+from ocr_application_spark.session import bounded_cache
 
 _DEC = "decimal(18,5)"
 
@@ -199,24 +196,14 @@ def tarification_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         tarify,
     )
 
-    global _last_tarified
-    if _last_tarified is not None:
-        # release the PREVIOUS invocation's cache: the returned plan
-        # references its persist, so nothing else ever frees it, and a
-        # long-lived gate/bench session would otherwise accumulate one
-        # cached match-set per call
-        try:
-            _last_tarified.unpersist()
-        except Exception:
-            pass  # prior SparkSession already stopped
-        _last_tarified = None
     lines = _fixture_lines(spark, sf_dir)
     catalog = parse_catalog(_fixture_catalog_raw(spark, sf_dir))
     # three aggregate branches consume tarified; persist so the fuzzy
     # join + top-1 window run once, not per branch (the cached set is a
-    # few thousand matched lines, not the pair fan-out)
-    tarified = tarify(lines, catalog).persist()
-    _last_tarified = tarified
+    # few thousand matched lines, not the pair fan-out). The slot frees
+    # the previous call's copy: the returned plan references it, so
+    # nothing else would, and a long-lived session would keep one per call
+    tarified = bounded_cache(tarify(lines, catalog), "tarification_pipeline")
     ms = monthly_series(tarified).agg(
         F.count("*").alias("n_months"),
         F.min("mois").alias("first_mois"),

@@ -180,8 +180,9 @@ def bounded_cache(df, slot: str):
     the same ``slot`` — bounds the live cached copies of a
     per-invocation operator (the index-ingest family) to ONE per slot
     regardless of how many times it runs in a session, instead of
-    leaking one copy per call (the ``_last_tarified`` leak class: a
-    continuous-ingest stream calls the operator once per epoch).
+    leaking one copy per call (a continuous-ingest stream calls the
+    operator once per epoch; a gate or bench session calls a query
+    operator such as ``tarification_pipeline`` once per run).
 
     Deliberately persist, NOT localCheckpoint: unpersisting a cache that
     some still-alive plan references degrades to a recompute (correct,

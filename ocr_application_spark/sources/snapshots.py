@@ -326,6 +326,19 @@ def _head_version(path: str, branch: str = "main") -> int | None:
     raise FileNotFoundError(f"branch {branch!r} not found at {path}")
 
 
+def _resolve(path: str, version: int | None = None) -> int:
+    """``version`` (default: main's head) checked against the table's
+    snapshots; a table without snapshots or a missing version raises
+    ``FileNotFoundError``."""
+    versions = snapshot_versions(path)
+    if not versions:
+        raise FileNotFoundError(f"no snapshots at {path}")
+    v = _head_version(path) if version is None else version
+    if v not in versions:
+        raise FileNotFoundError(f"snapshot v{v} not found (have {versions})")
+    return v
+
+
 def _pin_main(path: str) -> None:
     """Pin main's head to an explicit ref file (idempotent). Must run
     BEFORE any ref that lets history diverge is created — afterwards
@@ -692,32 +705,15 @@ def read_snapshot(
     scanned per commit subtree (each with its commit dir as basePath,
     so ``key=value`` partition dirs parse while the non-partition
     ``c{n}`` level does not confuse discovery) and unioned by name."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {path}")
     if ref is not None:
         if version is not None:
             raise ValueError("pass version OR ref, not both")
         r = _load_ref(path, ref)
         if r is None and ref != "main":
             raise FileNotFoundError(f"ref {ref!r} not found at {path}")
-        v = r["version"] if r is not None else versions[-1]
-    else:
-        v = _head_version(path) if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(f"snapshot v{v} not found (have {versions})")
-    manifest = _load_manifest(path, v)
-    files = manifest["files"]
-    if not files:
-        # legitimately empty snapshot (e.g. every partition overwritten
-        # away): an empty DataFrame with the recorded table schema, NOT
-        # an error — callers must be able to tell "empty at vN" from
-        # "vN missing"
-        from pyspark.sql import types as T
-
-        schema = T.StructType.fromJson(json.loads(manifest["schema"]))
-        return spark.createDataFrame([], schema)
-    return _read_files(spark, path, files, schema_json=manifest["schema"])
+        version = None if r is None else r["version"]
+    manifest = _load_manifest(path, _resolve(path, version))
+    return _read_files(spark, path, manifest["files"], schema_json=manifest["schema"])
 
 
 def _read_files(
@@ -737,6 +733,12 @@ def _read_files(
     from pyspark.sql import types as T
 
     schema = T.StructType.fromJson(json.loads(schema_json))
+    if not files:
+        # a legitimately empty file set (every partition overwritten
+        # away, an empty diff, everything pruned): an empty DataFrame
+        # with the recorded schema, NOT an error — callers must be able
+        # to tell "empty at vN" from "vN missing"
+        return spark.createDataFrame([], schema)
     data_root = _data_dir(path)
     by_commit: dict[str, list[str]] = {}
     for f in files:
@@ -766,13 +768,8 @@ def read_snapshot_diff(
     newly crawled pages, re-dedup only fresh docs) O(new data) instead
     of O(table). Rows REMOVED by a logical overwrite don't appear (this
     is the additions stream, like Iceberg's append-scan)."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    to_v = _head_version(path) if to_version is None else to_version
-    for v in (from_version, to_v):
-        if v not in versions:
-            raise FileNotFoundError(f"snapshot v{v} not found (have {versions})")
+    _resolve(path, from_version)
+    to_v = _resolve(path, to_version)
     if from_version > to_v:
         raise ValueError(
             f"inverted range: from_version={from_version} > to_version={to_v}"
@@ -815,12 +812,35 @@ def read_snapshot_diff(
     base = set(_load_manifest(path, from_version)["files"])
     target = _load_manifest(path, to_v)
     new_files = sorted(set(target["files"]) - base)
-    if not new_files:
-        from pyspark.sql import types as T
-
-        schema = T.StructType.fromJson(json.loads(target["schema"]))
-        return spark.createDataFrame([], schema)
     return _read_files(spark, path, new_files, schema_json=target["schema"])
+
+
+def _rewrite_set(
+    spark: SparkSession, path: str, version: int, keys: DataFrame, key: list
+) -> tuple[list[str], DataFrame]:
+    """The copy-on-write unit of ``merge_pages`` and ``delete_pages``:
+    the data files of snapshot ``version`` holding a row whose ``key``
+    appears in ``keys`` (a driver collect bounded by the FILE count,
+    never rows), and those files' rows whose key does not."""
+    manifest = _load_manifest(path, version)
+    kdf = F.broadcast(keys.select(*key).distinct())
+    cur = _read_files(spark, path, manifest["files"], schema_json=manifest["schema"])
+    hits = (
+        cur.withColumn("f", F.input_file_name())
+        .join(kdf, key, "left_semi")
+        .select("f")
+        .distinct()
+        .collect()
+    )
+    # input_file_name() returns the Hadoop Path URI (percent-encoded:
+    # 'my table' -> 'my%20table'); manifest entries are raw os.walk
+    # paths, so decode before comparing or a table under an
+    # escaping-needy path fails every rewrite with a bogus conflict
+    affected = [_uri_to_local(f) for f in sorted(r.f for r in hits)]
+    survivors = _read_files(
+        spark, path, affected, schema_json=manifest["schema"]
+    ).join(kdf, key, "left_anti")
+    return affected, survivors
 
 
 def merge_pages(
@@ -863,34 +883,14 @@ def merge_pages(
     # full rows); EXTRA update columns are additive evolution — old
     # files' surviving rows project nulls for them, like any
     # post-evolution read
-    base_version = _head_version(path)
-    latest_schema = _load_manifest(path, base_version)["schema"]
-    _check_schema_evolution(latest_schema, updates.schema)
-    cur = read_snapshot(spark, path, version=base_version)
-    # which files contain a matched key: semi-join against the update
-    # keys, then the distinct source-file set (file-count bounded)
-    affected = sorted(
-        r.f
-        for r in cur.withColumn("f", F.input_file_name())
-        .join(F.broadcast(updates.select(*key).distinct()), key, "left_semi")
-        .select("f")
-        .distinct()
-        .collect()
+    base_version = _resolve(path)
+    _check_schema_evolution(_load_manifest(path, base_version)["schema"], updates.schema)
+    affected, survivors = _rewrite_set(spark, path, base_version, updates, key)
+    # allowMissingColumns fills only the SURVIVOR side (updates were
+    # just validated to be a superset of the table schema)
+    new_rows = (
+        survivors.unionByName(updates, allowMissingColumns=True) if affected else updates
     )
-    # input_file_name() returns the Hadoop Path URI (percent-encoded:
-    # 'my table' -> 'my%20table'); manifest entries are raw os.walk
-    # paths, so decode before comparing or a table under an
-    # escaping-needy path fails every merge with a bogus conflict
-    affected = [_uri_to_local(f) for f in affected]
-    if affected:
-        survivors = _read_files(
-            spark, path, affected, schema_json=latest_schema
-        ).join(F.broadcast(updates.select(*key).distinct()), key, "left_anti")
-        # allowMissingColumns fills only the SURVIVOR side (updates were
-        # just validated to be a superset of the table schema)
-        new_rows = survivors.unionByName(updates, allowMissingColumns=True)
-    else:
-        new_rows = updates
     return commit(
         new_rows,
         path,
@@ -934,25 +934,10 @@ def delete_pages(
     every row matched leaves a zero-row survivor file referenced (this
     emulation commits whatever the write produced, unlike Iceberg's
     zero-record-file skip); ``compact`` clears such files."""
-    key = list(key)
-    base_version = _head_version(path)
-    latest_schema = _load_manifest(path, base_version)["schema"]
-    cur = read_snapshot(spark, path, version=base_version)
-    kdf = keys.select(*key).distinct()
-    affected = sorted(
-        r.f
-        for r in cur.withColumn("f", F.input_file_name())
-        .join(F.broadcast(kdf), key, "left_semi")
-        .select("f")
-        .distinct()
-        .collect()
-    )
-    affected = [_uri_to_local(f) for f in affected]  # see merge_pages note
+    base_version = _resolve(path)
+    affected, survivors = _rewrite_set(spark, path, base_version, keys, list(key))
     if not affected:
         return base_version
-    survivors = _read_files(spark, path, affected, schema_json=latest_schema).join(
-        F.broadcast(kdf), key, "left_anti"
-    )
     return commit(
         survivors,
         path,
@@ -1235,12 +1220,7 @@ def plan_scan(path: str, ranges: dict, version: int | None = None) -> dict:
     free (the scan's residual filter enforces the exact predicate),
     over-skipping would be a wrong answer, so every uncertain case
     keeps. Pure manifest arithmetic: no Spark job, no file opens."""
-    versions = snapshot_versions(path)
-    if not versions:
-        raise FileNotFoundError(f"no snapshots at {path}")
-    v = _head_version(path) if version is None else version
-    if v not in versions:
-        raise FileNotFoundError(f"snapshot v{v} not found (have {versions})")
+    v = _resolve(path, version)
     m = _load_manifest(path, v)
     schema_cols = {f["name"] for f in json.loads(m["schema"])["fields"]}
     unknown = sorted(set(ranges) - schema_cols)
@@ -1300,14 +1280,7 @@ def scan_snapshot(
     of files instead of the whole table. The residual filter ALWAYS
     runs (zone maps are a pruning layer, never the predicate)."""
     plan = plan_scan(path, ranges, version)
-    if not plan["files"]:
-        from pyspark.sql import types as T
-
-        df = spark.createDataFrame(
-            [], T.StructType.fromJson(json.loads(plan["schema"]))
-        )
-    else:
-        df = _read_files(spark, path, plan["files"], schema_json=plan["schema"])
+    df = _read_files(spark, path, plan["files"], schema_json=plan["schema"])
     for c, (lo, hi) in ranges.items():
         if lo is not None:
             df = df.filter(F.col(c) >= F.lit(lo))

@@ -10,21 +10,26 @@ engine both directions:
 * ``wet_record_col`` / ``pack_wet_segments``: build byte-exact WET
   segment blobs from a pages DataFrame with pure JVM expressions (one
   ``groupBy(seg)`` shuffle; records sorted by url inside a segment so
-  packing is deterministic).
-* ``parse_wet_segments``: an Arrow-batched ``mapInPandas`` kernel over
-  the segment payload bytes. The per-segment parser is the pure
-  function ``parse_wet_bytes`` — tests and oracles run the same code
+  packing is deterministic). Binary (response/revisit) records pack
+  through the one hex-join packer ``pack_record_segments``.
+* ``parse_wet_segments`` and the two WARC twins: Arrow-batched
+  ``mapInPandas`` kernels over the segment payload bytes, all one batch
+  loop (``_parse_kernel``) around a pure per-segment parser —
+  ``parse_wet_bytes``, ``parse_warc_records`` or
+  ``parse_warc_response_bytes``. Tests and oracles run the same parsers
   eagerly, the repo's byte-identity pattern (core/extraction_core.py).
 
-Framing is by ``Content-Length`` (bytes of the UTF-8 payload), so
-payloads containing ``\\r\\n\\r\\n`` or even a literal ``WARC/1.0``
-header block round-trip exactly. Malformed input never throws mid-job:
-a record whose payload is not valid UTF-8 yields one ``malformed:...``
-row and parsing continues at the next record (framing is intact); a
-segment whose framing itself breaks (truncation, missing terminator,
-bad header) yields one ``malformed:...`` row for the remainder and
-stops — deterministic either way, quarantine-not-crash like the
-extraction kernel (SURVEY SS2.7 error routing).
+Framing is by ``Content-Length`` (bytes of the UTF-8 payload), walked
+once for every record kind by ``_warc_blocks``, so payloads containing
+``\\r\\n\\r\\n`` or even a literal ``WARC/1.0`` header block round-trip
+exactly. The parsers add only their record-level rules. Malformed
+input never throws mid-job: a record whose payload is not valid UTF-8
+yields one ``malformed:...`` row and parsing continues at the next
+record (framing is intact); a segment whose framing itself breaks
+(truncation, missing terminator, bad header) yields one
+``malformed:...`` row for the remainder and stops — deterministic
+either way, quarantine-not-crash like the extraction kernel (SURVEY
+SS2.7 error routing).
 
 Scale story: the segment is the unit of parallelism (real WET shards
 are ~150 MB — one task each; no shuffle is needed to parse, any
@@ -131,6 +136,67 @@ def pack_wet_segments(pages: DataFrame, n_segments: int = 64) -> DataFrame:
     )
 
 
+def _warc_blocks(payload: bytes) -> Iterator[tuple[int, dict | str, bytes | None]]:
+    """The one WARC/1.0 framing walk behind both parsers: records framed
+    only by their declared ``Content-Length``. Yields ``(pos, headers,
+    block)`` for each intact record, ``pos`` being its byte offset. On
+    WARC-level damage it yields ``(pos, reason, None)`` once and stops,
+    because the framing past that point is gone."""
+    pos, n = 0, len(payload)
+    while pos < n:
+        if not payload.startswith(_VERSION, pos):
+            yield pos, "version", None
+            return
+        hdr_end = payload.find(_HDR_END, pos)
+        if hdr_end < 0:
+            yield pos, "unterminated-header", None
+            return
+        headers: dict[str, str] = {}
+        for line in payload[pos + len(_VERSION) : hdr_end].split(b"\r\n"):
+            name, sep, value = line.partition(b": ")
+            if not sep or not name:
+                yield pos, "header-line", None
+                return
+            try:
+                headers[name.decode("ascii")] = value.decode("utf-8")
+            except UnicodeDecodeError:
+                yield pos, "header-encoding", None
+                return
+        clen_s = headers.get("Content-Length")
+        if clen_s is None or not _ascii_digits(clen_s):
+            yield pos, "content-length", None
+            return
+        block_start = hdr_end + len(_HDR_END)
+        block_end = block_start + int(clen_s)
+        # a slice past the end is short, so this also catches truncation
+        if payload[block_end : block_end + len(_REC_END)] != _REC_END:
+            yield pos, "framing", None
+            return
+        yield pos, headers, payload[block_start:block_end]
+        pos = block_end + len(_REC_END)
+
+
+def _columns(schema: str) -> list[str]:
+    """Column names of a DDL schema string, in order."""
+    return [field.split()[0] for field in schema.split(", ")]
+
+
+def _parse_kernel(parse, columns: list[str]):
+    """The ``mapInPandas`` body shared by every segment parser: each
+    ``(seg, payload)`` row of a batch becomes the rows ``parse`` returns
+    for its payload, tagged with ``seg``."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for seg, payload in zip(pdf["seg"].to_numpy(), pdf["payload"].to_numpy()):
+                for rec in parse(bytes(payload)):
+                    rows.append({"seg": seg, **rec})
+            yield pd.DataFrame(rows, columns=columns)
+
+    return kernel
+
+
 def parse_wet_bytes(payload: bytes) -> list[dict]:
     """Pure byte-level WET parser — the spec the Spark kernel runs.
 
@@ -149,48 +215,15 @@ def parse_wet_bytes(payload: bytes) -> list[dict]:
         }
 
     out: list[dict] = []
-    pos, n = 0, len(payload)
-    while pos < n:
-        if not payload.startswith(_VERSION, pos):
-            out.append(bad("version", pos))
-            break
-        hdr_end = payload.find(_HDR_END, pos)
-        if hdr_end < 0:
-            out.append(bad("unterminated-header", pos))
-            break
-        headers: dict[str, str] = {}
-        ok_hdr = True
-        for line in payload[pos + len(_VERSION) : hdr_end].split(b"\r\n"):
-            name, sep, value = line.partition(b": ")
-            if not sep or not name:
-                out.append(bad("header-line", pos))
-                ok_hdr = False
-                break
-            try:
-                headers[name.decode("ascii")] = value.decode("utf-8")
-            except UnicodeDecodeError:
-                out.append(bad("header-encoding", pos))
-                ok_hdr = False
-                break
-        if not ok_hdr:
-            break
-        clen_s = headers.get("Content-Length")
-        if clen_s is None or not _ascii_digits(clen_s):
-            out.append(bad("content-length", pos))
-            break
-        body_start = hdr_end + len(_HDR_END)
-        body_end = body_start + int(clen_s)
-        if body_end + len(_REC_END) > n or payload[body_end : body_end + len(_REC_END)] != _REC_END:
-            out.append(bad("framing", pos))
-            break
-        body = payload[body_start:body_end]
-        next_pos = body_end + len(_REC_END)
+    for pos, headers, body in _warc_blocks(payload):
+        if body is None:
+            out.append(bad(headers, pos))
+            continue
         try:
             text = body.decode("utf-8")
         except UnicodeDecodeError:
             # framing is intact: quarantine this record, keep parsing
             out.append(bad("payload-encoding", pos))
-            pos = next_pos
             continue
         out.append(
             {
@@ -201,20 +234,7 @@ def parse_wet_bytes(payload: bytes) -> list[dict]:
                 "status": "ok",
             }
         )
-        pos = next_pos
     return out
-
-
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for seg, payload in zip(pdf["seg"].to_numpy(), pdf["payload"].to_numpy()):
-            for rec in parse_wet_bytes(bytes(payload)):
-                rows.append({"seg": seg, **rec})
-        yield pd.DataFrame(
-            rows,
-            columns=["seg", "url", "warc_date", "text", "n_bytes", "status"],
-        )
 
 
 def parse_wet_segments(segments: DataFrame) -> DataFrame:
@@ -223,7 +243,9 @@ def parse_wet_segments(segments: DataFrame) -> DataFrame:
     No shuffle: segments are self-contained, so the kernel parses
     whatever partitioning the scan produced.
     """
-    return segments.select("seg", "payload").mapInPandas(_parse_batches, schema=PARSED_SCHEMA)
+    return segments.select("seg", "payload").mapInPandas(
+        _parse_kernel(parse_wet_bytes, _columns(PARSED_SCHEMA)), schema=PARSED_SCHEMA
+    )
 
 
 def wet_to_documents(parsed: DataFrame) -> DataFrame:
@@ -314,50 +336,19 @@ def warc_response_record_col(
 
 def pack_warc_segments(pages: DataFrame, n_segments: int = 64) -> DataFrame:
     """pages(url, warc_date, status, reason, content_type, body) ->
-    (seg, payload binary, n_records).
-
-    Same shape as pack_wet_segments, with one twist: records are BINARY
-    and Spark's array_join is string-only, so each record crosses the
-    segment aggregation hex-encoded and the joined string un-hexes back
-    to bytes (hex(a)||hex(b) unhexes to a||b exactly — unlike base64,
-    whose padding breaks under concatenation). One hash shuffle on the
-    segment key; records sort by url so the blob is a pure function of
-    the input set."""
-    if n_segments < 1:
-        raise ValueError(f"n_segments must be >= 1, got {n_segments}")
-    # a NULL body would null the whole concat and array_join would then
-    # DROP the record silently while n_records still counted it — fail
-    # loud at pack time instead (the caller routes null-body rows to
-    # quarantine before packing)
-    body = F.when(
-        F.col("body").isNotNull(), F.col("body")
-    ).otherwise(
-        F.raise_error(F.concat(F.lit("pack_warc_segments: NULL body for "), F.col("url")))
-    )
+    (seg, payload binary, n_records): response records through
+    ``pack_record_segments``. A NULL body nulls the whole record, which
+    the packer rejects (the caller routes null-body rows to quarantine
+    before packing)."""
     rec = warc_response_record_col(
         F.col("url"),
         F.col("warc_date"),
         F.col("status"),
         F.col("reason"),
         F.col("content_type"),
-        body,
+        F.col("body"),
     )
-    return (
-        pages.select(
-            F.pmod(F.xxhash64("url"), F.lit(n_segments)).alias("seg"),
-            F.col("url"),
-            F.hex(rec).alias("rech"),
-        )
-        .groupBy("seg")
-        .agg(F.array_sort(F.collect_list(F.struct("url", "rech"))).alias("recs"))
-        .select(
-            "seg",
-            F.unhex(
-                F.array_join(F.transform("recs", lambda r: r["rech"]), "")
-            ).alias("payload"),
-            F.size("recs").cast("int").alias("n_records"),
-        )
-    )
+    return pack_record_segments(pages.select("url", rec.alias("rec")), n_segments)
 
 
 def parse_warc_records(payload: bytes) -> list[dict]:
@@ -402,70 +393,31 @@ def parse_warc_records(payload: bytes) -> list[dict]:
         }
 
     out: list[dict] = []
-    pos, n = 0, len(payload)
-    while pos < n:
-        if not payload.startswith(_VERSION, pos):
-            out.append(bad("version", pos))
-            break
-        hdr_end = payload.find(_HDR_END, pos)
-        if hdr_end < 0:
-            out.append(bad("unterminated-header", pos))
-            break
-        headers: dict[str, str] = {}
-        ok_hdr = True
-        for line in payload[pos + len(_VERSION) : hdr_end].split(b"\r\n"):
-            name, sep, value = line.partition(b": ")
-            if not sep or not name:
-                out.append(bad("header-line", pos))
-                ok_hdr = False
-                break
-            try:
-                headers[name.decode("ascii")] = value.decode("utf-8")
-            except UnicodeDecodeError:
-                out.append(bad("header-encoding", pos))
-                ok_hdr = False
-                break
-        if not ok_hdr:
-            break
-        clen_s = headers.get("Content-Length")
-        if clen_s is None or not _ascii_digits(clen_s):
-            out.append(bad("content-length", pos))
-            break
-        block_start = hdr_end + len(_HDR_END)
-        block_end = block_start + int(clen_s)
-        if (
-            block_end + len(_REC_END) > n
-            or payload[block_end : block_end + len(_REC_END)] != _REC_END
-        ):
-            out.append(bad("framing", pos))
-            break
-        next_pos = block_end + len(_REC_END)
+    for pos, headers, block in _warc_blocks(payload):
+        if block is None:
+            out.append(bad(headers, pos))
+            continue
         rec_type = headers.get("WARC-Type")
         if rec_type not in ("response", "revisit"):
             # an intact record of another type (request, metadata):
             # skip it silently, the framing already consumed it
-            pos = next_pos
             continue
         if not _valid_warc_date(headers.get("WARC-Date")):
             # record-level damage with intact framing: quarantine this
             # record and continue (same class as HTTP-level damage) — a
             # hostile date must never reach the Spark-side to_timestamp
             out.append(bad("warc-date", pos, rec_type))
-            pos = next_pos
             continue
-        block = payload[block_start:block_end]
         # ---- HTTP block: status line + headers + \r\n\r\n + body ----
         http_hdr_end = block.find(_HDR_END)
         if http_hdr_end < 0:
             out.append(bad("http-unterminated", pos, rec_type))
-            pos = next_pos
             continue
         lines = block[:http_hdr_end].split(b"\r\n")
         parts = lines[0].split(b" ", 2)
         if (len(parts) < 2 or not parts[0].startswith(b"HTTP/")
                 or not _ascii_digits(parts[1].decode("ascii", "replace"))):
             out.append(bad("http-status-line", pos, rec_type))
-            pos = next_pos
             continue
         http_status = int(parts[1])
         http_headers: dict[str, str] = {}
@@ -483,7 +435,6 @@ def parse_warc_records(payload: bytes) -> list[dict]:
                 # a revisit without its digest can never resolve —
                 # quarantine it (same intact-framing class)
                 out.append(bad("revisit-digest", pos, rec_type))
-                pos = next_pos
                 continue
             refers_date = headers.get("WARC-Refers-To-Date")
             out.append(
@@ -503,13 +454,11 @@ def parse_warc_records(payload: bytes) -> list[dict]:
                     "status": "ok",
                 }
             )
-            pos = next_pos
             continue
         declared = http_headers.get("content-length")
         if (declared is not None and _ascii_digits(declared)
                 and int(declared) != len(body)):
             out.append(bad("http-length-mismatch", pos, rec_type))
-            pos = next_pos
             continue
         out.append(
             {
@@ -526,7 +475,6 @@ def parse_warc_records(payload: bytes) -> list[dict]:
                 "status": "ok",
             }
         )
-        pos = next_pos
     return out
 
 
@@ -616,11 +564,16 @@ def warc_revisit_record_col(
 
 def pack_record_segments(records: DataFrame, n_segments: int = 64) -> DataFrame:
     """records(url, rec binary) -> (seg, payload binary, n_records):
-    the generic packer behind mixed response+revisit segments. Same
-    hex-join discipline as pack_warc_segments (array_join is
-    string-only; hex concatenation un-hexes to exact byte
-    concatenation), same single hash shuffle on the segment key, same
-    url sort so the blob is a pure function of the input set."""
+    the one binary packer, behind ``pack_warc_segments`` and mixed
+    response+revisit segments.
+
+    Spark's array_join is string-only, so each record crosses the
+    segment aggregation hex-encoded and the joined string un-hexes back
+    to bytes (hex(a)||hex(b) unhexes to a||b exactly — unlike base64,
+    whose padding breaks under concatenation). One hash shuffle on the
+    segment key; records sort by url so the blob is a pure function of
+    the input set. A NULL record would be dropped by array_join while
+    n_records still counted it, so it fails the job instead."""
     if n_segments < 1:
         raise ValueError(f"n_segments must be >= 1, got {n_segments}")
     rec = F.when(
@@ -646,26 +599,13 @@ def pack_record_segments(records: DataFrame, n_segments: int = 64) -> DataFrame:
     )
 
 
-def _parse_record_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [
-        "seg", "rec_type", "url", "warc_date", "http_status", "content_type",
-        "body", "n_bytes", "payload_digest", "refers_to_uri", "refers_to_date",
-        "status",
-    ]
-    for pdf in batches:
-        rows = []
-        for seg, payload in zip(pdf["seg"].to_numpy(), pdf["payload"].to_numpy()):
-            for rec in parse_warc_records(bytes(payload)):
-                rows.append({"seg": seg, **rec})
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def parse_warc_record_segments(segments: DataFrame) -> DataFrame:
     """(seg, payload binary) -> one row per response OR revisit record.
     No shuffle: segments are self-contained (same scale shape as
     parse_wet_segments)."""
     return segments.select("seg", "payload").mapInPandas(
-        _parse_record_batches, schema=RECORDS_SCHEMA
+        _parse_kernel(parse_warc_records, _columns(RECORDS_SCHEMA)),
+        schema=RECORDS_SCHEMA,
     )
 
 
@@ -762,27 +702,13 @@ def resolve_revisits(parsed: DataFrame, materialize: bool = True) -> DataFrame:
     return responses.select(out_cols).unionByName(resolved.select(out_cols))
 
 
-def _parse_response_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for seg, payload in zip(pdf["seg"].to_numpy(), pdf["payload"].to_numpy()):
-            for rec in parse_warc_response_bytes(bytes(payload)):
-                rows.append({"seg": seg, **rec})
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "seg", "url", "warc_date", "http_status",
-                "content_type", "body", "n_bytes", "status",
-            ],
-        )
-
-
 def parse_warc_segments(segments: DataFrame) -> DataFrame:
     """(seg, payload binary) -> one row per WARC response record.
     No shuffle: segments are self-contained (same scale shape as
     parse_wet_segments)."""
     return segments.select("seg", "payload").mapInPandas(
-        _parse_response_batches, schema=RESPONSE_SCHEMA
+        _parse_kernel(parse_warc_response_bytes, _columns(RESPONSE_SCHEMA)),
+        schema=RESPONSE_SCHEMA,
     )
 
 

@@ -49,6 +49,7 @@ def main() -> None:
     from ocr_application_spark.pipeline import extract_pages
     from ocr_application_spark.session import get_spark
     from ocr_application_spark.sources.webpages import default_scratch, synth_pages
+    from soak_sf10 import write_replicated_documents
 
     spark = get_spark(
         "soak-sf1",
@@ -100,27 +101,12 @@ def main() -> None:
     # are extraction-shaped, not curation-shaped (measured: the clean
     # gate kills 99.6% of them, leaving later gates nothing to chew on).
     # So the soak corpus is the sanctioned sf0.1 documents table
-    # replicated 100x = 500k rows with a DETERMINISTIC per-replica
-    # perturbation: doc_id re-keyed collision-free, one ' r<rep>' token
-    # appended so exact-dedup sees 500k distinct texts (not a 99% dup
-    # wipe), every other column preserved. No external data, no RNG.
+    # replicated 100x = 500k rows (the soak_sf10 recipe).
     docs_dir = os.path.join(base, "docs")
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 100
     t0 = time.monotonic()
-    sf01 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    rep_dim = spark.range(reps).withColumnRenamed("id", "rep")
-    text2 = F.concat(F.col("text"), F.lit(" r"), F.col("rep").cast("string"))
-    (
-        sf01.crossJoin(F.broadcast(rep_dim))
-        .select(
-            (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-            text2.alias("text"),
-            "lang",
-            "source",
-            F.length(text2).alias("n_chars"),
-        )
-        .repartition(max(32, cpus))
-        .write.parquet(os.path.join(docs_dir, "documents.parquet"))
+    write_replicated_documents(
+        spark, reps, max(32, cpus), os.path.join(docs_dir, "documents.parquet")
     )
     emit(
         {

@@ -17,9 +17,10 @@ chunk_hash column once per ingest). Shuffle partitions grow 4x per
 decade of ``reps`` above 100 (32 at reps=100, 128 at reps=1000) — the
 knob a real cluster would turn.
 
-Publishes wall time + volume per stage to BENCH/soak_sf10.json; the
-pass criterion is zero OOM/retry and time ratios vs the sf1 soak near
-10x (knee found = finding, not failure — document it in PERF.md).
+Prints wall time + volume per stage; only the sf10 run (reps=1000)
+writes them to BENCH/soak_sf10.json. The pass criterion is zero
+OOM/retry and time ratios vs the sf1 soak near 10x (knee found =
+finding, not failure — document it in PERF.md).
 
 Run on an idle box: python scripts/soak_sf10.py [reps]
 """
@@ -35,10 +36,33 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+SF10_REPS = 1000
+
+
+def write_replicated_documents(spark, reps: int, partitions: int, path: str) -> None:
+    """The soak corpus at ``path``: sf0.1 documents ``reps``x, doc_id
+    re-keyed collision-free and ' r<rep>' appended so texts stay distinct."""
+    from pyspark.sql import functions as F
+
+    sf01 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    rep_dim = spark.range(reps).withColumnRenamed("id", "rep")
+    text2 = F.concat(F.col("text"), F.lit(" r"), F.col("rep").cast("string"))
+    (
+        sf01.crossJoin(F.broadcast(rep_dim))
+        .select(
+            (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
+            text2.alias("text"),
+            "lang",
+            "source",
+            F.length(text2).alias("n_chars"),
+        )
+        .repartition(partitions)
+        .write.parquet(path)
+    )
 
 
 def main() -> None:
-    reps = int(sys.argv[1]) if len(sys.argv) > 1 else 1000
+    reps = int(sys.argv[1]) if len(sys.argv) > 1 else SF10_REPS
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     decades = max(0, round(math.log10(reps / 100)))
     partitions = max(32 * 4**decades, cpus)
@@ -64,20 +88,8 @@ def main() -> None:
 
     docs_dir = os.path.join(base, "docs")
     t0 = time.monotonic()
-    sf01 = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    rep_dim = spark.range(reps).withColumnRenamed("id", "rep")
-    text2 = F.concat(F.col("text"), F.lit(" r"), F.col("rep").cast("string"))
-    (
-        sf01.crossJoin(F.broadcast(rep_dim))
-        .select(
-            (F.col("doc_id") * reps + F.col("rep")).alias("doc_id"),
-            text2.alias("text"),
-            "lang",
-            "source",
-            F.length(text2).alias("n_chars"),
-        )
-        .repartition(partitions)
-        .write.parquet(os.path.join(docs_dir, "documents.parquet"))
+    write_replicated_documents(
+        spark, reps, partitions, os.path.join(docs_dir, "documents.parquet")
     )
     n_rows = spark.read.parquet(os.path.join(docs_dir, "documents.parquet")).count()
     emit({"stage": "documents_materialize", "rows": n_rows,
@@ -118,10 +130,11 @@ def main() -> None:
     emit({"stage": "cdc_store_replay", "novel_chunks": int(novel or 0),
           "secs": round(time.monotonic() - t0, 2)})
 
-    out = os.path.join(REPO, "BENCH", "soak_sf10.json")
-    with open(out, "w") as fh:
-        json.dump({"reps": reps, "cpus": cpus, "stages": results}, fh, indent=1)
-    print(f"wrote {out}", flush=True)
+    if reps == SF10_REPS:
+        out = os.path.join(REPO, "BENCH", "soak_sf10.json")
+        with open(out, "w") as fh:
+            json.dump({"reps": reps, "cpus": cpus, "stages": results}, fh, indent=1)
+        print(f"wrote {out}", flush=True)
     shutil.rmtree(base, ignore_errors=True)
     spark.stop()
 

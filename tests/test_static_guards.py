@@ -30,6 +30,11 @@ The ANN-PQ, streaming and curation entry points take no dials either,
 and each repeated step of those families exists once: the ANN training
 sample, the ADC lookup table, the exact re-rank and the exactly-once
 streaming sink.
+
+Each repeated step of the source layer exists once too: the WARC
+framing walk, the segment-parse batch loop and the binary packer of
+``sources/warc.py``; the empty-snapshot frame and the copy-on-write file
+set of ``sources/snapshots.py``.
 """
 
 import ast
@@ -405,3 +410,38 @@ def test_streaming_has_one_exactly_once_sink():
     )
     assert write_streams == 1
     assert _calls(tree, "rmtree") == 1
+
+
+def test_warc_source_has_one_framing_walk_one_kernel_and_one_packer():
+    """``_warc_blocks`` is the only WARC header search, ``_parse_kernel``
+    the only loop over segment payloads, ``pack_record_segments`` the
+    only hex join."""
+    tree = _module("sources/warc.py")
+    header_finds = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call)
+        and _name(n.func) == "find"
+        and getattr(n.func.value, "id", None) == "payload"
+        and n.args
+        and getattr(n.args[0], "id", None) == "_HDR_END"
+    ]
+    assert len(header_finds) == 1
+    assert _calls(tree, "unhex") == 1
+    payload_reads = [
+        n
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Subscript)
+        and getattr(n.value, "id", None) == "pdf"
+        and getattr(n.slice, "value", None) == "payload"
+    ]
+    assert len(payload_reads) == 1
+
+
+def test_snapshots_have_one_empty_frame_and_one_rewrite_set():
+    """The empty-snapshot frame is built in ``_read_files`` only, and the
+    affected-file semi-join of merge and delete lives in
+    ``_rewrite_set`` only."""
+    tree = _module("sources/snapshots.py")
+    assert _calls(tree, "input_file_name") == 1
+    assert _calls(tree, "createDataFrame") == 1

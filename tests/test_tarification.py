@@ -76,3 +76,18 @@ def test_monthly_series(tarified):
         "2023-02-01": pytest.approx(3 * 2.80),
         "2023-03-01": pytest.approx(0.0),
     }
+
+
+def test_tarification_pipeline_keeps_one_cached_match_set(spark):
+    """Each call persists its match-set in one ``bounded_cache`` slot,
+    which frees the previous call's copy: repeated calls leave the
+    persisted-RDD count flat after the first."""
+    from ocr_application_spark.operators.tarification_entry import tarification_pipeline
+
+    jsc = spark.sparkContext._jsc
+    rows, persisted = [], []
+    for _ in range(3):
+        rows.append(tarification_pipeline(spark, "/root/testdata/sf0.001").collect())
+        persisted.append(jsc.getPersistentRDDs().size())
+    assert persisted[1:] == [persisted[0]] * 2, persisted
+    assert rows[0] == rows[1] == rows[2]

@@ -517,3 +517,64 @@ def test_pack_record_segments_rejects_null_record(spark):
     ).selectExpr("url", "cast(rec as binary) as rec")
     with _pytest.raises(Exception, match="NULL record"):
         pack_record_segments(df, n_segments=1).collect()
+
+
+def test_pack_warc_segments_rejects_null_body(spark):
+    import pandas as pd
+
+    pages = spark.createDataFrame(
+        pd.DataFrame(
+            [("https://a", "2024-01-01T00:00:00Z", 200, "OK", "text/html", None)],
+            columns=["url", "warc_date", "status", "reason", "content_type", "body"],
+        )
+    ).selectExpr("url", "warc_date", "status", "reason", "content_type",
+                 "cast(body as binary) as body")
+    with pytest.raises(Exception, match="NULL"):
+        pack_warc_segments(pages, n_segments=1).collect()
+
+
+# --- truncation property: every cut point of a 3-record segment ---------------
+import re  # noqa: E402
+
+_WALK_REASONS = ("version", "unterminated-header", "header-line",
+                 "header-encoding", "content-length", "framing")
+_SEGMENT_RECORDS = {
+    "wet": (
+        parse_wet_bytes,
+        [_record("https://a", b"first"),
+         _record("https://b", "z\r\n\r\nWARC/1.0\r\n café".encode()),
+         _record("https://c", b"")],
+    ),
+    "warc": (
+        parse_warc_records,
+        [_resp_record(b"https://a", b"2024-01-01T00:00:00Z", b"x\r\n\r\nWARC/1.0"),
+         _revisit_record(b"https://b", b"2024-02-01T00:00:00Z", _sha(b"h").encode()),
+         _resp_record(b"https://c", b"2024-03-01T00:00:00Z", b"")],
+    ),
+}
+
+
+@pytest.mark.parametrize("fmt", sorted(_SEGMENT_RECORDS))
+def test_every_cut_point_keeps_the_intact_prefix_and_one_malformed_row(fmt):
+    """Cutting a segment anywhere inside record i yields the rows of
+    records 0..i-1 unchanged, then exactly one walk-level malformed row
+    tagged with record i's start offset; a cut on a record boundary
+    yields the prefix rows only."""
+    parse, records = _SEGMENT_RECORDS[fmt]
+    payload = b"".join(records)
+    full = parse(payload)
+    assert [r["status"] for r in full] == ["ok"] * 3
+    starts = [sum(map(len, records[:i])) for i in range(len(records) + 1)]
+    for cut in range(len(payload) + 1):
+        i = max(j for j, s in enumerate(starts) if s <= cut)
+        out = parse(payload[:cut])
+        assert out[:i] == full[:i], cut
+        if cut == starts[i]:
+            assert len(out) == i, cut
+            continue
+        assert len(out) == i + 1, cut
+        m = re.fullmatch(r"malformed:([a-z-]+)@(\d+)", out[i]["status"])
+        assert m and m.group(1) in _WALK_REASONS, (cut, out[i]["status"])
+        assert int(m.group(2)) == starts[i], cut
+        if fmt == "warc":
+            assert out[i]["rec_type"] is None, cut
