@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: wrap the sf0.001 documents table into web pages, run the
-    full extraction pipeline (bucket -> mapInPandas extract -> classify),
+    full extraction pipeline (bucket -> fused mapInPandas extract + classify),
     return (url, doc_class, method, status, n_chars, digest)."""
     from ocr_application_spark.datagen.docwrap import documents_as_pages
     from ocr_application_spark.pipeline import extract_pages

@@ -6,14 +6,19 @@ DataFrame transforms::
     from ocr_application_spark import api
 
     pages      = api.read_pages(spark, path)        # S1/S7
-    extracted  = api.extract(pages)                 # K2+K6+K7+K8 fused
-    classified = api.recognize(extracted)           # K1
+    extracted  = api.extract(pages)                 # K1+K2+K6+K7+K8 fused
+    classified = api.recognize(extracted)           # K1: already in extract
     spans      = api.segment(pages)                 # K7 span records
     fields     = api.structure(spans)               # K9 (deterministic)
     tarifs     = api.tarify(lines, catalog)         # J1+A1-A4
     fc         = api.forecast_linear(spark, sf_dir) # A7
     lin        = api.lineage(extracted)             # A5
     bad        = api.verify(extracted, reference)   # digest equi-join
+
+``extract`` is ONE Arrow-batched kernel that extracts and classifies
+each batch (doc_class, confidence ride in its output), so ``recognize``
+returns its input unchanged; it stays for callers written against the
+separate-stage chain of the reference.
 
 Incremental recrawl ingest (each O(increment); the corpus is never
 re-processed)::

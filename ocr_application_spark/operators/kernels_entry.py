@@ -321,14 +321,13 @@ def classify_docwrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-way routing on the synthetic labeled mix but is rows-only, since
     synth_pages can't be regenerated in SQL)."""
     from ocr_application_spark.datagen.docwrap import documents_as_pages
-    from ocr_application_spark.kernels.classify import classify
     from ocr_application_spark.kernels.extract import extract
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = classify(extract(documents_as_pages(docs)))
-    # deliberately NO confidence column here: the two engines compute
-    # the softmax through genuinely different float op orders (BLAS
-    # matmul + SIMD exp vs scalar left-assoc + libm), so any quantized
+    out = extract(documents_as_pages(docs))  # the kernel classifies its batch
+    # deliberately NO confidence column here: the logits sum in the
+    # SQL twin's order, but the softmax does not (numpy's SIMD exp and
+    # row normalisation vs libm exp in SQL), so any quantized
     # confidence comparison retains a rounding-boundary straddle risk —
     # the repo invariant forbids comparing floats whose computation
     # differs between engines. The route (argmax of those same logits,

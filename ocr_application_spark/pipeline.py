@@ -1,11 +1,12 @@
 """End-to-end extraction pipeline — the engine's flagship path.
 
-``read pages -> bucket by url-hash -> [resume anti-join] -> extract
-(fused mapInPandas kernel) -> classify -> write per-bucket parquet +
+``read pages -> bucket by url-hash -> [resume filter] -> extract +
+classify (ONE fused mapInPandas kernel) -> write per-bucket parquet +
 lineage rows`` — the Spark realization of the reference's
 recognize→classify→extract Kafka chain (OrchesttrationScript.py:33-39),
-with the broker hops replaced by narrow stages Catalyst fuses into one
-WholeStageCodegen+ArrowEval span per bucket.
+with the broker hops replaced by one Python crossing per Arrow batch:
+the kernel classifies the batch it has just extracted, so no
+ArrowEvalPython stage re-ships features to Python.
 
 Scale notes (100 TB / 10^12 rows):
 * the only wide operation before the sink is the optional
@@ -28,17 +29,17 @@ Scale notes (100 TB / 10^12 rows):
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ocr_application_spark.kernels.classify import classify
 from ocr_application_spark.kernels.extract import extract, quarantine_split
 from ocr_application_spark.lineage import bucket_lineage, resume_filter, write_lineage
 from ocr_application_spark.sources.webpages import with_bucket
 
 
 def extract_pages(pages: DataFrame, n_buckets: int = 64) -> DataFrame:
-    """Bucket + extract + classify; lazy, no action triggered."""
-    bucketed = with_bucket(pages, n_buckets)
-    return classify(extract(bucketed))
+    """Bucket + the fused extract/classify kernel; lazy, no action
+    triggered."""
+    return extract(with_bucket(pages, n_buckets))
 
 
 # S5 analog: the reference caps messages at 10MB with a warn at 90%
@@ -50,13 +51,11 @@ def oversize_guard(extracted: DataFrame, max_bytes: int = MAX_TEXT_BYTES) -> Dat
     """Route oversized rows to quarantine instead of failing the write —
     batch analog of the reference's produce-size guard (S5). Adds an
     ``oversize`` flag; quarantine_split moves flagged rows aside."""
-    from pyspark.sql import functions as F2
-
     return extracted.withColumn(
         "status",
-        F2.when(
-            F2.octet_length("extracted_text") > max_bytes, F2.lit("error:oversize")
-        ).otherwise(F2.col("status")),
+        F.when(
+            F.octet_length("extracted_text") > max_bytes, F.lit("error:oversize")
+        ).otherwise(F.col("status")),
     )
 
 
@@ -83,7 +82,7 @@ def run_to_table(
     bucketed = with_bucket(pages, n_buckets)
     if resume:
         bucketed = resume_filter(bucketed, spark, lineage_path)
-    extracted = oversize_guard(classify(extract(bucketed)))
+    extracted = oversize_guard(extract(bucketed))
     # one kernel execution feeds three sinks (ok / quarantine / lineage);
     # without the persist the mapInPandas extraction DAG would re-run per
     # action. MEMORY_AND_DISK: spills, never recomputes.
@@ -104,17 +103,20 @@ def run_to_table(
             .partitionBy(*part_cols)
             .parquet(out_path)
         )
-        if bad.limit(1).count() > 0:  # quarantine table — no data loss
+        # localCheckpoint materializes the (tiny, one-row-per-bucket)
+        # lineage BEFORE the unpersist below, so caller actions on the
+        # returned DataFrame can't re-trigger the extraction DAG
+        lin = bucket_lineage(extracted).localCheckpoint()
+        # quarantine table — no data loss. Its rows are exactly the
+        # buckets' rows_in - rows_out, so the checkpointed lineage says
+        # whether there are any without another pass over ``extracted``
+        if lin.filter(F.col("rows_in") != F.col("rows_out")).take(1):
             (
                 bad.write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
                 .partitionBy("bucket")
                 .parquet(quarantine_path or out_path + "_quarantine")
             )
-        # localCheckpoint materializes the (tiny, one-row-per-bucket)
-        # lineage BEFORE the unpersist below, so caller actions on the
-        # returned DataFrame can't re-trigger the extraction DAG
-        lin = bucket_lineage(extracted).localCheckpoint()
         write_lineage(lin, lineage_path)
         return lin
     finally:

@@ -68,8 +68,6 @@ def get_spark(
         # 2048 on ~3KB pages (fewer per-batch handshakes); at production
         # page sizes (~100KB html) size this by bytes: rows ≈ 256MB/page_sz
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "8192")
-        # Arrow-optimized scalar Python UDFs (classify stage): +10%
-        .config("spark.sql.execution.pythonUDF.arrow.enabled", "true")
         # 128m scan splits: good balance for wide binary 'html' columns
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 from collections.abc import Iterator
+from pathlib import Path
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -138,4 +139,7 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
 
 
 def default_scratch() -> str:
-    return os.environ.get("SPARK_GRAFT_SCRATCH", "/root/repo/.scratch")
+    """``$SPARK_GRAFT_SCRATCH``, else ``.scratch/`` in this checkout."""
+    return os.environ.get(
+        "SPARK_GRAFT_SCRATCH", str(Path(__file__).resolve().parents[2] / ".scratch")
+    )

@@ -106,6 +106,61 @@ def test_classifier_confidence_is_softmax(spark):
     assert all(0.25 < r.confidence <= 1.0 for r in rows)
 
 
+def test_confidence_bits_do_not_depend_on_the_batch(spark):
+    """A row's (doc_class, confidence) has the same bits whether the
+    model sees the row alone (an eager 1-row ``classify_batch``), in
+    64-row Arrow batches, or in the default batches of the fused kernel:
+    the logits are a fixed-order sum, not a matmul whose BLAS path
+    depends on the batch shape."""
+    import numpy as np
+
+    from ocr_application_spark.kernels.classify import _W, classify_batch
+
+    pages = synth_pages(spark, 2000)
+
+    def routes():
+        rows = extract_pages(pages).select("url", "doc_class", "confidence").collect()
+        return {r.url: (r.doc_class, r.confidence.hex()) for r in rows}
+
+    default = routes()
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "64")
+    try:
+        small = routes()
+    finally:
+        spark.conf.set(key, old)
+    eager = {}
+    for r in extract_pages(pages).select("url", "method", "features").collect():
+        cls, conf = classify_batch(
+            np.array([r.features], dtype=np.float64), np.array([r.method], dtype=object), _W
+        )
+        eager[r.url] = (cls[0], float(conf[0]).hex())
+    assert len(default) == 2000
+    assert default == small
+    assert default == eager
+
+
+def test_all_success_run_writes_no_quarantine_and_lineage_reconciles(spark, tmpdir_scratch):
+    """Every synth page extracts: no quarantine directory is created (the
+    sink decides from the lineage rows), and the lineage returned and the
+    lineage persisted both account for every page."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from ocr_application_spark.pipeline import run_to_table
+
+    out, lin_path = tmpdir_scratch + "/out", tmpdir_scratch + "/lin"
+    lin = run_to_table(synth_pages(spark, 200), spark, out, lin_path, n_buckets=4)
+    assert not os.path.exists(out + "_quarantine")
+    written = spark.read.parquet(out).count()
+    assert written == 200
+    for frame in (lin, spark.read.parquet(lin_path)):
+        row = frame.agg(F.count("*"), F.sum("rows_in"), F.sum("rows_out")).first()
+        assert tuple(row) == (4, written, written)
+
+
 def test_quarantine_routes_to_explicit_path(spark, tmpdir_scratch, monkeypatch):
     """S5 oversize guard -> quarantine table, with quarantine_path
     override landing OUTSIDE the output root (no data loss: out + q
@@ -130,6 +185,10 @@ def test_quarantine_routes_to_explicit_path(spark, tmpdir_scratch, monkeypatch):
     q = spark.read.parquet(tmpdir_scratch + "/q")
     assert q.count() > 0
     assert out_n + q.count() == 60
+    # lineage reconciles: rows_in = written + quarantined
+    lin = spark.read.parquet(tmpdir_scratch + "/lin")
+    row = lin.selectExpr("sum(rows_in)", "sum(rows_out)").first()
+    assert tuple(row) == (60, out_n)
     assert set(q.select("status").distinct().toPandas()["status"]) == {"error:oversize"}
     assert not os.path.exists(tmpdir_scratch + "/out_quarantine")
 

@@ -96,6 +96,34 @@ def test_extract_stage_is_shuffle_free(spark):
     assert "Exchange" not in plan, plan
 
 
+def test_run_to_table_extraction_crosses_into_python_once(
+    spark, tmpdir_scratch, monkeypatch
+):
+    # the frame run_to_table persists and sinks: one MapInPandas (the
+    # fused extract + classify kernel) and no (Arrow)EvalPython stage
+    import ocr_application_spark.pipeline as pl
+    from ocr_application_spark.sources.webpages import read_pages, synth_pages, write_pages
+
+    write_pages(synth_pages(spark, 40), tmpdir_scratch + "/pages", n_buckets=4)
+    split, seen = pl.quarantine_split, []
+
+    def spy(extracted):
+        seen.append(extracted)
+        return split(extracted)
+
+    monkeypatch.setattr(pl, "quarantine_split", spy)
+    pl.run_to_table(
+        read_pages(spark, tmpdir_scratch + "/pages"), spark,
+        tmpdir_scratch + "/out", tmpdir_scratch + "/lin", n_buckets=4,
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        seen[0].explain("formatted")
+    plan = buf.getvalue()
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1, plan
+    assert "EvalPython" not in plan, plan
+
+
 def test_whole_stage_codegen_in_relational_queries(spark):
     # AQE finalizes the physical plan at execution; the `*(n)` prefixes in
     # the executed plan are the whole-stage-codegen stage markers
@@ -130,12 +158,12 @@ def test_frame_sample_is_shuffle_free(spark):
 
 
 def test_classify_docwrap_is_shuffle_free_single_infer(spark):
-    # scan -> wrap (MapInPandas) -> extract (MapInPandas) -> ONE
-    # ArrowEvalPython for the classifier (struct fields projected from
-    # pythonUDF0, not re-invoking the model) -> project; no shuffle
+    # scan -> wrap (MapInPandas) -> extract + classify (ONE fused
+    # MapInPandas: the kernel classifies the batch it extracts) ->
+    # project; no ArrowEvalPython round trip, no shuffle
     plan = plan_of(spark, "classify_docwrap")
     assert "Exchange" not in plan, plan
-    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 1, plan
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 0, plan
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 2, plan
     m = re.search(r"ReadSchema: ([^\n]*)", plan)
     assert m and set(re.findall(r"(\w+):", m.group(1))) <= {

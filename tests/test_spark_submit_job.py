@@ -5,15 +5,20 @@ synth batch and snapshot-incremental with its version watermark."""
 import json
 import os
 import subprocess
+from pathlib import Path
 
 import pytest
+
+# the checkout these tests belong to: a copy of the tree packages and
+# submits its own code, never another checkout's
+ROOT = str(Path(__file__).resolve().parents[1])
 
 _SPARK_SUBMIT = os.path.join(
     os.path.dirname(os.__file__), "site-packages", "pyspark", "bin", "spark-submit"
 )
 
 
-def _submit(args, cwd="/root/repo"):
+def _submit(args, cwd=ROOT):
     r = subprocess.run(
         [
             _SPARK_SUBMIT,
@@ -37,7 +42,7 @@ def _submit(args, cwd="/root/repo"):
 def test_spark_submit_synth_and_incremental(spark, tmpdir_scratch):
     if not os.path.exists(_SPARK_SUBMIT):
         pytest.skip("spark-submit binary not found")
-    subprocess.run(["bash", "scripts/package.sh"], cwd="/root/repo", check=True)
+    subprocess.run(["bash", "scripts/package.sh"], cwd=ROOT, check=True)
 
     # mode 1: synth batch
     out = _submit(
@@ -112,7 +117,7 @@ def test_spark_submit_synth_and_incremental(spark, tmpdir_scratch):
             "--py-files", "dist/ocr_application_spark.zip",
             "jobs/extract_job.py", *inc_args,
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+        capture_output=True, text=True, cwd=ROOT, timeout=420,
     )
     assert r.returncode != 0
     assert "--rebaseline 5" in (r.stdout + r.stderr)
@@ -145,7 +150,7 @@ def test_spark_submit_curate_job(spark, tmpdir_scratch):
     output must be split-partitioned with scrubbed text."""
     if not os.path.exists(_SPARK_SUBMIT):
         pytest.skip("spark-submit binary not found")
-    subprocess.run(["bash", "scripts/package.sh"], cwd="/root/repo", check=True)
+    subprocess.run(["bash", "scripts/package.sh"], cwd=ROOT, check=True)
     r = subprocess.run(
         [
             _SPARK_SUBMIT, "--master", "local[4]",
@@ -154,7 +159,7 @@ def test_spark_submit_curate_job(spark, tmpdir_scratch):
             "--input", "/root/testdata/sf0.001",
             "--output", tmpdir_scratch + "/curated",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+        capture_output=True, text=True, cwd=ROOT, timeout=420,
     )
     assert r.returncode == 0, r.stderr[-3000:]
     lines = [json.loads(l) for l in r.stdout.splitlines()
@@ -410,7 +415,7 @@ def test_spark_submit_ingest_job(spark, tmpdir_scratch):
     check the JSON metrics line and the verdict output."""
     if not os.path.exists(_SPARK_SUBMIT):
         pytest.skip("spark-submit binary not found")
-    subprocess.run(["bash", "scripts/package.sh"], cwd="/root/repo", check=True)
+    subprocess.run(["bash", "scripts/package.sh"], cwd=ROOT, check=True)
 
     src = tmpdir_scratch + "/ingest_src"
     schema = "doc_id bigint, text string, lang string, source string, n_chars bigint"
@@ -444,7 +449,7 @@ def test_spark_submit_ingest_job(spark, tmpdir_scratch):
         ],
         capture_output=True,
         text=True,
-        cwd="/root/repo",
+        cwd=ROOT,
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-3000:]
@@ -469,7 +474,7 @@ def test_spark_submit_warc_input_mode(spark, tmpdir_scratch):
     quarantine table from the same parse pass."""
     if not os.path.exists(_SPARK_SUBMIT):
         pytest.skip("spark-submit binary not found")
-    subprocess.run(["bash", "scripts/package.sh"], cwd="/root/repo", check=True)
+    subprocess.run(["bash", "scripts/package.sh"], cwd=ROOT, check=True)
 
     import pandas as pd
     from pyspark.sql import functions as F
@@ -531,7 +536,7 @@ def test_spark_submit_export_job(spark, tmpdir_scratch):
     read of the written shards, budget is honored in expectation."""
     if not os.path.exists(_SPARK_SUBMIT):
         pytest.skip("spark-submit binary not found")
-    subprocess.run(["bash", "scripts/package.sh"], cwd="/root/repo", check=True)
+    subprocess.run(["bash", "scripts/package.sh"], cwd=ROOT, check=True)
     out = tmpdir_scratch + "/exported"
     r = subprocess.run(
         [
@@ -543,7 +548,7 @@ def test_spark_submit_export_job(spark, tmpdir_scratch):
             "--shards", "4", "--seq-len", "256",
             "--token-budget", "15000",
         ],
-        capture_output=True, text=True, cwd="/root/repo", timeout=420,
+        capture_output=True, text=True, cwd=ROOT, timeout=420,
     )
     assert r.returncode == 0, r.stderr[-3000:]
     summary = json.loads(

@@ -35,6 +35,10 @@ Each repeated step of the source layer exists once too: the WARC
 framing walk, the segment-parse batch loop and the binary packer of
 ``sources/warc.py``; the empty-snapshot frame and the copy-on-write file
 set of ``sources/snapshots.py``.
+
+The tree under test is the tree that gets tested: no package, job,
+script or test file holds an absolute path into a checkout, so a copy of
+the tree packages, submits and stages its data in itself.
 """
 
 import ast
@@ -45,7 +49,8 @@ import re
 
 import pytest
 
-PKG = pathlib.Path(__file__).resolve().parents[1] / "ocr_application_spark"
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+PKG = ROOT / "ocr_application_spark"
 _SUBSTR = {"substring", "substr"}
 _LAMBDA_HOFS = {"transform", "filter", "exists", "forall", "aggregate"}
 
@@ -445,3 +450,36 @@ def test_snapshots_have_one_empty_frame_and_one_rewrite_set():
     tree = _module("sources/snapshots.py")
     assert _calls(tree, "input_file_name") == 1
     assert _calls(tree, "createDataFrame") == 1
+
+
+def _checkout_paths(text: str, root: pathlib.Path) -> list[str]:
+    """Quoted absolute paths into ``root``: the root itself, or any path
+    with a component named like the checkout directory (so a copy of the
+    tree still flags paths into the checkout it was copied from)."""
+    name = re.escape(root.name)
+    pat = rf"""["'](?:{re.escape(str(root))}|/(?:[^"'/\s]+/)*{name})(?:/[^"'\s]*)?["']"""
+    return re.findall(pat, text)
+
+
+def test_detector_flags_absolute_checkout_paths():
+    root = pathlib.Path("/srv/work/tree")
+    flagged = 'cwd="/srv/work/tree"\nx = "/home/u/tree/.scratch"\n'
+    clean = 'x = Path(__file__).parents[1] / "tree"\nd = "/data/trees/sf0.001"\n'
+    assert len(_checkout_paths(flagged, root)) == 2
+    assert _checkout_paths(clean, root) == []
+
+
+def test_no_absolute_checkout_paths():
+    files = [
+        f
+        for d in ("ocr_application_spark", "jobs", "scripts", "tests")
+        for f in sorted((ROOT / d).rglob("*"))
+        if f.suffix in (".py", ".sh")
+    ]
+    assert len(files) > 100
+    bad = {
+        str(f.relative_to(ROOT)): hits
+        for f in files
+        if (hits := _checkout_paths(f.read_text(), ROOT))
+    }
+    assert not bad, bad
